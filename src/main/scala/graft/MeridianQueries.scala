@@ -499,9 +499,12 @@ object MeridianQueries {
 
   /** Pick the 6 documents whose word-trigram sets jointly cover the most
     * of the corpus ([[graft.ext.MaxCoverage.greedySelect]]) — the
-    * coverage-based data-selection primitive. The oracle unrolls the six
-    * greedy rounds as MATERIALIZED CTEs (anti-join gains, LIMIT-1 argmax
-    * with the same ties-to-smallest-id order, set-union coverage).
+    * coverage-based data-selection primitive. Spark builds the
+    * per-candidate feature sets with one exchange and one checkpoint, then
+    * runs each round as two narrow jobs against the broadcast covered set.
+    * The oracle unrolls the six greedy rounds as MATERIALIZED CTEs
+    * (anti-join gains, LIMIT-1 argmax with the same ties-to-smallest-id
+    * order, set-union coverage).
     */
   def qMaxCoverage(spark: SparkSession, dir: String): DataFrame = {
     val items = Tables.documents(spark, dir)

@@ -107,7 +107,7 @@ object BpeTrain {
 
   /** Driver-side merge loop for gate-sized vocabularies: zero Spark jobs
     * per merge. Argmax and rewrite semantics are shared with the
-    * distributed path (see [[LocalTrainMaxVocab]]).
+    * distributed path (see [[LocalTrainMaxSymbols]]).
     */
   private[ext] def trainLocal(rows: Array[VocabRow],
                               nMerges: Int): Seq[Merge] = {
