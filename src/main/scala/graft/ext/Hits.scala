@@ -52,7 +52,8 @@ object Hits {
     // the copies ADDED ~0.6 s at the sf0.1 tier's ~1M edges, where every
     // edge shuffle is milliseconds). The count is one fast job over the
     // already-materialized checkpoint blocks.
-    val useCopies = e.count() >= PartitionedCopyMinEdges
+    val nEdges = e.count()
+    val useCopies = nEdges >= PartitionedCopyMinEdges
     val eSrc = if (useCopies) e.repartition(col("src")).localCheckpoint() else e
     val eDst = if (useCopies) e.repartition(col("dst")).localCheckpoint() else e
     // Below the copy gate, hint the NODE-SIZED score table broadcast into
@@ -60,10 +61,12 @@ object Hits {
     // whose LogicalRDD carries the original edge-join-sized estimate, so
     // the planner sort-merged and re-shuffled the EDGE table by src/dst
     // every gather (the r17 Mis JobProbe finding; here ~4 × |E| records
-    // per run at sf0.1). Scores are ≤ distinct src/dst ≤ |E| < 5M rows
-    // under the gate; above it the partitioned copies make the score
-    // shuffle the designed cheap path, so no hint is forced there.
-    val bcast: DataFrame => DataFrame = if (useCopies) identity else broadcast
+    // per run at sf0.1). Scores are ≤ distinct src/dst ≤ |E|, so the edge
+    // count bounds the score table for BroadcastGate's row gate; above the
+    // copy gate the partitioned copies make the score shuffle the designed
+    // cheap path, so no hint is forced there.
+    val bcast: DataFrame => DataFrame =
+      if (useCopies) identity else BroadcastGate.hint(nEdges)
     def l1Normalize(scores: DataFrame, valCol: String): DataFrame = {
       val total = scores.agg(
         sum(col(valCol).cast("decimal(18,9)")).cast("double").as("__s"))

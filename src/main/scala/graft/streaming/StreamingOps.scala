@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** Structured-Streaming variants of the event-time operators in
   * [[graft.ext.EventWindows]]. The reference has no streaming semantics
@@ -769,10 +770,12 @@ object StreamingOps {
   /** Build the STATIC side of streaming incremental dedup from an existing
     * corpus: one row per (store doc, band) with the doc's exact-match key, LSH
     * band key, full distinct-shingle array and its size — everything
-    * [[incrementalDedupStream]] probes, in one persistable table (this is the
-    * "persist the store's signatures once, they're ingest-invariant" artifact
-    * [[graft.ext.Dedup.incrementalDedup]]'s docs call for; write it out
-    * partitioned however the store is managed and hand it to every stream).
+    * [[incrementalDedupStream]] reads into its driver index, in one
+    * persistable table (this is the "persist the store's signatures once,
+    * they're ingest-invariant" artifact [[graft.ext.Dedup.incrementalDedup]]'s
+    * docs call for; write it out partitioned however the store is managed and
+    * hand it to every stream). Each row repeats its doc's shingle array once
+    * per band; the index keeps one copy per doc, from the band-0 row.
     */
   def dedupStore(existing: DataFrame, idCol: String, textCol: String,
                  k: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4)
@@ -795,28 +798,45 @@ object StreamingOps {
 
   /** Streaming twin of [[graft.ext.Dedup.incrementalDedup]]: classify ARRIVING
     * documents against a static store built by [[dedupStore]], STATELESSLY —
-    * every probe is a stream-static broadcast join, so there is no watermark,
-    * no state store, and arbitrary stream volume costs O(batch) per trigger.
+    * no watermark, no state store, O(batch) work per trigger.
+    *
+    * The store is read ONCE, when this method is called: one collect job
+    * folds it on the driver into an index (md5 key → smallest store id; per
+    * store doc its distinct shingles once, from the band-0 row; (band, band
+    * key) → store rows), shipped to the executors with one
+    * `sparkContext.broadcast` that lives as long as the returned DataFrame.
+    * The stream therefore classifies against a SNAPSHOT of the store taken
+    * when the query is defined: rows added to the store later are not seen
+    * until the query is defined again (a restart from the same checkpoint
+    * picks up a refreshed store and resumes from the recovered offsets).
+    *
+    * Driver bound: the index holds every store doc's distinct shingles once
+    * plus numHashes / rowsPerBand band keys per store row (4 per doc at the
+    * defaults). Like the broadcast join it replaces, the build fails with a
+    * clear message above Spark's broadcast limits, 512M store rows or 8 GB of
+    * payload (string bytes plus 8 per numeric field), instead of running the
+    * driver out of memory.
+    *
+    * Per micro-batch the arriving docs get shingles, MinHash, band keys and
+    * md5 key from Catalyst expressions (transform/array_min over the doc's
+    * shingle hashes; same hash constants as the batch operator, so the
+    * candidates match it), then one narrow `mapPartitions` probes the index:
+    * no shuffle, no store scan, no job besides the sink's own.
     *
     * Emits (id, status, match_id, jaccard) rows:
-    *  - `exact_dup`: md5 key found in the store (match_id = smallest holder,
-    *    jaccard null) — exactly one row per exact-dup doc; such docs are cut
-    *    from the near path by a stream-static left-anti join, mirroring the
-    *    batch operator's exact-over-near precedence
+    *  - `exact_dup`: md5 key found in the store (match_id = smallest holder
+    *    under Spark's ordering of the id type, jaccard null) — exactly one
+    *    row per exact-dup doc; such docs are not probed for near dups,
+    *    mirroring the batch operator's exact-over-near precedence
     *  - `near_dup`: band-collision candidate whose exact shingle Jaccard
-    *    (an array-intersect expression against the store row's shingle array)
-    *    ≥ `threshold` — one row per (doc, store match, colliding band):
+    *    ≥ `threshold` — one row per (doc, store row, colliding band):
     *    stateless append mode can neither dedupe bands nor pick a per-doc
     *    best, so the consumer's reduction is a one-line distinct+groupBy
-    *    (the spec's differential does exactly that)
+    *    (the spec's differential does exactly that); a doc with null text
+    *    has no shingles and emits no near-dup row
     *  - docs with NO emitted row are `new` — a stateless stream cannot emit a
     *    negative (proving "no match" needs all of a doc's candidate rows in
     *    one place, i.e. state); the batch operator emits the explicit rows.
-    *
-    * The stream side computes its MinHash signature scan-side with array
-    * expressions (transform/array_min over the doc's shingle hashes — per-row
-    * work on small arrays; the batch operator's aggregate formulation does not
-    * stream). Same hash constants, so candidates match the batch operator's.
     */
   def incrementalDedupStream(stream: DataFrame, store: DataFrame,
                              idCol: String, textCol: String,
@@ -833,37 +853,26 @@ object StreamingOps {
       array_min(transform(col("__h"),
         h => (lit(minhashA(j)) * h + lit(minhashB(j))) % lit(MinhashPrime)))
     }
-    val bandArr = array((0 until numBands).map { b =>
-      val slice = (b * rowsPerBand until (b + 1) * rowsPerBand).map(mh)
-      struct(lit(b).as("band"), md5(concat_ws(",", slice: _*)).as("bkey"))
+    val bandKeys = array((0 until numBands).map { b =>
+      md5(concat_ws(",", (b * rowsPerBand until (b + 1) * rowsPerBand).map(mh): _*))
     }: _*)
 
-    val base = stream.select(col(idCol), col(textCol))
+    val probes = stream.select(col(idCol), col(textCol))
       .withColumn("__sh", docSh)
       .withColumn("__h", hashes)
-      .withColumn("__hkey", coalesce(md5(col(textCol)), lit("__null_text__")))
-
-    val exKeys = broadcast(
-      store.groupBy(col("__hkey")).agg(min(col("__ex_id")).as("__m")))
-    val exact = base.join(exKeys, Seq("__hkey"))
-      .select(col(idCol), lit("exact_dup").as("status"),
-        col("__m").as("match_id"), lit(null).cast("double").as("jaccard"))
-
-    val near = base
-      .join(exKeys, Seq("__hkey"), "left_anti") // exact dups report via `exact`
-      .withColumn("__bb", explode(bandArr))
       .select(col(idCol), col("__sh"),
-        col("__bb.band").as("band"), col("__bb.bkey").as("bkey"))
-      .join(broadcast(store.drop("__hkey")), Seq("band", "bkey"))
-      .withColumn("__shared",
-        size(array_intersect(col("__sh"), col("__ex_sh"))).cast("long"))
-      .withColumn("jaccard", col("__shared").cast("double") /
-        (size(col("__sh")) + col("__n_ex") - col("__shared")))
-      .filter(col("jaccard") >= threshold)
-      .select(col(idCol), lit("near_dup").as("status"),
-        col("__ex_id").as("match_id"), col("jaccard"))
-
-    exact.unionByName(near)
+        coalesce(md5(col(textCol)), lit("__null_text__")).as("__hkey"),
+        bandKeys.as("__bkeys"))
+    val index = DedupIndex.build(store)
+    val shipped = stream.sparkSession.sparkContext.broadcast(index)
+    val schema = StructType(Seq(probes.schema.head,
+      StructField("status", StringType, nullable = false),
+      StructField("match_id", index.idType),
+      StructField("jaccard", DoubleType)))
+    probes.mapPartitions { rows =>
+      val ix = shipped.value
+      rows.flatMap(ix.probe(_, threshold))
+    }(Encoders.row(schema))
   }
 
   final case class RunEvent(user_id: Long, ts: Timestamp, event_id: Long,

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 final case class IncDoc(doc_id: Long, text: String)
+final case class StrDoc(doc_id: String, text: String)
 final case class PrivRow(region: String, band: Long, salary: Double)
 final case class CorpusDoc(src: String, doc_id: Long, text: String)
 final case class SourcedEvent(src: String, ts: Timestamp)
@@ -114,6 +115,192 @@ class StreamingOpsSpec extends SparkTestBase {
     val m21 = rows.filter(_._1 == 21L)
     assert(m21.nonEmpty &&
       m21.forall(r => r._2 == "near_dup" && (r._3 == 1L || r._3 == 2L)))
+  }
+
+  /** The relational form `incrementalDedupStream` had before its driver
+    * index: stream-static broadcast joins against the store, re-read every
+    * micro-batch. Kept verbatim as the reference for the raw-output
+    * differential below. */
+  private def relationalDedupStream(stream: org.apache.spark.sql.DataFrame,
+                                    store: org.apache.spark.sql.DataFrame,
+                                    idCol: String, textCol: String,
+                                    k: Int = 3, numHashes: Int = 16,
+                                    rowsPerBand: Int = 4,
+                                    threshold: Double = 0.5)
+      : org.apache.spark.sql.DataFrame = {
+    import graft.ext.Dedup.{minhashA, minhashB, MinhashPrime}
+    val numBands = numHashes / rowsPerBand
+    val docSh = array_distinct(
+      graft.functions.WordShingles.shingles(col(textCol), k))
+    val hashes = transform(col("__sh"),
+      s => conv(substring(md5(s), 1, 8), 16, 10).cast("long"))
+    val mh = (0 until numHashes).map { j =>
+      array_min(transform(col("__h"),
+        h => (lit(minhashA(j)) * h + lit(minhashB(j))) % lit(MinhashPrime)))
+    }
+    val bandArr = array((0 until numBands).map { b =>
+      val slice = (b * rowsPerBand until (b + 1) * rowsPerBand).map(mh)
+      struct(lit(b).as("band"), md5(concat_ws(",", slice: _*)).as("bkey"))
+    }: _*)
+
+    val base = stream.select(col(idCol), col(textCol))
+      .withColumn("__sh", docSh)
+      .withColumn("__h", hashes)
+      .withColumn("__hkey", coalesce(md5(col(textCol)), lit("__null_text__")))
+
+    val exKeys = broadcast(
+      store.groupBy(col("__hkey")).agg(min(col("__ex_id")).as("__m")))
+    val exact = base.join(exKeys, Seq("__hkey"))
+      .select(col(idCol), lit("exact_dup").as("status"),
+        col("__m").as("match_id"), lit(null).cast("double").as("jaccard"))
+
+    val near = base
+      .join(exKeys, Seq("__hkey"), "left_anti") // exact dups report via `exact`
+      .withColumn("__bb", explode(bandArr))
+      .select(col(idCol), col("__sh"),
+        col("__bb.band").as("band"), col("__bb.bkey").as("bkey"))
+      .join(broadcast(store.drop("__hkey")), Seq("band", "bkey"))
+      .withColumn("__shared",
+        size(array_intersect(col("__sh"), col("__ex_sh"))).cast("long"))
+      .withColumn("jaccard", col("__shared").cast("double") /
+        (size(col("__sh")) + col("__n_ex") - col("__shared")))
+      .filter(col("jaccard") >= threshold)
+      .select(col(idCol), lit("near_dup").as("status"),
+        col("__ex_id").as("match_id"), col("jaccard"))
+
+    exact.unionByName(near)
+  }
+
+  /** Exact multiset of (id, status, match_id, jaccard) rows. */
+  private def multiset(rows: Array[org.apache.spark.sql.Row])
+      : Map[(String, String, String, Option[Double]), Int] =
+    rows.toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2),
+        if (r.isNullAt(3)) None else Some(r.getDouble(3))))
+      .groupBy(identity).map { case (k, v) => k -> v.size }
+
+  test("incrementalDedupStream emits exactly the relational form's rows, " +
+    "as a batch and through a MemoryStream") {
+    implicit val sc = spark.sqlContext
+    val rnd = new scala.util.Random(20261017L)
+    val vocab = (0 until 40).map(i => s"w$i")
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    def edit(ws: Seq[String], n: Int) =
+      (0 until n).foldLeft(ws)((acc, _) =>
+        acc.updated(rnd.nextInt(acc.size), vocab(rnd.nextInt(vocab.size))))
+    val bases = Seq.fill(12)(words(24))
+    val twin = words(20).mkString(" ")
+    // "｡" (U+FF61) sorts before "😀" (U+1F600) in UTF-8 byte order, after
+    // it in UTF-16 code units: Spark's min picks "｡", String.compareTo "😀"
+    assert("😀".compareTo("｡") < 0)
+    val existing = bases.zipWithIndex.map { case (ws, i) => (s"s$i", ws.mkString(" ")) } ++
+      Seq(("｡", twin), ("😀", twin),
+        ("dup", bases(0).mkString(" ")), ("dup", (bases(0).init :+ "y").mkString(" ")),
+        ("s_null", null), ("s_empty", ""))
+    val incoming = bases.zipWithIndex.flatMap { case (ws, i) =>
+      Seq(StrDoc(s"t$i", ws.mkString(" ")), // exact dup
+        StrDoc(s"n$i", edit(ws, 1 + i % 4).mkString(" ")), // near dup, 1-4 edits
+        StrDoc(s"f$i", words(24).mkString(" "))) // fresh
+    } ++ Seq(StrDoc("t_twin", twin), StrDoc("n_twin", twin.replaceFirst("w", "x")),
+      StrDoc("n_dup", (bases(0).init :+ "z").mkString(" ")),
+      StrDoc("t_null", null), StrDoc("t_empty", ""),
+      StrDoc(null, bases(1).mkString(" ")), StrDoc(null, (bases(2).init :+ "z").mkString(" ")))
+
+    val store = StreamingOps.dedupStore(existing.toDF("doc_id", "text"), "doc_id", "text")
+      .persist()
+    val batchDocs = incoming.toDF()
+    val expected = multiset(relationalDedupStream(batchDocs, store, "doc_id", "text").collect())
+    // the corpus reaches every case the differential is about
+    assert(expected.contains((("t_twin", "exact_dup", "｡", None))))
+    assert(expected.keys.exists(r => r._1 == null && r._2 == "exact_dup"))
+    assert(expected.keys.exists(r => r._1 == null && r._2 == "near_dup"))
+    assert(expected.exists { case (r, n) => r._3 == "dup" && r._2 == "near_dup" && n >= 2 })
+    assert(expected.exists { case (r, n) => r._3.startsWith("s") && n >= 2 },
+      "some doc collides with one store row in several bands")
+    assert(expected.keys.exists(r => r._2 == "near_dup" && r._4.exists(_ < 1.0)))
+
+    assert(multiset(StreamingOps
+      .incrementalDedupStream(batchDocs, store, "doc_id", "text").collect()) == expected)
+
+    val input = MemoryStream[StrDoc]
+    val queries = Seq(
+      "incdedup_index" -> StreamingOps.incrementalDedupStream(
+        input.toDF(), store, "doc_id", "text"),
+      "incdedup_relational" -> relationalDedupStream(input.toDF(), store, "doc_id", "text"))
+      .map { case (name, df) =>
+        df.writeStream.format("memory").queryName(name).outputMode("append").start()
+      }
+    incoming.grouped(11).foreach { batch =>
+      input.addData(batch: _*)
+      queries.foreach(_.processAllAvailable())
+    }
+    queries.foreach(_.stop())
+    assert(multiset(spark.table("incdedup_relational").collect()) == expected)
+    assert(multiset(spark.table("incdedup_index").collect()) == expected)
+    store.unpersist()
+  }
+
+  test("incrementalDedupStream: after the first micro-batch, each runs at " +
+    "most one job and writes no shuffle bytes") {
+    // Named in advance: the relational form ran 6 jobs and a 294 KB shuffle
+    // per micro-batch (the store's exact keys re-aggregated, both broadcast
+    // relations rebuilt). Job counts repeat exactly, unlike timings.
+    implicit val sc = spark.sqlContext
+    val rnd = new scala.util.Random(7L)
+    val texts = Seq.fill(30)(Seq.fill(20)(s"w${rnd.nextInt(50)}").mkString(" "))
+    val store = StreamingOps.dedupStore(
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"),
+      "doc_id", "text").persist()
+    val input = MemoryStream[IncDoc]
+    val q = StreamingOps.incrementalDedupStream(input.toDF(), store, "doc_id", "text")
+      .writeStream.format("memory").queryName("incdedup_budget")
+      .outputMode("append").start()
+    val group = q.runId.toString
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          j.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
+    }
+    val ctx = spark.sparkContext
+    ctx.addSparkListener(listener)
+    val perBatch = try (0 until 4).map { b =>
+      org.apache.spark.graftbridge.ListenerBridge.drain(ctx)
+      val (j0, s0) = (jobs.get, shuffleBytes.get)
+      input.addData((0 until 6).map { i =>
+        val id = b * 6 + i
+        IncDoc(100L + id, if (i % 2 == 0) texts(id) else texts(id).replace("w1 ", "w2 "))
+      }: _*)
+      q.processAllAvailable()
+      org.apache.spark.graftbridge.ListenerBridge.drain(ctx)
+      (jobs.get - j0, shuffleBytes.get - s0)
+    } finally {
+      q.stop()
+      ctx.removeSparkListener(listener)
+      store.unpersist()
+    }
+    assert(spark.table("incdedup_budget").count() > 0)
+    assert(perBatch.head._1 >= 1, s"listener saw no job: $perBatch")
+    perBatch.tail.foreach { case (j, s) =>
+      assert(j <= 1 && s == 0, s"per micro-batch (jobs, shuffle bytes): $perBatch")
+    }
+  }
+
+  test("incrementalDedupStream's driver index fails loudly past its limits") {
+    implicit val sc = spark.sqlContext
+    val store = StreamingOps.dedupStore(Seq((1L, "alpha beta gamma delta"),
+      (2L, "one two three four five")).toDF("doc_id", "text"), "doc_id", "text")
+    assert(DedupIndex.build(store).idType == org.apache.spark.sql.types.LongType)
+    val rows = intercept[IllegalStateException](DedupIndex.build(store, maxRows = 7L))
+    assert(rows.getMessage.contains("too large for the driver index: 8 rows"))
+    val bytes = intercept[IllegalStateException](DedupIndex.build(store, maxBytes = 100L))
+    assert(bytes.getMessage.contains("limits 512000000 rows and 100 bytes"))
   }
 
   test("dsirBucketCountsStream counts match the batch distribution and the " +
