@@ -1,39 +1,57 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: one JSON line with per-query seconds at SPARK_GRAFT_SF_DIR.
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Benchmark main: one JSON line with per-query seconds at SPARK_GRAFT_SF_DIR,
+  * last on stdout.
   *
-  * Single-run timings on this host are noise-dominated (round-1: 359.7s recorded
+  * Single-run timings on a shared VM are noise-dominated (round-1: 359.7s recorded
   * vs 18.9s re-run on identical code — Firecracker vCPU throttling). So each
-  * query is timed SPARK_GRAFT_BENCH_REPS times (default 3) after one untimed
-  * warm-up, and the reported per-query number is the MEDIAN across reps;
-  * per-query minima ride along under "queries_min" for variance diagnosis.
+  * query is timed SPARK_GRAFT_BENCH_REPS times (default 3) after one cold run
+  * (codegen compile + JIT), and the reported per-query number is the MEDIAN
+  * across reps. Every run writes the full result to Spark's noop sink:
+  * `count()` would let Catalyst prune the sorts and expressions of the result
+  * the oracle checks.
+  *
+  * Usage: runMain graft.Bench [query ...]. Per query, stderr gets
+  *   BENCH <name> cold=<s> warm=<s>,<s>,... jobs= stages= tasks= shufKB= recs=
+  * where the counts (Spark jobs, stages, tasks, shuffle-write KiB and records,
+  * real executor metrics) come from a listener on the first warm rep and do
+  * not depend on machine load, though AQE's stage completion order can add a
+  * job between runs (q_mis), so compare repeated runs. Each query named
+  * as an argument also gets its final adaptive plan on stderr. A query that
+  * throws is reported on stderr, counted in "n_failed", left out of every
+  * total, and makes the process exit 1 after the JSON line.
   */
 object Bench {
+  private final class Tally extends SparkListener {
+    val jobs, stages, tasks, shuffleBytes, shuffleRecords = new AtomicLong()
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet(): Unit
+    }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet(): Unit
+    }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      val m = t.taskMetrics
+      if (m != null) {
+        shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten): Unit
+      }
+    }
+  }
+
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.length
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-  }
-
-  /** Release everything a query pinned in executor storage. clearCache()
-    * only drops catalog-cached plans; localCheckpoint blocks (dupClusters /
-    * triangles / PPJoin pin their edge and signature tables) stay resident
-    * until the RDD is GC'd — with a large bench heap GC may never run, the
-    * blocks accumulate over 170+ queries, unified memory shrinks, and
-    * shuffle-heavy queries degrade run-over-run (observed: q_triangles
-    * 2.5s → 14.9s across reps in one session). A long-lived cluster session
-    * must do exactly this after pipeline runs, for the same reason.
-    */
-  private def releaseStorage(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    // broadcasts and shuffle state are cleaned by ContextCleaner only after
-    // a GC notices the references are dead; a 100 GiB bench heap may never
-    // GC on its own, so kick one — milliseconds between queries, against
-    // gigabytes of stale broadcast blocks over a 170-query session
-    System.gc()
   }
 
   /** 1/5/15-min load averages — recorded in the artifact so an
@@ -48,43 +66,57 @@ object Bench {
       s.split("\\s+").take(3).mkString("[", ",", "]")
     } catch { case _: Throwable => "[]" }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadStart = loadAvg()
-    // default to the machine's real core count so unset-env runs are comparable
-    // across hosts (local[32] on a smaller box oversubscribes and skews numbers)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // all entry points must agree on the instant semantics of the
-      // TIMESTAMP_NTZ->TIMESTAMP normalization in Tables.load (Verify pins
-      // UTC; an unpinned Bench on a non-UTC host would time different data)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // One untimed warmup pass per query (codegen compile + JIT), then `reps`
-    // timed runs — steady-state numbers, as a long-lived cluster would see.
-    val timings = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      releaseStorage(spark)
-      val runs = (1 to reps).map { _ =>
+  /** Each selected query's warm rep seconds, or what it threw. */
+  def measure(spark: SparkSession, sfDir: String, reps: Int,
+              planFor: Set[String] = Set.empty,
+              queries: Map[String, Harness.Query] = SparkEntry.queries)
+      : Seq[(String, Either[Throwable, Seq[Double]])] =
+    Harness.run(spark, "bench", queries) { (name, fn) =>
+      def timed(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // cleanup happens between reps but OUTSIDE the timed window — a full
-        // GC on the bench heap costs ~1s and is harness hygiene, not query time
-        releaseStorage(spark)
-        dt
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
       }
-      name -> runs
+      val sc = spark.sparkContext
+      val cold = timed()
+      val tally = new Tally
+      val warm = (1 to reps).map { rep =>
+        // outside the timed window: a full GC on the bench heap costs ~1s and
+        // is harness hygiene, not query time
+        Harness.release(spark)
+        if (rep > 1) timed()
+        else {
+          // the listener bus is asynchronous: drain it before attaching, so no
+          // event of the cold run is tallied, and before detaching, so no
+          // trailing task-end event of this rep is missed
+          ListenerBridge.drain(sc)
+          sc.addSparkListener(tally)
+          try timed()
+          finally { ListenerBridge.drain(sc); sc.removeSparkListener(tally) }
+        }
+      }
+      System.err.println(f"BENCH $name%-24s cold=$cold%.3f " +
+        s"warm=${warm.map(w => f"$w%.3f").mkString(",")} " +
+        s"jobs=${tally.jobs} stages=${tally.stages} tasks=${tally.tasks} " +
+        s"shufKB=${tally.shuffleBytes.get / 1024} recs=${tally.shuffleRecords}")
+      if (planFor(name)) {
+        Harness.release(spark)
+        val df = fn(spark, sfDir)
+        df.queryExecution.toRdd.count() // same QueryExecution → AQE finalizes its plan
+        System.err.println(s"=== plan $name (final adaptive) ===\n" +
+          df.queryExecution.explainString(FormattedMode))
+      }
+      warm
     }
+
+  /** The stdout JSON line and the BENCH_DETAIL.json body. A failed query
+    * counts in "n_queries" and "n_failed" and in nothing else.
+    */
+  def report(results: Seq[(String, Either[Throwable, Seq[Double]])], reps: Int,
+             sfDir: String, cpus: Int, loadStart: String, loadEnd: String)
+      : (String, String) = {
+    val timings = results.collect { case (k, Right(runs)) => k -> runs }
+    val nFailed = results.length - timings.length
     // The driver records only a bounded tail of stdout (~2.2 KB): round medians
     // to 3 decimals and keep ONE compact line so the artifact parses whole (the
     // r3 full-precision double line overflowed the capture and front-truncated).
@@ -102,7 +134,6 @@ object Bench {
     val detail = timings
       .map { case (k, runs) => "\"" + k + "\":" + runs.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    val loadEnd = loadAvg()
     // per-rep suite totals: a uniform environment skew shows up as ALL rep
     // totals inflated together (r7: 353.7/354.5/314.9 vs 113.9 on idle HW);
     // flag when the spread or the absolute level makes medians untrustworthy
@@ -110,10 +141,22 @@ object Bench {
       r3d(timings.map { case (_, runs) => runs(i) }.sum))
     val varianceWarn = repTotals.max > repTotals.min * 1.5
     val machine = s""""cpus":$cpus,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"rep_totals":${repTotals.mkString("[", ",", "]")},"variance_warning":$varianceWarn"""
+    (s"""{"metric":"total","value":$total,"unit":"sec","stat":"median_of_$reps","total_min":$totalMin,"n_queries":${results.length},"queries_shown":"slowest_${slowest.length}_of_${timings.length}_full_set_in_BENCH_DETAIL.json","queries":$qs,"reps":$reps,"sf":"$sfDir",$machine,"n_failed":$nFailed}""",
+      s"""{"reps_per_query":$detail,"reps":$reps,"sf":"$sfDir",$machine}""")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
+    val loadStart = loadAvg()
+    val spark = Harness.session()
+    val results = measure(spark, sfDir, reps, args.toSet)
+    val (line, detail) =
+      report(results, reps, sfDir, Harness.cpus, loadStart, loadAvg())
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      s"""{"reps_per_query":$detail,"reps":$reps,"sf":"$sfDir",$machine}""".getBytes("UTF-8"))
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","stat":"median_of_$reps","total_min":$totalMin,"n_queries":${timings.length},"queries_shown":"slowest_${slowest.length}_of_${timings.length}_full_set_in_BENCH_DETAIL.json","queries":$qs,"reps":$reps,"sf":"$sfDir",$machine}""")
+      detail.getBytes("UTF-8"))
+    println(line)
     spark.stop()
+    if (results.exists(_._2.isLeft)) sys.exit(1)
   }
 }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Golden-fixture generator for the tokenizer-trainer queries — the six
   * suite rows whose recurrences (BPE merge loop, unigram EM/prune) are not
   * SQL-expressible. Their driver-side check used to be rows-only; this tool
@@ -214,13 +212,7 @@ object FixtureGen {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, fixDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val docs = Tables.documents(spark, sfDir)
       .select("doc_id", "text", "lang").collect()

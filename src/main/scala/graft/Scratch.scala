@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Scratch-tree lifecycle for paths that are written then read back
   * (persisted IVF/PQ indexes, format round-trips, test temp dirs): every
-  * registered tree is deleted by a JVM shutdown hook, so Verify/Bench/
-  * Profile/test runs leave /tmp clean instead of accreting one tree per
+  * registered tree is deleted by a JVM shutdown hook, so Verify/Bench/test
+  * runs leave /tmp clean instead of accreting one tree per
   * (query, run) forever. The sweep is best-effort by design: a SIGKILL'd
   * run leaves its trees, but the next run's keys never collide with them
   * (fresh application id), so correctness never depends on the cleanup.

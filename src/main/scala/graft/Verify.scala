@@ -1,46 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter (comma-separated substrings); the driver leaves it
-    // unset → full suite. Applied to the oracle dump too so check_oracle.py
-    // sees a consistent subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).filter(_.nonEmpty)
-    def selected(name: String): Boolean = only.forall(_.exists(name.contains))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => selected(name) }
-      .foreach { case (name, fn) =>
+    // Local-iteration filter; the driver leaves SPARK_GRAFT_ONLY unset → full
+    // suite. Applied to the oracle dump too so check_oracle.py sees a
+    // consistent subset.
+    val selected = Harness.only()
+    Harness.run(spark, "verify", selected = selected) { (name, fn) =>
       val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries cache() intermediates for intra-query reuse; drop them — and
-      // the localCheckpoint blocks clearCache can't see (Bench.releaseStorage
-      // rationale) — so memory pressure doesn't accumulate across the suite
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

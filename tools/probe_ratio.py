@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
-"""Compare two graft.Profile outputs (sf0.1 vs sf1.0 scaling probe).
+"""Compare the stderr of two graft.Bench runs (sf0.1 vs sf1.0 scaling probe).
 
 Usage: python3 tools/probe_ratio.py <sf01.txt> <sf1.txt> [extra01.txt ...]
 
-Each input is `PROFILE <name> cold=Xs warm=Ys r3 r4` lines. The per-query
-statistic is the MEDIAN of the warm reps (all timings after cold). Prints
+Each input holds `BENCH <name> cold=X warm=Y1,Y2,... jobs=...` lines (seconds;
+other lines are skipped). The per-query statistic is the MEDIAN of the warm
+reps (all timings after cold). Prints
 name, sf0.1 median, sf1.0 median, ratio, sorted by ratio descending, and
 flags ratios > 15 (the n log n headroom gate for 10x data).
 """
@@ -12,8 +13,7 @@ import re
 import statistics
 import sys
 
-LINE = re.compile(
-    r"PROFILE\s+(\S+)\s+cold=\s*([\d.]+)s warm=\s*([\d.]+)s\s*(.*)")
+LINE = re.compile(r"BENCH\s+(\S+)\s+cold=\S+ warm=([\d.,]+)")
 
 
 def load(paths):
@@ -23,9 +23,8 @@ def load(paths):
             m = LINE.search(ln)
             if not m:
                 continue
-            name, cold, warm, rest = m.groups()
-            warms = [float(warm)] + [float(x) for x in rest.split()]
-            out[name] = statistics.median(warms)
+            name, warm = m.groups()
+            out[name] = statistics.median(float(x) for x in warm.split(","))
     return out
 
 
