@@ -500,11 +500,13 @@ object MeridianQueries {
   /** Pick the 6 documents whose word-trigram sets jointly cover the most
     * of the corpus ([[graft.ext.MaxCoverage.greedySelect]]) — the
     * coverage-based data-selection primitive. Spark builds the
-    * per-candidate feature sets with one exchange and one checkpoint, then
-    * runs each round as two narrow jobs against the broadcast covered set.
-    * The oracle unrolls the six greedy rounds as MATERIALIZED CTEs
-    * (anti-join gains, LIMIT-1 argmax with the same ties-to-smallest-id
-    * order, set-union coverage).
+    * per-candidate feature sets with one exchange, and one scan's shortlist
+    * usually certifies all six rounds (at sf0.1, 3 jobs in all: the
+    * exchange's map stage, the scan, and the 6-row result, which is sorted
+    * inside one partition instead of through a range exchange; at sf0.01 a
+    * sixth-round tie takes a second scan). The oracle unrolls
+    * the six greedy rounds as MATERIALIZED CTEs (anti-join gains, LIMIT-1
+    * argmax with the same ties-to-smallest-id order, set-union coverage).
     */
   def qMaxCoverage(spark: SparkSession, dir: String): DataFrame = {
     val items = Tables.documents(spark, dir)
@@ -512,7 +514,7 @@ object MeridianQueries {
         explode(graft.functions.WordShingles.shingles(col("text"), 3))
           .as("f"))
     graft.ext.MaxCoverage.greedySelect(items, "doc_id", "f", k = 6)
-      .orderBy(col("round"))
+      .coalesce(1).sortWithinPartitions(col("round"))
   }
 
   val maxCoverageSql: String = {

@@ -1,11 +1,85 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
-/** Loaders for the driver-generated parquet tables (TESTDATA.md). */
+import scala.collection.concurrent.TrieMap
+
+/** Loaders for the driver-generated parquet tables (TESTDATA.md).
+  *
+  * Every parquet read goes through [[parquet]], which infers a path's
+  * schema once per session and then reads with `spark.read.schema(s)`:
+  * inference reads a footer in a Spark job (one job per table load), a
+  * given schema reads none. The cache holds one entry per (session, path);
+  * an entry is used only while every file under the path still has the
+  * length and modification time it had at inference, and while the
+  * session's explicitly set `spark.sql.parquet.*` and
+  * `spark.sql.legacy.parquet.*` confs (binaryAsString, inferTimestampNTZ,
+  * nanosAsLong, …, which change what inference returns) are the ones it
+  * was inferred under. Anything else re-infers and replaces the entry.
+  */
 object Tables {
+  private final case class Entry(files: Seq[(String, Long, Long)],
+                                 confs: Map[String, String], schema: StructType)
+
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, Entry]]()
+
+  private def entries(spark: SparkSession): TrieMap[String, Entry] =
+    schemas.synchronized {
+      Option(schemas.get(spark)).getOrElse {
+        val m = TrieMap.empty[String, Entry]
+        schemas.put(spark, m)
+        m
+      }
+    }
+
+  /** Every file under `path` (recursively) with its length and
+    * modification time, in path order; None when `path` does not exist. */
+  private def files(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val it = fs.listFiles(p, true)
+      val out = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(out.result().sortBy(_._1))
+    }
+  }
+
+  private def parquetConfs(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+
+  /** `spark.read.parquet(path)` with the schema inferred once per session
+    * and reused while the files and parquet confs are unchanged (see the
+    * object doc). The result has the schema `spark.read.parquet(path)`
+    * would give, partition columns included.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = files(spark, path) match {
+    case None => spark.read.parquet(path) // Spark's own error (or glob expansion)
+    case Some(current) =>
+      // listed before inferring: a write in between leaves a stale
+      // listing, which the next load sees as a change
+      val confs = parquetConfs(spark)
+      val cache = entries(spark)
+      val schema = cache.get(path)
+        .filter(e => e.files == current && e.confs == confs).map(_.schema)
+        .getOrElse {
+          val s = spark.read.parquet(path).schema
+          cache.put(path, Entry(current, confs, s))
+          s
+        }
+      spark.read.schema(schema).parquet(path)
+  }
+
   /** Driver-generated parquet stores timestamps as
     * `Timestamp(isAdjustedToUTC=false)`, which Spark 4 infers as
     * TIMESTAMP_NTZ (`spark.sql.parquet.inferTimestampNTZ.enabled` default) —
@@ -15,7 +89,7 @@ object Tables {
     * oracle (DuckDB reads the column as naive TIMESTAMP) computes with.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = parquet(spark, s"$dir/$name.parquet")
     raw.schema.fields.filter(_.dataType == TimestampNTZType).foldLeft(raw) {
       (df, f) => df.withColumn(f.name, col(f.name).cast("timestamp"))
     }

@@ -1,10 +1,10 @@
 package graft.ext
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
+import scala.math.Ordering.Implicits._
 
 /** Greedy maximum-coverage subset selection (Nemhauser, Wolsey & Fisher
   * 1978: the (1 − 1/e) greedy for monotone submodular maximization) — the
@@ -14,28 +14,47 @@ import scala.collection.mutable
   * selection.
   *
   * Greedy is inherently sequential in k: each pick conditions the next
-  * round's marginal gains. The input is hash-partitioned on id once (one
-  * exchange) into one row per candidate, (id, distinct features), and that
-  * table is the only thing checkpointed. Each partition stores its rows as
-  * one array, so caching it sizes a sample of the rows instead of walking
-  * every feature string (for q_max_coverage on 4 cores at sf0.1 the walk
-  * took ~0.6 s, more than all six rounds). The covered set lives on the
-  * driver as the union of the winners' features. Per round, the covered
-  * set is broadcast, every partition computes |F(c) \ covered| for its
-  * candidates and returns only its local best (gain, id, partition) —
-  * ties → smallest id, so the pick is deterministic — and a one-task job
-  * on the winner's partition returns the winner's features: two narrow
-  * jobs per round, no shuffle and no query planning.
+  * round's marginal gains. It runs here as a certified lazy greedy
+  * (Minoux 1978) over one scan. The input is hash-partitioned on id once
+  * (one exchange) into one row per candidate, (id, distinct features). A
+  * scan broadcasts the covered set and returns, through one
+  * `treeAggregate` job, the top m candidates with their features, ranked
+  * by (gain desc, id asc) at that covered set, plus the best key it left
+  * out (the best (gain, id) with positive gain not in the list). The driver
+  * then picks rounds from that shortlist, recomputing the listed gains
+  * against its own covered set, as long as the winner's current key beats
+  * the left-out key: gains only fall as coverage grows, so no unlisted
+  * candidate can win or tie. When the check fails it scans again at the
+  * current covered set. The output is exactly the greedy's, ties → smallest
+  * id included. m = 2 × the rounds left: with m = the rounds left,
+  * q_max_coverage at sf0.1 needs a second scan (doc 256 loses a trigram
+  * to an earlier pick), with 2 × one scan suffices.
   *
-  * Scale shape: the candidate table is the only corpus-sized relation
-  * and never leaves the executors. The driver holds the k picks and the
-  * covered set (at most k × the largest candidate's distinct features,
-  * which is also what each round broadcasts), and per round receives one
-  * (gain, id, partition) triple per partition plus one candidate's
-  * features. Output: one row per pick — (round, doc_id, marginal_gain,
+  * Scale shape: the candidate table is the only corpus-sized relation and
+  * never leaves the executors; it is not cached or checkpointed, so a
+  * rescan rebuilds it from the exchange's shuffle output. The driver holds
+  * m candidates' features plus the covered set (at most k × the largest
+  * candidate's distinct features, which is also what each scan
+  * broadcasts), and each scan receives O(√P) shortlists over P candidate
+  * partitions. Output: one row per pick — (round, doc_id, marginal_gain,
   * covered_total), covered_total being the size of the covered set.
   */
 object MaxCoverage {
+
+  /** A scan's result: up to m (gain, id, features) in rank order, and the
+    * rank key of the best candidate with positive gain left out of them. */
+  private final case class Shortlist(top: Seq[(Long, Long, Array[String])],
+                                     left: Option[(Long, Long)])
+
+  /** Rank key: smaller is better (gain desc, id asc). */
+  private def key(g: Long, id: Long): (Long, Long) = (-g, id)
+
+  private def ranked(m: Int, cands: Seq[(Long, Long, Array[String])],
+                     lefts: Iterable[(Long, Long)]): Shortlist = {
+    val sorted = cands.sortBy { case (g, id, _) => key(g, id) }
+    val dropped = sorted.lift(m).map { case (g, id, _) => key(g, id) }
+    Shortlist(sorted.take(m), (lefts ++ dropped).minOption)
+  }
 
   /** Greedily select `k` ids from `items` (idCol, featureCol — duplicates
     * fine, coverage is set semantics). Rows whose id or feature is null
@@ -59,33 +78,35 @@ object MaxCoverage {
           byId.getOrElseUpdate(id, mutable.HashSet.empty[String]) += f }
         Iterator(byId.iterator.map { case (id, fs) => (id, fs.toArray) }.toArray)
       }
-      .localCheckpoint() // materialized by round 1, scanned every round
+    def scan(covered: Set[String], m: Int): Shortlist = {
+      val cov = sc.broadcast(covered)
+      val merge = (a: Shortlist, b: Shortlist) => ranked(m, a.top ++ b.top, a.left ++ b.left)
+      try cands.map { block =>
+          val c = cov.value
+          ranked(m, block.toSeq.map { case (id, fs) =>
+            (fs.count(f => !c.contains(f)).toLong, id, fs) }.filter(_._1 > 0), Nil)
+        }.treeAggregate(Shortlist(Nil, None))(merge, merge)
+      finally cov.destroy()
+    }
     var covered = Set.empty[String]
+    var short = scan(covered, 2 * k)
     val picks = Seq.newBuilder[(Int, Long, Long, Long)]
     var r = 1
     var done = false
     while (r <= k && !done) {
-      val cov = sc.broadcast(covered)
-      val best = cands.mapPartitions { blocks =>
-        val c = cov.value
-        var (bg, bid) = (0L, Long.MaxValue)
-        blocks.foreach(_.foreach { case (id, fs) =>
-          val g = fs.count(f => !c.contains(f)).toLong
-          if (g > bg || (g == bg && id < bid)) { bg = g; bid = id }
-        })
-        if (bg > 0) Iterator((bg, bid, TaskContext.getPartitionId()))
-        else Iterator.empty
-      }.collect()
-      cov.destroy()
-      if (best.isEmpty) done = true
-      else {
-        val (g, id, part) = best.minBy { case (g, id, _) => (-g, id) }
-        covered ++= sc.runJob(cands,
-          (blocks: Iterator[Array[(Long, Array[String])]]) =>
-            blocks.flatMap(_.iterator).collectFirst { case (`id`, fs) => fs }.get,
-          Seq(part)).head
-        picks += ((r, id, g, covered.size.toLong))
-        r += 1
+      val best = short.top.map { case (_, id, fs) =>
+          (fs.count(f => !covered.contains(f)).toLong, id, fs) }
+        .minByOption { case (g, id, _) => key(g, id) }
+      best match {
+        case None => done = true // no candidate had a positive gain
+        case Some((g, id, fs)) if short.left.forall(key(g, id) < _) =>
+          if (g == 0) done = true
+          else {
+            covered ++= fs // the winner's own gain is 0 from here on
+            picks += ((r, id, g, covered.size.toLong))
+            r += 1
+          }
+        case _ => short = scan(covered, 2 * (k - r + 1))
       }
     }
     picks.result()

@@ -373,14 +373,14 @@ object SimSearch {
                             idCol: String, vecCol: String, queryVec: Seq[Float],
                             k: Int, nProbe: Int = 4): DataFrame = {
     val qd = queryVec.map(_.toDouble).toArray
-    val probeCells = spark.read.parquet(s"$path/centroids")
+    val probeCells = graft.Tables.parquet(spark, s"$path/centroids")
       .collect()
       .map { r =>
         val c = r.getSeq[Double](1)
         (r.getInt(0), c.zip(qd).map { case (a, b) => (a - b) * (a - b) }.sum)
       }
       .sortBy(_._2).take(nProbe).map(_._1)
-    spark.read.parquet(s"$path/data")
+    graft.Tables.parquet(spark, s"$path/data")
       .filter(col("ivf_cell").isin(probeCells.map(Integer.valueOf): _*))
       .select(col(idCol), cosineToQuery(col(vecCol), queryVec).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
@@ -431,14 +431,14 @@ object SimSearch {
                           k: Int, nProbe: Int = 4,
                           excludeId: Long = -1L): DataFrame = {
     val qd = queryVec.map(_.toDouble).toArray
-    val probeCells = spark.read.parquet(s"$path/centroids")
+    val probeCells = graft.Tables.parquet(spark, s"$path/centroids")
       .collect()
       .map { r =>
         val c = r.getSeq[Double](1)
         (r.getInt(0), c.zip(qd).map { case (a, b) => (a - b) * (a - b) }.sum)
       }
       .sortBy { case (cell, d2) => (d2, cell) }.take(nProbe).map(_._1)
-    spark.read.parquet(s"$path/data")
+    graft.Tables.parquet(spark, s"$path/data")
       .filter(col("ivf_cell").isin(probeCells.map(Integer.valueOf): _*))
       .filter(col(idCol) =!= excludeId)
       .select(col(idCol), col("ivf_cell"),
@@ -464,7 +464,7 @@ object SimSearch {
     ivfTrainedWriteIndex(df, idCol, vecCol, seeds, cidCol, cvecCol, iters,
       path, dims)
     val spark = df.sparkSession
-    val assign = spark.read.parquet(s"$path/data")
+    val assign = graft.Tables.parquet(spark, s"$path/data")
       .select(col(idCol), col("ivf_cell"))
     ProductQuant.packCodes(
         ProductQuant.encode(df, idCol, vecCol, codebook, codeCol, pqVecCol,
@@ -496,7 +496,7 @@ object SimSearch {
                      m: Int = 8, subDim: Int = 8): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val qd = queryVec.map(_.toDouble).toArray
-    val probeCells = spark.read.parquet(s"$path/centroids")
+    val probeCells = graft.Tables.parquet(spark, s"$path/centroids")
       .collect()
       .map { r =>
         val c = r.getSeq[Double](1)
@@ -504,10 +504,10 @@ object SimSearch {
       }
       .sortBy { case (cell, d2) => (d2, cell) }.take(nProbe).map(_._1)
     val cellFilter = col("ivf_cell").isin(probeCells.map(Integer.valueOf): _*)
-    val lut = ProductQuant.adcLut(spark.read.parquet(s"$path/codebook"),
+    val lut = ProductQuant.adcLut(graft.Tables.parquet(spark, s"$path/codebook"),
       "code", "cvec", queryVec, m, subDim)
     // posexplode position IS the subspace (packCodes stores subspace order)
-    val adc = spark.read.parquet(s"$path/codes")
+    val adc = graft.Tables.parquet(spark, s"$path/codes")
       .filter(cellFilter).filter(col(idCol) =!= excludeId)
       .select(col(idCol), col("ivf_cell"),
         posexplode(col("codes")).as(Seq("subspace", "code")))
@@ -518,7 +518,7 @@ object SimSearch {
     // keep only (id, adc_dist): the vector table re-supplies ivf_cell
     val short = adc.orderBy(col("adc_dist"), col(idCol)).limit(shortlist)
       .select(col(idCol), col("adc_dist"))
-    spark.read.parquet(s"$path/data").filter(cellFilter)
+    graft.Tables.parquet(spark, s"$path/data").filter(cellFilter)
       .join(broadcast(short), Seq(idCol))
       .select(col(idCol), col("ivf_cell"), col("adc_dist"),
         cosineToQuery(col(vecCol), queryVec).as("cosine"))
@@ -551,7 +551,7 @@ object SimSearch {
                                m: Int = 8, subDim: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = graft.Tables.parquet(spark, s"$path/centroids")
       .select(col("ivf_cell"), col("centroid"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
       norm(col(vecCol)).as("__qn"))
@@ -569,7 +569,7 @@ object SimSearch {
       .localCheckpoint(eager = true) // cell filter + candidate join + rerank
     // per-query ADC lookup tables: slice the query vector per subspace
     // against every codeword — #queries × m × codes broadcast rows
-    val cb = spark.read.parquet(s"$path/codebook")
+    val cb = graft.Tables.parquet(spark, s"$path/codebook")
     val lut = q.crossJoin(broadcast(cb))
       .select(col("query_id"), col("code"),
         explode(array((0 until m).map { s =>
@@ -589,7 +589,7 @@ object SimSearch {
     val cellsArr = probes.select(col("ivf_cell")).distinct()
       .collect().map(_.getInt(0))
     val cellFilter = col("ivf_cell").isin(cellsArr.map(Integer.valueOf): _*)
-    val adc = spark.read.parquet(s"$path/codes")
+    val adc = graft.Tables.parquet(spark, s"$path/codes")
       .filter(cellFilter)
       .join(broadcast(probes), Seq("ivf_cell"))
       .filter(col(idCol) =!= col("query_id"))
@@ -605,7 +605,7 @@ object SimSearch {
         .orderBy(col("adc_dist"), col(idCol))))
       .filter(col("__sr") <= shortlist)
       .select(col("query_id"), col(idCol), col("adc_dist"))
-    spark.read.parquet(s"$path/data")
+    graft.Tables.parquet(spark, s"$path/data")
       .filter(cellFilter)
       .join(broadcast(short), Seq(idCol))
       .join(broadcast(q), Seq("query_id"))

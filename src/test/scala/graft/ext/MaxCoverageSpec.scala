@@ -151,36 +151,65 @@ class MaxCoverageSpec extends SparkTestBase {
       Seq((1, 1L, 1L, 1L), (2, 2L, 1L, 2L)))
   }
 
-  test("job budget: fixed set-up jobs plus 2 per round, one RDD left persisted") {
-    // Job counts repeat exactly at fixed data, unlike timings. The one
-    // set-up job is the map stage of the grouping exchange; the 12 rounds
-    // all pick, so no final zero-gain round runs.
-    val setupJobs = 1
-    val items = (0 until 40).flatMap(id =>
-      (0 until 5).map(j => (id.toLong, s"f${(id * 3 + j) % 90}"))).toDF("id", "f")
+  /** Runs `greedySelect` in its own job group; returns the picks, the
+    * jobs it ran, and how many of them were shortlist scans (a scan's
+    * result stage is named after the `treeAggregate` call site). */
+  private def traced(items: DataFrame, k: Int) = {
     val sc = spark.sparkContext
-    val group = "max-coverage-job-budget"
+    val group = "max-coverage-traced"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val scans = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         if (Option(j.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet(): Unit
+            .exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          if (j.stageInfos.exists(_.name.startsWith("treeAggregate at MaxCoverage")))
+            scans.incrementAndGet()
+        }
     }
-    val persisted = sc.getPersistentRDDs.keySet.toSet
     sc.addSparkListener(listener)
     val out = try {
       sc.setJobGroup(group, "greedySelect")
-      try MaxCoverage.greedySelect(items, "id", "f", 12)
+      try MaxCoverage.greedySelect(items, "id", "f", k)
       finally {
         sc.clearJobGroup()
         ListenerBridge.drain(sc)
       }
     } finally sc.removeSparkListener(listener)
-    val picked = rows(out)
+    (rows(out), jobs.get, scans.get)
+  }
+
+  test("job budget: the exchange's map stage plus one scan, none persisted") {
+    // Job counts repeat exactly at fixed data, unlike timings. One scan's
+    // shortlist (2 × 12 candidates) certifies all 12 rounds here.
+    val items = (0 until 40).flatMap(id =>
+      (0 until 5).map(j => (id.toLong, s"f${(id * 3 + j) % 90}"))).toDF("id", "f")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val (picked, jobs, scans) = traced(items, 12)
     assert(picked.size == 12)
-    assert(jobs.get >= 2 * picked.size, s"listener saw ${jobs.get} jobs")
-    assert(jobs.get <= setupJobs + 2 * picked.size, s"${jobs.get} jobs")
-    assert(sc.getPersistentRDDs.keys.count(id => !persisted(id)) == 1)
+    assert(jobs >= 1, "the listener saw no job")
+    assert(jobs <= 2, s"$jobs jobs")
+    assert(scans == 1, s"$scans scans")
+    assert(spark.sparkContext.getPersistentRDDs.keys.forall(persisted))
+  }
+
+  test("forced rescan: a shortlist of near-copies of the winner fails the check") {
+    // k = 3, so the first scan lists 2 × 3 = 6 candidates: the winner (id 1,
+    // 100 features) and five near-copies (95 of its features plus 4 of
+    // their own, gain 99), which leaves id 7 (50 features of its own) out.
+    // After round 1 the copies gain 4 < 50, so round 2 must scan again.
+    val rnd = new scala.util.Random(5)
+    val winner = (0 until 100).map(j => (1L, s"w$j"))
+    val copies = (2L to 6L).flatMap(id =>
+      (0 until 95).map(j => (id, s"w$j")) ++ (0 until 4).map(j => (id, s"c$id-$j")))
+    val outsider = (0 until 50).map(j => (7L, s"o$j"))
+    val small = (10L until 40L).flatMap(id =>
+      (0 until 1 + rnd.nextInt(8)).map(_ => (id, s"s${rnd.nextInt(40)}")))
+    val items = rnd.shuffle(winner ++ copies ++ outsider ++ small)
+    val (got, _, scans) = traced(items.toDF("id", "f"), 3)
+    assert(scans >= 2, s"$scans scans")
+    assert(got.take(2).map(_._2) == Seq(1L, 7L))
+    assert(got == replay(items, 3), s"got $got")
   }
 }
