@@ -499,8 +499,9 @@ object MeridianQueries {
 
   /** Pick the 6 documents whose word-trigram sets jointly cover the most
     * of the corpus ([[graft.ext.MaxCoverage.greedySelect]]) — the
-    * coverage-based data-selection primitive. Spark builds the
-    * per-candidate feature sets with one exchange, and one scan's shortlist
+    * coverage-based data-selection primitive. The exchange carries the
+    * documents themselves into shuffle-partitions tasks, which shingle them
+    * in parallel into per-candidate trigram sets, and one scan's shortlist
     * usually certifies all six rounds (at sf0.1, 3 jobs in all: the
     * exchange's map stage, the scan, and the 6-row result, which is sorted
     * inside one partition instead of through a range exchange; at sf0.01 a
@@ -508,14 +509,10 @@ object MeridianQueries {
     * the six greedy rounds as MATERIALIZED CTEs (anti-join gains, LIMIT-1
     * argmax with the same ties-to-smallest-id order, set-union coverage).
     */
-  def qMaxCoverage(spark: SparkSession, dir: String): DataFrame = {
-    val items = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        explode(graft.functions.WordShingles.shingles(col("text"), 3))
-          .as("f"))
-    graft.ext.MaxCoverage.greedySelect(items, "doc_id", "f", k = 6)
+  def qMaxCoverage(spark: SparkSession, dir: String): DataFrame =
+    graft.ext.MaxCoverage.greedySelect(Tables.documents(spark, dir), "doc_id",
+        graft.functions.WordShingles.shingles(col("text"), 3), k = 6)
       .coalesce(1).sortWithinPartitions(col("round"))
-  }
 
   val maxCoverageSql: String = {
     val rounds = (1 to 6).map { r =>

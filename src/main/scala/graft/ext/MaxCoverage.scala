@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import scala.collection.mutable
 import scala.math.Ordering.Implicits._
@@ -30,14 +31,19 @@ import scala.math.Ordering.Implicits._
   * q_max_coverage at sf0.1 needs a second scan (doc 256 loses a trigram
   * to an earlier pick), with 2 × one scan suffices.
   *
-  * Scale shape: the candidate table is the only corpus-sized relation and
-  * never leaves the executors; it is not cached or checkpointed, so a
-  * rescan rebuilds it from the exchange's shuffle output. The driver holds
-  * m candidates' features plus the covered set (at most k × the largest
-  * candidate's distinct features, which is also what each scan
-  * broadcasts), and each scan receives O(√P) shortlists over P candidate
-  * partitions. Output: one row per pick — (round, doc_id, marginal_gain,
-  * covered_total), covered_total being the size of the covered set.
+  * Scale shape: the exchange carries the input rows as they are (for
+  * q_max_coverage the documents, not their trigrams) into exactly
+  * `spark.sql.shuffle.partitions` partitions; the explicit count keeps
+  * adaptive execution from coalescing them, so the features are built
+  * after it, in that many parallel tasks. The candidate table is the only
+  * corpus-sized relation and never leaves the executors; it is not cached
+  * or checkpointed, so a rescan rebuilds it from the exchange's shuffle
+  * output. The driver holds m candidates' features plus the covered set (at
+  * most k × the largest candidate's distinct features, which is also what
+  * each scan broadcasts), and each scan receives O(√P) shortlists over P
+  * candidate partitions. Output: one row per pick — (round, doc_id,
+  * marginal_gain, covered_total), covered_total being the size of the
+  * covered set.
   */
 object MaxCoverage {
 
@@ -56,21 +62,30 @@ object MaxCoverage {
     Shortlist(sorted.take(m), (lefts ++ dropped).minOption)
   }
 
-  /** Greedily select `k` ids from `items` (idCol, featureCol — duplicates
-    * fine, coverage is set semantics). Rows whose id or feature is null
-    * are dropped: a null feature is no feature and a null id is no
-    * candidate. Stops early when no positive gain remains.
+  /** Greedily select `k` ids from `items`: each row gives the candidate
+    * `idCol` and its `features`, a string (one feature) or an array of
+    * strings (one feature per element); an id may span several rows, and
+    * duplicates are fine (coverage is set semantics). `features` is
+    * evaluated after the exchange. Rows with a null id are dropped, as are
+    * null features (a null string, a null array or a null element): a null
+    * feature is no feature and a null id is no candidate. Stops early when
+    * no positive gain remains.
     */
-  def greedySelect(items: DataFrame, idCol: String, featureCol: String,
+  def greedySelect(items: DataFrame, idCol: String, features: Column,
                    k: Int): DataFrame = {
     require(k >= 1 && k <= 64, s"k must be 1..64, got $k")
     val spark = items.sparkSession
     import spark.implicits._
     val sc = spark.sparkContext
-    val cands = items.select(col(idCol).cast("long").as("id"),
-        col(featureCol).cast("string").as("f"))
+    val id = col(idCol).cast("long")
+    val fs = items.select(features).schema.head.dataType match {
+      case _: ArrayType => features.cast("array<string>")
+      case _ => array(features.cast("string"))
+    }
+    val cands = items.filter(id.isNotNull)
+      .repartition(spark.sessionState.conf.numShufflePartitions, id)
+      .select(id.as("id"), explode(fs).as("f"))
       .na.drop()
-      .repartition(col("id"))
       .as[(Long, String)].rdd
       .mapPartitions { rows =>
         val byId = mutable.HashMap.empty[Long, mutable.HashSet[String]]

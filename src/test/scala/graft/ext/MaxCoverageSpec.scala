@@ -2,9 +2,11 @@ package graft.ext
 
 import graft.SparkTestBase
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 class MaxCoverageSpec extends SparkTestBase {
   import spark.implicits._
@@ -15,7 +17,7 @@ class MaxCoverageSpec extends SparkTestBase {
       .toSeq
 
   private def run(items: Seq[(Long, String)], k: Int) =
-    rows(MaxCoverage.greedySelect(items.toDF("id", "f"), "id", "f", k))
+    rows(MaxCoverage.greedySelect(items.toDF("id", "f"), "id", col("f"), k))
 
   /** Single-threaded greedy replay: the reference for the differentials. */
   private def replay(items: Seq[(Long, String)], k: Int) = {
@@ -124,7 +126,7 @@ class MaxCoverageSpec extends SparkTestBase {
     val got = withConf("spark.sql.shuffle.partitions" -> parts.toString,
         "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       rows(MaxCoverage.greedySelect(items.toDF("id", "f").repartition(parts),
-        "id", "f", 8))
+        "id", col("f"), 8))
     }
     assert(got.take(2).map(_._2) == Seq(117L, 107L))
     assert(got == replay(items, 8), s"got $got")
@@ -133,12 +135,12 @@ class MaxCoverageSpec extends SparkTestBase {
   test("null ids and null features are dropped at the input") {
     val nullFeature = Seq[(java.lang.Long, String)](
       (1L, "a"), (1L, null), (2L, null), (2L, "b")).toDF("id", "f")
-    assert(rows(MaxCoverage.greedySelect(nullFeature, "id", "f", 2)) ==
+    assert(rows(MaxCoverage.greedySelect(nullFeature, "id", col("f"), 2)) ==
       Seq((1, 1L, 1L, 1L), (2, 2L, 1L, 2L)))
     // the null id would win round 1 with gain 2
     val nullId = Seq[(java.lang.Long, String)](
       (null, "a"), (null, "b"), (3L, "c")).toDF("id", "f")
-    assert(rows(MaxCoverage.greedySelect(nullId, "id", "f", 2)) ==
+    assert(rows(MaxCoverage.greedySelect(nullId, "id", col("f"), 2)) ==
       Seq((1, 3L, 1L, 1L)))
   }
 
@@ -151,14 +153,20 @@ class MaxCoverageSpec extends SparkTestBase {
       Seq((1, 1L, 1L, 1L), (2, 2L, 1L, 2L)))
   }
 
+  /** One completed stage of a traced run: its name, tasks, and the shuffle
+    * records and bytes its tasks wrote. */
+  private case class StageRun(name: String, tasks: Int, records: Long, bytes: Long)
+
   /** Runs `greedySelect` in its own job group; returns the picks, the
-    * jobs it ran, and how many of them were shortlist scans (a scan's
-    * result stage is named after the `treeAggregate` call site). */
-  private def traced(items: DataFrame, k: Int) = {
+    * jobs it ran, how many of them were shortlist scans (a scan's result
+    * stage is named after the `treeAggregate` call site), and its stages. */
+  private def traced(items: DataFrame, k: Int, features: Column = col("f")) = {
     val sc = spark.sparkContext
     val group = "max-coverage-traced"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val scans = new java.util.concurrent.atomic.AtomicInteger
+    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRun]
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         if (Option(j.properties)
@@ -166,18 +174,26 @@ class MaxCoverageSpec extends SparkTestBase {
           jobs.incrementAndGet()
           if (j.stageInfos.exists(_.name.startsWith("treeAggregate at MaxCoverage")))
             scans.incrementAndGet()
+          j.stageIds.foreach(id => stageIds.add(id))
         }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        val info = s.stageInfo
+        if (stageIds.contains(info.stageId)) {
+          val w = info.taskMetrics.shuffleWriteMetrics
+          stages.add(StageRun(info.name, info.numTasks, w.recordsWritten, w.bytesWritten))
+        }
+      }
     }
     sc.addSparkListener(listener)
     val out = try {
       sc.setJobGroup(group, "greedySelect")
-      try MaxCoverage.greedySelect(items, "id", "f", k)
+      try MaxCoverage.greedySelect(items, "id", features, k)
       finally {
         sc.clearJobGroup()
         ListenerBridge.drain(sc)
       }
     } finally sc.removeSparkListener(listener)
-    (rows(out), jobs.get, scans.get)
+    (rows(out), jobs.get, scans.get, stages.asScala.toSeq)
   }
 
   test("job budget: the exchange's map stage plus one scan, none persisted") {
@@ -186,7 +202,7 @@ class MaxCoverageSpec extends SparkTestBase {
     val items = (0 until 40).flatMap(id =>
       (0 until 5).map(j => (id.toLong, s"f${(id * 3 + j) % 90}"))).toDF("id", "f")
     val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val (picked, jobs, scans) = traced(items, 12)
+    val (picked, jobs, scans, _) = traced(items, 12)
     assert(picked.size == 12)
     assert(jobs >= 1, "the listener saw no job")
     assert(jobs <= 2, s"$jobs jobs")
@@ -207,9 +223,63 @@ class MaxCoverageSpec extends SparkTestBase {
     val small = (10L until 40L).flatMap(id =>
       (0 until 1 + rnd.nextInt(8)).map(_ => (id, s"s${rnd.nextInt(40)}")))
     val items = rnd.shuffle(winner ++ copies ++ outsider ++ small)
-    val (got, _, scans) = traced(items.toDF("id", "f"), 3)
+    val (got, _, scans, _) = traced(items.toDF("id", "f"), 3)
     assert(scans >= 2, s"$scans scans")
     assert(got.take(2).map(_._2) == Seq(1L, 7L))
     assert(got == replay(items, 3), s"got $got")
+  }
+
+  test("exchange shape: the input rows cross it, features are built after it") {
+    // 30 input rows of 40 features each (64 hex chars apiece): building
+    // the features before the exchange writes 1,200 records, or 30 rows of
+    // about 2.6 KB each. 5 partitions is more than local[4]'s default
+    // parallelism, and few enough that `treeAggregate` merges in its result
+    // stage, without a level between.
+    val parts = 5
+    val input = (0 until 30).map(i => (i.toLong, i % 11)).toDF("id", "n")
+    val features = transform(sequence(lit(1), lit(40)),
+      j => sha2(concat_ws("-", col("n").cast("string"), j.cast("string")), 256))
+    val (got, _, scans, stages) =
+      withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        traced(input, 4, features)
+      }
+    val expanded = input.select(col("id"), explode(features)).as[(Long, String)].collect().toSeq
+    assert(got == replay(expanded, 4), s"got $got")
+    assert(scans == 1, s"$scans scans")
+    val (scan, exchange) = stages.partition(_.name.startsWith("treeAggregate at MaxCoverage"))
+    assert(exchange.map(_.records).sum == 30L, s"stages $stages")
+    assert(exchange.map(_.bytes).sum < 10000L, s"stages $stages")
+    assert(scan.map(_.tasks) == Seq(parts), s"stages $stages")
+  }
+
+  test("array features: seeded differential with split ids, null and empty arrays") {
+    val rnd = new scala.util.Random(23)
+    val random = (0 until 60).flatMap { id =>
+      (0 until 1 + rnd.nextInt(3)).map { _ =>
+        val fs: Seq[String] =
+          if (rnd.nextInt(10) == 0) null // a null array
+          else (0 until rnd.nextInt(9)).map(_ => // empty arrays included
+            if (rnd.nextInt(10) == 0) null else s"f${rnd.nextInt(150)}")
+        (java.lang.Long.valueOf(id.toLong), fs)
+      }
+    }
+    val edge = Seq[(java.lang.Long, Seq[String])](
+      (500L, null), // a null array only: never a candidate
+      (501L, Seq.empty), // an empty array only
+      (502L, Seq(null, null)), // null elements only
+      (503L, (0 until 30).map(j => s"d${j % 10}")), // 10 features, each thrice
+      (null, (0 until 40).map(j => s"n$j"))) // a null id would win round 1
+    val all = new scala.util.Random(24).shuffle(random ++ edge)
+    val df = spark.sparkContext.parallelize(all, 5).toDF("id", "fs")
+    val partsOf = df.select(col("id"), spark_partition_id()).as[(java.lang.Long, Int)]
+      .collect().filter(_._1 != null).groupBy(_._1).map { case (id, ps) => id -> ps.map(_._2).toSet }
+    assert(partsOf.values.count(_.size > 1) >= 5,
+      "several ids span more than one input partition")
+    val got = rows(MaxCoverage.greedySelect(df, "id", col("fs"), 10))
+    val pairs = all.collect { case (id, fs) if id != null && fs != null =>
+        fs.filter(_ != null).map(f => (id.longValue, f)) }.flatten
+    val exp = replay(pairs, 10)
+    assert(exp.map(_._2).contains(503L), "the duplicate-element candidate is picked")
+    assert(got == exp, s"got $got")
   }
 }
