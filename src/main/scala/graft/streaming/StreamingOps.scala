@@ -768,32 +768,46 @@ object StreamingOps {
   }
 
   /** Build the STATIC side of streaming incremental dedup from an existing
-    * corpus: one row per (store doc, band) with the doc's exact-match key, LSH
-    * band key, full distinct-shingle array and its size — everything
-    * [[incrementalDedupStream]] reads into its driver index, in one
-    * persistable table (this is the "persist the store's signatures once,
-    * they're ingest-invariant" artifact [[graft.ext.Dedup.incrementalDedup]]'s
-    * docs call for; write it out partitioned however the store is managed and
-    * hand it to every stream). Each row repeats its doc's shingle array once
-    * per band; the index keeps one copy per doc, from the band-0 row.
+    * corpus: one row per (store text row, band) with the row's md5 key
+    * `__hkey` and its id's LSH band key, distinct shingles `__ex_sh` and their
+    * count `__n_ex` — everything [[incrementalDedupStream]] reads into its
+    * driver index (one shingle array per id, from the band-0 row), in one
+    * persistable table: the "persist the store's signatures once" artifact
+    * [[graft.ext.Dedup.incrementalDedup]]'s docs call for.
+    *
+    * One scan and one exchange: the `(id, text)` rows with a non-null id are
+    * hash-partitioned on id into `spark.sql.shuffle.partitions` partitions (an
+    * explicit count, so adaptive execution does not coalesce them); after it
+    * each row gets its md5 key and the fused [[graft.functions.WordShingles]]
+    * and [[graft.functions.MinHashSigs]] kernels, and one aggregate per id
+    * collects the keys, unions the shingles and takes each signature
+    * component's min, which is exact because min ignores duplicates. An id
+    * whose texts are all null has no rows. With no join, a persisted store
+    * pins no broadcast relation in the driver's heap.
     */
   def dedupStore(existing: DataFrame, idCol: String, textCol: String,
                  k: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4)
       : DataFrame = {
-    val sh = graft.ext.Dedup.shingles(existing, idCol, textCol, k)
-    val perDoc = sh.groupBy(col(idCol)).agg(
-      collect_set(col("shingle")).as("__ex_sh"),
-      count(lit(1)).as("__n_ex"))
-    val banded = graft.ext.Dedup.bandKeys(
-      graft.ext.Dedup.signaturesFromShingles(sh, idCol, numHashes),
-      idCol, numHashes / rowsPerBand, rowsPerBand)
-    existing
-      .select(col(idCol).as("__ex_id"),
-        coalesce(md5(col(textCol)), lit("__null_text__")).as("__hkey"))
-      .join(perDoc.select(col(idCol).as("__ex_id"), col("__ex_sh"), col("__n_ex")),
-        Seq("__ex_id"))
-      .join(banded.select(col(idCol).as("__ex_id"), col("band"), col("bkey")),
-        Seq("__ex_id"))
+    val text = col(textCol)
+    val perRow = existing.select(col(idCol).as("__ex_id"), text)
+      .filter(col("__ex_id").isNotNull)
+      .repartition(existing.sparkSession.sessionState.conf.numShufflePartitions,
+        col("__ex_id"))
+      .select(col("__ex_id"),
+        coalesce(md5(text), lit("__null_text__")).as("__hkey"),
+        graft.functions.WordShingles.shingles(text, k).as("__sh"),
+        graft.functions.MinHashSigs.minhashSigs(text, k, numHashes).as("__sig"))
+    val perId = perRow.groupBy(col("__ex_id")).agg(
+        collect_list(col("__hkey")).as("__hkeys"),
+        array_distinct(flatten(collect_list(col("__sh")))).as("__ex_sh") +:
+          (0 until numHashes).map(j =>
+            min(element_at(col("__sig"), j + 1)).as(s"mh_$j")): _*)
+      .filter(size(col("__ex_sh")) > 0)
+      .withColumn("__n_ex", size(col("__ex_sh")).cast("long"))
+    graft.ext.Dedup.bandKeys(perId, "__ex_id", numHashes / rowsPerBand, rowsPerBand,
+        carryCols = Seq("__hkeys", "__ex_sh", "__n_ex"))
+      .select(col("__ex_id"), explode(col("__hkeys")).as("__hkey"),
+        col("__ex_sh"), col("__n_ex"), col("band"), col("bkey"))
   }
 
   /** Streaming twin of [[graft.ext.Dedup.incrementalDedup]]: classify ARRIVING
@@ -818,10 +832,11 @@ object StreamingOps {
     * driver out of memory.
     *
     * Per micro-batch the arriving docs get shingles, MinHash, band keys and
-    * md5 key from Catalyst expressions (transform/array_min over the doc's
-    * shingle hashes; same hash constants as the batch operator, so the
-    * candidates match it), then one narrow `mapPartitions` probes the index:
-    * no shuffle, no store scan, no job besides the sink's own.
+    * md5 key from Catalyst expressions (the fused
+    * [[graft.functions.MinHashSigs]] kernel [[dedupStore]] uses, so store and
+    * probe signatures cannot drift, and the batch operator's hash constants),
+    * then one narrow `mapPartitions` probes the index: no shuffle, no store
+    * scan, no job besides the sink's own.
     *
     * Emits (id, status, match_id, jaccard) rows:
     *  - `exact_dup`: md5 key found in the store (match_id = smallest holder
@@ -843,23 +858,22 @@ object StreamingOps {
                              k: Int = 3, numHashes: Int = 16,
                              rowsPerBand: Int = 4,
                              threshold: Double = 0.5): DataFrame = {
-    import graft.ext.Dedup.{minhashA, minhashB, MinhashPrime}
     val numBands = numHashes / rowsPerBand
     val docSh = array_distinct(
       graft.functions.WordShingles.shingles(col(textCol), k))
-    val hashes = transform(col("__sh"),
-      s => conv(substring(md5(s), 1, 8), 16, 10).cast("long"))
-    val mh = (0 until numHashes).map { j =>
-      array_min(transform(col("__h"),
-        h => (lit(minhashA(j)) * h + lit(minhashB(j))) % lit(MinhashPrime)))
-    }
+    // a null text has a null signature, so every band key is md5(''); the
+    // probe drops such a row unless its exact key matches
+    val mh = (0 until numHashes).map(j => element_at(col("__sig"), j + 1))
     val bandKeys = array((0 until numBands).map { b =>
       md5(concat_ws(",", (b * rowsPerBand until (b + 1) * rowsPerBand).map(mh): _*))
     }: _*)
 
+    // two projections on purpose: CollapseProject keeps the non-cheap kernel
+    // aliased once, so the signature computes one time per row
     val probes = stream.select(col(idCol), col(textCol))
       .withColumn("__sh", docSh)
-      .withColumn("__h", hashes)
+      .withColumn("__sig",
+        graft.functions.MinHashSigs.minhashSigs(col(textCol), k, numHashes))
       .select(col(idCol), col("__sh"),
         coalesce(md5(col(textCol)), lit("__null_text__")).as("__hkey"),
         bandKeys.as("__bkeys"))

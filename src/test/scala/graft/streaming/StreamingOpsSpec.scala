@@ -2,8 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestBase
 import graft.multimodal.Multimodal
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -301,6 +304,160 @@ class StreamingOpsSpec extends SparkTestBase {
     assert(rows.getMessage.contains("too large for the driver index: 8 rows"))
     val bytes = intercept[IllegalStateException](DedupIndex.build(store, maxBytes = 100L))
     assert(bytes.getMessage.contains("limits 512000000 rows and 100 bytes"))
+  }
+
+  /** The relational form `dedupStore` had before it was built from one
+    * exchange: per-shingle rows, the per-shingle MinHash aggregate and two
+    * joins (broadcast at this size). Kept verbatim as the reference for the
+    * store differential below. */
+  private def relationalDedupStore(existing: DataFrame, idCol: String, textCol: String,
+                                   k: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4)
+      : DataFrame = {
+    val sh = graft.ext.Dedup.shingles(existing, idCol, textCol, k)
+    val perDoc = sh.groupBy(col(idCol)).agg(
+      collect_set(col("shingle")).as("__ex_sh"),
+      count(lit(1)).as("__n_ex"))
+    val banded = graft.ext.Dedup.bandKeys(
+      graft.ext.Dedup.signaturesFromShingles(sh, idCol, numHashes),
+      idCol, numHashes / rowsPerBand, rowsPerBand)
+    existing
+      .select(col(idCol).as("__ex_id"),
+        coalesce(md5(col(textCol)), lit("__null_text__")).as("__hkey"))
+      .join(perDoc.select(col(idCol).as("__ex_id"), col("__ex_sh"), col("__n_ex")),
+        Seq("__ex_id"))
+      .join(banded.select(col(idCol).as("__ex_id"), col("band"), col("bkey")),
+        Seq("__ex_id"))
+  }
+
+  /** Exact multiset of store rows (id, hkey, sorted shingles, n_ex, band, bkey). */
+  private def storeRows(store: DataFrame)
+      : Map[(Any, String, Seq[String], Long, Int, String), Int] =
+    store.collect().toSeq.map(r => (r.get(0), r.getString(1),
+        r.getSeq[String](2).sorted, r.getLong(3), r.getInt(4), r.getString(5)))
+      .groupBy(identity).map { case (k, v) => k -> v.size }
+
+  test("dedupStore emits exactly the relational form's rows, for long and string ids") {
+    val rnd = new scala.util.Random(20261019L)
+    val vocab = (0 until 30).map(i => s"w$i")
+    def text(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val shared = text(16)
+    val random = (0 until 60).map(i =>
+      (s"r${i % 40}", if (rnd.nextInt(8) == 0) null else text(1 + rnd.nextInt(24))))
+    val repeated = text(9)
+    val corner = Seq(
+      ("two", text(14)), ("two", text(14)), // one id, two texts
+      ("null_only", null), ("null_only", null),
+      ("mixed", null), ("mixed", text(12)), // a null and a non-null text
+      ("empty", ""), ("short", "w1 w2"), // fewer words than k
+      (null, text(10)), (null, null), // null ids
+      ("shared_a", shared), ("shared_b", shared),
+      // "｡" sorts before "😀" in UTF-8 byte order, after it in UTF-16
+      ("｡", shared), ("😀", shared),
+      ("repeated", repeated), ("repeated", repeated)) // one row twice
+    val rows = new scala.util.Random(5L).shuffle(random ++ corner)
+    val byString = spark.sparkContext.parallelize(rows, 3).toDF("doc_id", "text")
+    val number = rows.collect { case (id, _) if id != null => id }.distinct.zipWithIndex.toMap
+    val byLong = spark.sparkContext.parallelize(rows.map { case (id, t) =>
+      (if (id == null) null else java.lang.Long.valueOf(number(id) * 7919L), t)
+    }, 3).toDF("doc_id", "text")
+
+    def check(df: DataFrame, k: Int, numHashes: Int, rowsPerBand: Int) = {
+      val ref = relationalDedupStore(df, "doc_id", "text", k, numHashes, rowsPerBand)
+      val got = StreamingOps.dedupStore(df, "doc_id", "text", k, numHashes, rowsPerBand)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        ref.schema.map(f => (f.name, f.dataType)))
+      val expected = storeRows(ref)
+      assert(storeRows(got) == expected)
+      expected
+    }
+    val numBands = 4
+    val strRows = check(byString, 3, 16, 4)
+    def idRows(id: Any) = strRows.filter(_._1._1 == id).values.sum
+    // the corpus reaches every case the differential is about
+    assert(idRows("two") == 2 * numBands && idRows("repeated") == 2 * numBands)
+    assert(strRows.keys.exists(r => r._1 == "mixed" && r._2 == "__null_text__"))
+    assert(idRows("null_only") == 0 && idRows(null) == 0)
+    assert(strRows.keys.exists(r => r._1 == "empty" && r._3 == Seq("")))
+    assert(strRows.keys.filter(_._1 == "two").map(_._4).forall(_ > 12L))
+    assert(Seq("shared_a", "｡", "😀").map(id =>
+      strRows.keys.filter(_._1 == id).map(r => (r._5, r._6)).toSet).distinct.size == 1)
+    check(byLong, 3, 16, 4)
+    check(byLong, 2, 8, 2)
+  }
+
+  test("dedupStore runs one scan and one exchange of the input rows, no broadcast") {
+    // Named in advance: the relational form scanned its input 3 times and
+    // ran 3 exchanges, the (id, shingle) rows among them, and 2 broadcast
+    // joins that a persisted store keeps reachable in the driver's heap.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    val rnd = new scala.util.Random(11L)
+    // 40 random 16-hex-digit words a text. Its id and text cross the
+    // exchange as about the text's bytes; its 38 three-word shingles, md5
+    // key and signature, built before the exchange, as 1.7 times them
+    val rows = (0 until 60).map { i =>
+      (if (i % 15 == 14) null else java.lang.Long.valueOf(i % 50L),
+        Seq.fill(40)(f"${rnd.nextLong()}%016x").mkString(" "))
+    }
+    val nonNull = rows.count(_._1 != null).toLong
+    val textBytes = rows.filter(_._1 != null).map(_._2.length.toLong).sum
+    val dir = graft.Scratch.register(
+      java.nio.file.Files.createTempDirectory("dedup_store_shape").toString)
+    rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(dir)
+
+    val parts = 5
+    val group = "dedup-store-shape"
+    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val mapStages = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          j.stageIds.foreach(id => stageIds.add(id))
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        val w = s.stageInfo.taskMetrics.shuffleWriteMetrics
+        if (stageIds.contains(s.stageInfo.stageId) && w.recordsWritten > 0)
+          mapStages.add((w.recordsWritten, w.bytesWritten))
+      }
+    }
+    val ctx = spark.sparkContext
+    val old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    ctx.addSparkListener(listener)
+    val store = StreamingOps.dedupStore(spark.read.parquet(dir), "doc_id", "text").persist()
+    try {
+      ctx.setJobGroup(group, "dedupStore")
+      try assert(store.count() == nonNull * 4)
+      finally {
+        ctx.clearJobGroup()
+        org.apache.spark.graftbridge.ListenerBridge.drain(ctx)
+      }
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => nodes(q.plan)
+        case m: InMemoryTableScanExec => nodes(m.relation.cacheBuilder.cachedPlan)
+        case other => (other.children ++ other.subqueries).flatMap(nodes)
+      })
+      val plan = nodes(store.queryExecution.executedPlan)
+      assert(plan.exists(_.isInstanceOf[InMemoryTableScanExec]), "the cached plan was read")
+      assert(plan.count(_.isInstanceOf[FileSourceScanExec]) == 1, s"scans in $plan")
+      assert(plan.count(_.isInstanceOf[ShuffleExchangeLike]) == 1, s"exchanges in $plan")
+      assert(!plan.exists(n => n.isInstanceOf[BroadcastExchangeLike] ||
+        n.nodeName.contains("Broadcast")), s"broadcasts in $plan")
+      // besides count()'s own exchange of one partial count per cached
+      // partition, one map stage: the input rows, each its id and text
+      val stages = mapStages.asScala.toSeq
+      val (own, countStage) = stages.partition(_._1 != parts)
+      assert(countStage.size == 1 && own.map(_._1) == Seq(nonNull), s"map stages $stages")
+      assert(own.head._2 < textBytes * 5 / 4, s"map stages $stages, $textBytes text bytes")
+    } finally {
+      store.unpersist()
+      ctx.removeSparkListener(listener)
+      spark.conf.set("spark.sql.shuffle.partitions", old)
+    }
   }
 
   test("dsirBucketCountsStream counts match the batch distribution and the " +
