@@ -20,11 +20,12 @@ import org.apache.spark.sql.execution.FormattedMode
   * the oracle checks.
   *
   * Usage: runMain graft.Bench [query ...]. Per query, stderr gets
-  *   BENCH <name> cold=<s> warm=<s>,<s>,... jobs= stages= tasks= shufKB= recs=
-  * where the counts (Spark jobs, stages, tasks, shuffle-write KiB and records,
-  * real executor metrics) come from a listener on the first warm rep and do
-  * not depend on machine load, though AQE's stage completion order can add a
-  * job between runs (q_mis), so compare repeated runs. Each query named
+  *   BENCH <name> cold=<s> warm=<s>,<s>,... jobs= stages= tasks= shufKB= recs= family=
+  * where `family` is the query's [[Catalog]] family ("-" for a query outside
+  * the catalog) and the counts (Spark jobs, stages, tasks, shuffle-write KiB
+  * and records, real executor metrics) come from a listener on the first warm
+  * rep and do not depend on machine load, though AQE's stage completion order
+  * can add a job between runs (q_mis), so compare repeated runs. Each query named
   * as an argument also gets its final adaptive plan on stderr. A query that
   * throws is reported on stderr, counted in "n_failed", left out of every
   * total, and makes the process exit 1 after the JSON line.
@@ -98,7 +99,8 @@ object Bench {
       System.err.println(f"BENCH $name%-24s cold=$cold%.3f " +
         s"warm=${warm.map(w => f"$w%.3f").mkString(",")} " +
         s"jobs=${tally.jobs} stages=${tally.stages} tasks=${tally.tasks} " +
-        s"shufKB=${tally.shuffleBytes.get / 1024} recs=${tally.shuffleRecords}")
+        s"shufKB=${tally.shuffleBytes.get / 1024} recs=${tally.shuffleRecords} " +
+        s"family=${Catalog.family(name).getOrElse("-")}")
       if (planFor(name)) {
         Harness.release(spark)
         val df = fn(spark, sfDir)

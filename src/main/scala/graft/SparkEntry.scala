@@ -1,216 +1,28 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.metrics._
-
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
   * Every query reads the driver-generated parquet tables under `dir`
   * (TESTDATA.md), computes one operator from SURVEY.md §2's inventory, and has a
   * DuckDB-equivalent oracle in [[oracleSql]] with identical column names, rounding
   * (6 decimals on floating-point outputs) and ORDER BY, so the driver's hash compare
-  * is deterministic.
+  * is deterministic. Both maps are views over [[Catalog]], where each query is
+  * declared once, with its oracle, in a domain-named family.
   */
 object SparkEntry {
-
-  /** Absolute root of the committed golden-fixture CSVs (tokenizer
-    * trainers) — absolute because the driver's DuckDB process has an
-    * unknown working directory. Overridable for foreign checkouts via
-    * `-Dgraft.fixture.root=...` or `GRAFT_FIXTURE_ROOT`; the default is
-    * this repo's canonical path.
-    */
-  val FixtureRoot: String =
-    sys.props.get("graft.fixture.root")
-      .orElse(sys.env.get("GRAFT_FIXTURE_ROOT"))
-      .getOrElse("/root/repo/fixtures")
+  import MetricsQueries.qNovelty
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     qNovelty(spark, "/root/testdata/sf0.001")
 
-  // ---------------------------------------------------------------------------
-  // Shared input shapes (each mirrored 1:1 in the oracle SQL CTEs)
-  // ---------------------------------------------------------------------------
-
-  /** "Sales" interactions: (user_id, item_id) from finalized orders. */
-  private[graft] def sales(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir).filter(col("o_orderstatus") === "F")
-    val l = Tables.lineitem(spark, dir)
-    o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("user_id"), col("l_partkey").as("item_id"))
-  }
-
-  /** "Recommendations": (user_id, item_id) from urgent orders — overlaps sales but
-    * includes items absent from it, exercising novelty's left-join null semantics
-    * (SURVEY.md §2.4.2).
-    */
-  private[graft] def recommendations(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir).filter(col("o_orderpriority") === "1-URGENT")
-    val l = Tables.lineitem(spark, dir)
-    o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("user_id"), col("l_partkey").as("item_id"))
-  }
-
-  private[graft] val salesSql =
-    """sales AS (SELECT o_custkey AS user_id, l_partkey AS item_id
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE o_orderstatus = 'F')""".stripMargin
-  private[graft] val recsSql =
-    """recs AS (SELECT o_custkey AS user_id, l_partkey AS item_id
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE o_orderpriority = '1-URGENT')""".stripMargin
-
-  // ---------------------------------------------------------------------------
-  // Queries (SURVEY.md §2.1 P1-P8)
-  // ---------------------------------------------------------------------------
-
-  /** P1 long_tail_plot → data-out long-tail distribution over lineitem part volume. */
-  def qLongTail(spark: SparkSession, dir: String): DataFrame =
-    LongTail.longTailDF(Tables.lineitem(spark, dir), "l_partkey", headPct = 0.5)
-      .withColumnRenamed("rank", "item_rank")
-      .withColumn("pct_of_total", round(col("pct_of_total"), 6))
-      .orderBy(col("item_rank"))
-
-  /** P2 coverage: distinct returned-flagged lineitem parts vs the part catalog. */
-  def qCoverage(spark: SparkSession, dir: String): DataFrame =
-    Coverage.coverageDF(
-      Tables.lineitem(spark, dir).filter(col("l_returnflag") === "R"),
-      Tables.part(spark, dir), "l_partkey", "p_partkey")
-
-  /** P5 novelty: per-user mean self-information of recommended items. */
-  def qNovelty(spark: SparkSession, dir: String): DataFrame =
-    Novelty.perUserMsi(sales(spark, dir), recommendations(spark, dir),
-        u = None, colUser = "user_id", colItem = "item_id")
-      .select(col("user_id"), round(col("msi"), 6).as("msi"))
-      .orderBy(col("user_id"))
-
-  /** P5 novelty, scalar form: mean msi over users (reference returns this first). */
-  def qNoveltyMean(spark: SparkSession, dir: String): DataFrame =
-    Novelty.perUserMsi(sales(spark, dir), recommendations(spark, dir),
-        u = None, colUser = "user_id", colItem = "item_id")
-      .agg(count(lit(1)).as("n_users"), round(avg(col("msi")), 6).as("mean_msi"))
-
-  /** P6 personalization over one nation's customers (all-pairs cosine is O(users²);
-    * the unbounded path is [[Personalization.personalizationDimsum]] — SURVEY.md §7.4).
-    */
-  def qPersonalization(spark: SparkSession, dir: String): DataFrame = {
-    val df = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .filter(col("c_nationkey") === 1)
-      .select(col("o_custkey").as("user_id"), col("l_partkey").as("item_id"))
-    Personalization.personalizationDF(df, "user_id", "item_id")
-  }
-
-  /** P8 intra-list similarity: per customer, cosine similarity among their purchased
-    * parts represented as brand×quantity vectors.
-    */
-  def qIntraList(spark: SparkSession, dir: String): DataFrame = {
-    val src = Tables.orders(spark, dir)
-      .join(Tables.lineitem(spark, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.part(spark, dir), col("l_partkey") === col("p_partkey"))
-      .select(col("o_custkey").as("user_id"), col("l_partkey").as("item_id"),
-        col("p_brand").as("feature"), col("l_quantity").as("value"))
-    IntraList.intraListSimilarity(src, "user_id", "item_id", "feature", "value")
-      .select(col("user_id"), col("n_items"), round(col("ils"), 6).as("ils"))
-      .orderBy(col("user_id"))
-  }
-
-  /** Per-user precision/recall of the urgent-order "recommendations" against
-    * finalized-order "sales" ([[RankingMetrics.precisionRecall]]) — the
-    * accuracy side of the metric family (coverage/novelty/personalization
-    * measure catalog reach and diversity).
-    */
-  def qRecPrecision(spark: SparkSession, dir: String): DataFrame =
-    RankingMetrics.precisionRecall(recommendations(spark, dir), sales(spark, dir),
-        "user_id", "item_id")
-      .orderBy(col("user"))
-
-  /** Mean reciprocal rank of the first sales hit in each user's
-    * frequency-ranked recommendation list ([[RankingMetrics.meanReciprocalRank]]).
-    */
-  def qMrr(spark: SparkSession, dir: String): DataFrame =
-    RankingMetrics.meanReciprocalRank(recommendations(spark, dir),
-      sales(spark, dir), "user_id", "item_id")
-
-  /** NDCG@10 of the urgent-order recommendations vs finalized-order sales
-    * ([[RankingMetrics.ndcgAtK]]) — completes the accuracy family
-    * (precision/recall, MRR, NDCG).
-    */
-  def qNdcg(spark: SparkSession, dir: String): DataFrame =
-    RankingMetrics.ndcgAtK(recommendations(spark, dir), sales(spark, dir),
-        "user_id", "item_id", k = 10)
-      .orderBy(col("user"))
-
-  /** Catalog coverage at k: the share of the part catalog that appears in ANY
-    * user's frequency-ranked top-3 recommendation list — the coverage@k
-    * refinement of P2's all-recommendations coverage (a recommender can touch
-    * the whole catalog in its tails while its HEAD — what users actually see —
-    * covers almost nothing; this measures the head).
-    */
-  def qCoverageAtK(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("n").desc, col("item_id"))
-    val topK = recommendations(spark, dir)
-      .groupBy(col("user_id"), col("item_id")).agg(count(lit(1)).as("n"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-    val nTop = topK.agg(countDistinct(col("item_id")).as("n_rec_items"))
-    val nCat = Tables.part(spark, dir)
-      .agg(countDistinct(col("p_partkey")).as("n_catalog"))
-    nTop.crossJoin(nCat)
-      .select(lit(3).as("k"), col("n_rec_items"), col("n_catalog"),
-        round(col("n_rec_items").cast("double") / col("n_catalog"), 6)
-          .as("coverage_at_k"))
-  }
-
-  /** Gini concentration of item interaction volume — the catalog-inequality
-    * companion of P1's long-tail curve (0 = uniform attention, → 1 = all
-    * volume on one item). Exact closed form on the ascending volume ranking:
-    * `G = 2·Σ(rank·vol) / (n·Σvol) − (n+1)/n`, with the rank from
-    * [[graft.ext.GlobalRank.globalRowNumber]] — no single-task sort — and
-    * every sum an exact integer, so both engines produce identical doubles.
-    */
-  def qGini(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.lineitem(spark, dir)
-      .groupBy(col("l_partkey")).agg(count(lit(1)).as("volume"))
-    val ranked = graft.ext.GlobalRank.globalRowNumber(
-      counts, Seq(col("volume"), col("l_partkey")))
-    ranked
-      .agg(count(lit(1)).as("n"), sum(col("volume")).as("s"),
-        sum(col("rn") * col("volume")).as("srw"))
-      .select(col("n"), col("s"),
-        round(lit(2.0) * col("srw") / (col("n") * col("s")) -
-          (col("n") + 1).cast("double") / col("n"), 6).as("gini"))
-  }
-
-  /** One entry per implemented operator from SURVEY.md §2 (+ north-star extensions
-    * from [[ExtQueries]]).
-    */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_long_tail" -> (qLongTail _),
-    "q_coverage" -> (qCoverage _),
-    "q_novelty" -> (qNovelty _),
-    "q_novelty_mean" -> (qNoveltyMean _),
-    "q_personalization" -> (qPersonalization _),
-    "q_intra_list" -> (qIntraList _),
-    "q_rec_precision" -> (qRecPrecision _),
-    "q_mrr" -> (qMrr _),
-    "q_ndcg" -> (qNdcg _),
-    "q_coverage_at_k" -> (qCoverageAtK _),
-    "q_gini" -> (qGini _)
-  ) ++ ExtQueries.queries ++ AnalyticsQueries.queries ++ InsightQueries.queries ++
-    FrontierQueries.queries ++ AtlasQueries.queries ++ VanguardQueries.queries ++
-    ZenithQueries.queries ++ SummitQueries.queries ++ PinnacleQueries.queries ++
-    ApexQueries.queries ++ TitanQueries.queries ++ OmegaQueries.queries ++ NexusQueries.queries ++
-    VertexQueries.queries ++ MeridianQueries.queries ++ HorizonQueries.queries ++
-    KeystoneQueries.queries ++ BeaconQueries.queries ++ CrestQueries.queries
+  /** Every catalog query by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Catalog.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables.
     */
   // Every oracle ships with its top-level CTEs forced to AS MATERIALIZED
   // (OracleCtes.materialize, applied once here): DuckDB inlines a CTE per
@@ -218,216 +30,7 @@ object SparkEntry {
   // q_hits spilled >60 GB of DuckDB temp at the sf1.0 value-hash gate
   // before the systematic guard (the r13 q_mis precedent). Results are
   // unchanged; Spark never parses these strings.
-  def oracleSql: Map[String, String] = oracleSqlRaw.map { case (k, v) =>
-    k -> OracleCtes.materialize(v)
+  def oracleSql: Map[String, String] = Catalog.byName.map { case (k, (s, _)) =>
+    k -> OracleCtes.materialize(s.oracleSql)
   }
-
-  private def oracleSqlRaw: Map[String, String] = Map(
-    "q_long_tail" ->
-      """WITH v AS (SELECT l_partkey, COUNT(*) AS volume FROM lineitem GROUP BY 1),
-        |w AS (SELECT l_partkey, volume,
-        |  ROW_NUMBER() OVER (ORDER BY volume DESC, l_partkey) AS item_rank,
-        |  CAST(SUM(volume) OVER (ORDER BY volume DESC, l_partkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_volume,
-        |  SUM(volume) OVER () AS total FROM v)
-        |SELECT l_partkey, volume, item_rank, cum_volume,
-        |  ROUND(cum_volume * 1.0 / total, 6) AS pct_of_total,
-        |  cum_volume * 1.0 / total <= 0.5 AS is_head
-        |FROM w ORDER BY item_rank""".stripMargin,
-    "q_coverage" ->
-      """SELECT n_recommended, n_catalog,
-        |  ROUND(n_recommended * 1.0 / n_catalog, 6) AS coverage
-        |FROM (SELECT COUNT(DISTINCT l_partkey) AS n_recommended
-        |      FROM lineitem WHERE l_returnflag = 'R')
-        |CROSS JOIN (SELECT COUNT(DISTINCT p_partkey) AS n_catalog FROM part)""".stripMargin,
-    "q_novelty" ->
-      s"""WITH $salesSql,
-        |$recsSql,
-        |pop AS (SELECT item_id, COUNT(*) AS pop_count FROM sales GROUP BY 1),
-        |uu AS (SELECT COUNT(DISTINCT user_id) AS u FROM sales),
-        |j AS (SELECT r.user_id, -log2(p.pop_count * 1.0 / (SELECT u FROM uu)) AS lg
-        |      FROM recs r LEFT JOIN pop p ON r.item_id = p.item_id)
-        |SELECT user_id, ROUND(SUM(lg) / COUNT(*), 6) AS msi
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_novelty_mean" ->
-      s"""WITH $salesSql,
-        |$recsSql,
-        |pop AS (SELECT item_id, COUNT(*) AS pop_count FROM sales GROUP BY 1),
-        |uu AS (SELECT COUNT(DISTINCT user_id) AS u FROM sales),
-        |j AS (SELECT r.user_id, -log2(p.pop_count * 1.0 / (SELECT u FROM uu)) AS lg
-        |      FROM recs r LEFT JOIN pop p ON r.item_id = p.item_id),
-        |m AS (SELECT user_id, SUM(lg) / COUNT(*) AS msi FROM j GROUP BY 1)
-        |SELECT COUNT(*) AS n_users, ROUND(AVG(msi), 6) AS mean_msi FROM m""".stripMargin,
-    "q_personalization" ->
-      """WITH dfp AS (SELECT o_custkey AS user_id, l_partkey AS item_id
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |  JOIN customer ON o_custkey = c_custkey WHERE c_nationkey = 1),
-        |c AS (SELECT user_id, item_id, COUNT(*) * 1.0 AS v FROM dfp GROUP BY 1, 2),
-        |n AS (SELECT user_id, SQRT(SUM(v * v)) AS nrm FROM c GROUP BY 1),
-        |d AS (SELECT a.user_id AS u1, b.user_id AS u2, SUM(a.v * b.v) AS dot
-        |      FROM c a JOIN c b ON a.item_id = b.item_id AND a.user_id < b.user_id
-        |      GROUP BY 1, 2),
-        |s AS (SELECT COALESCE(SUM(dot / (n1.nrm * n2.nrm)), 0) AS sum_sim
-        |      FROM d JOIN n n1 ON d.u1 = n1.user_id JOIN n n2 ON d.u2 = n2.user_id),
-        |nu AS (SELECT COUNT(DISTINCT user_id) AS n_users FROM dfp)
-        |SELECT n_users,
-        |  ROUND(1 - 2 * sum_sim / (n_users * (n_users - 1)), 6) AS personalization
-        |FROM nu CROSS JOIN s""".stripMargin,
-    "q_intra_list" ->
-      """WITH src AS (SELECT o_custkey AS user_id, l_partkey AS item_id,
-        |    p_brand AS feature, l_quantity AS value
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |  JOIN part ON l_partkey = p_partkey),
-        |f AS (SELECT user_id, item_id, feature, AVG(value) AS v FROM src GROUP BY 1, 2, 3),
-        |n AS (SELECT user_id, item_id, SQRT(SUM(v * v)) AS nrm FROM f GROUP BY 1, 2),
-        |ni AS (SELECT user_id, COUNT(*) AS n_items FROM n GROUP BY 1),
-        |p AS (SELECT a.user_id, a.item_id AS i1, b.item_id AS i2, SUM(a.v * b.v) AS dot
-        |      FROM f a JOIN f b ON a.user_id = b.user_id AND a.feature = b.feature
-        |        AND a.item_id < b.item_id
-        |      GROUP BY 1, 2, 3),
-        |s AS (SELECT p.user_id, SUM(dot / (n1.nrm * n2.nrm)) AS sum_sim FROM p
-        |      JOIN n n1 ON p.user_id = n1.user_id AND p.i1 = n1.item_id
-        |      JOIN n n2 ON p.user_id = n2.user_id AND p.i2 = n2.item_id
-        |      GROUP BY 1)
-        |SELECT ni.user_id, ni.n_items,
-        |  ROUND(COALESCE(sum_sim, 0) / (n_items * (n_items - 1) / 2.0), 6) AS ils
-        |FROM ni LEFT JOIN s ON ni.user_id = s.user_id
-        |WHERE n_items >= 2 ORDER BY 1""".stripMargin,
-    "q_rec_precision" ->
-      s"""WITH $salesSql,
-        |$recsSql,
-        |r AS (SELECT DISTINCT user_id AS "user", item_id AS item FROM recs),
-        |a AS (SELECT DISTINCT user_id AS "user", item_id AS item FROM sales),
-        |nr AS (SELECT "user", COUNT(*) AS n_recs FROM r GROUP BY 1),
-        |na AS (SELECT "user", COUNT(*) AS n_actual FROM a GROUP BY 1),
-        |h AS (SELECT r."user", COUNT(*) AS n_hit
-        |      FROM r JOIN a ON r."user" = a."user" AND r.item = a.item GROUP BY 1)
-        |SELECT COALESCE(nr."user", na."user") AS "user",
-        |  COALESCE(n_recs, 0) AS n_recs, COALESCE(n_actual, 0) AS n_actual,
-        |  COALESCE(n_hit, 0) AS n_hit,
-        |  ROUND(COALESCE(n_hit, 0) * 1.0 / NULLIF(COALESCE(n_recs, 0), 0), 6)
-        |    AS precision,
-        |  ROUND(COALESCE(n_hit, 0) * 1.0 / NULLIF(COALESCE(n_actual, 0), 0), 6)
-        |    AS recall
-        |FROM nr FULL OUTER JOIN na ON nr."user" = na."user"
-        |LEFT JOIN h ON COALESCE(nr."user", na."user") = h."user"
-        |ORDER BY 1""".stripMargin,
-    "q_mrr" ->
-      s"""WITH $salesSql,
-        |$recsSql,
-        |rc AS (SELECT user_id, item_id, COUNT(*) AS n FROM recs GROUP BY 1, 2),
-        |rk AS (SELECT user_id, item_id,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY n DESC, item_id)
-        |      AS rnk FROM rc),
-        |a AS (SELECT DISTINCT user_id, item_id FROM sales),
-        |fh AS (SELECT rk.user_id, MIN(rnk) AS first_hit
-        |  FROM rk JOIN a ON rk.user_id = a.user_id AND rk.item_id = a.item_id
-        |  GROUP BY 1),
-        |u AS (SELECT DISTINCT user_id FROM rc)
-        |SELECT COUNT(*) AS n_users, COUNT(first_hit) AS n_users_hit,
-        |  ROUND(CAST(SUM(COALESCE(CAST(1.0::DOUBLE / first_hit AS DECIMAL(18,8)),
-        |      CAST(0 AS DECIMAL(18,8)))) AS DOUBLE) / COUNT(*), 6) AS mrr
-        |FROM u LEFT JOIN fh ON u.user_id = fh.user_id""".stripMargin,
-    "q_ndcg" ->
-      s"""WITH $salesSql,
-        |$recsSql,
-        |rc AS (SELECT user_id, item_id, COUNT(*) AS n FROM recs GROUP BY 1, 2),
-        |rk AS (SELECT user_id, item_id,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY n DESC, item_id)
-        |      AS rnk FROM rc QUALIFY rnk <= 10),
-        |a AS (SELECT DISTINCT user_id, item_id FROM sales),
-        |dcg AS (SELECT rk.user_id,
-        |    SUM(CAST(0.6931471805599453 / ln(rnk + 1) AS DECIMAL(18,8))) AS dcg
-        |  FROM rk JOIN a ON rk.user_id = a.user_id AND rk.item_id = a.item_id
-        |  GROUP BY 1),
-        |na AS (SELECT user_id, COUNT(*) AS n_actual FROM a GROUP BY 1),
-        |idcg AS (SELECT user_id, n_actual,
-        |    SUM(CAST(0.6931471805599453 / ln(i + 1) AS DECIMAL(18,8))) AS idcg
-        |  FROM (SELECT user_id, n_actual,
-        |      unnest(generate_series(1, least(10, n_actual))) AS i FROM na)
-        |  GROUP BY 1, 2)
-        |SELECT idcg.user_id AS "user", idcg.n_actual,
-        |  ROUND(CAST(COALESCE(dcg, 0) AS DOUBLE), 6) AS dcg,
-        |  ROUND(CAST(idcg AS DOUBLE), 6) AS idcg,
-        |  ROUND(CAST(COALESCE(dcg, 0) AS DOUBLE) / CAST(idcg AS DOUBLE), 6) AS ndcg
-        |FROM idcg LEFT JOIN dcg ON idcg.user_id = dcg.user_id
-        |ORDER BY 1""".stripMargin,
-    "q_coverage_at_k" ->
-      s"""WITH $recsSql,
-        |rc AS (SELECT user_id, item_id, COUNT(*) AS n FROM recs GROUP BY 1, 2),
-        |tk AS (SELECT user_id, item_id,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY n DESC, item_id)
-        |      AS rnk FROM rc QUALIFY rnk <= 3)
-        |SELECT 3 AS k,
-        |  (SELECT COUNT(DISTINCT item_id) FROM tk) AS n_rec_items,
-        |  (SELECT COUNT(DISTINCT p_partkey) FROM part) AS n_catalog,
-        |  ROUND((SELECT COUNT(DISTINCT item_id) FROM tk) * 1.0 /
-        |        (SELECT COUNT(DISTINCT p_partkey) FROM part), 6)
-        |    AS coverage_at_k""".stripMargin,
-    "q_gini" ->
-      """WITH c AS (SELECT l_partkey, COUNT(*) AS volume FROM lineitem GROUP BY 1),
-        |r AS (SELECT volume,
-        |    ROW_NUMBER() OVER (ORDER BY volume, l_partkey) AS rn FROM c),
-        |s AS (SELECT COUNT(*) AS n, CAST(SUM(volume) AS BIGINT) AS s,
-        |    CAST(SUM(rn * volume) AS BIGINT) AS srw FROM r)
-        |SELECT n, s,
-        |  ROUND(2.0 * srw / (n * s) - (n + 1) * 1.0 / n, 6) AS gini
-        |FROM s""".stripMargin,
-
-    // -------------------------------------------------------------------
-    // Tokenizer-trainer golden fixtures: the BPE merge loop and unigram
-    // EM/prune recurrences are not SQL-expressible, so their oracles READ
-    // the committed per-SF fixtures under fixtures/<sf>/ instead of
-    // recomputing. Each fixture is generated by graft.FixtureGen from an
-    // INDEPENDENT single-threaded reference implementation (the
-    // BpeTrainSpec/UnigramLmSpec differential pattern) and FixtureGen
-    // refuses to write a fixture that the live engine query does not
-    // match bit-for-bit — so these rows give the driver a real value-hash
-    // gate, not a rows-only check. `__GRAFT_SF__` is substituted with the
-    // scale-factor directory name by Verify at dump time.
-    // -------------------------------------------------------------------
-    "q_bpe_train" ->
-      s"""SELECT rank, "left", "right", pair_freq
-        |FROM read_csv('$FixtureRoot/__GRAFT_SF__/q_bpe_train.csv',
-        |  header=true, columns={'rank':'INTEGER','left':'VARCHAR',
-        |  'right':'VARCHAR','pair_freq':'BIGINT'})
-        |ORDER BY rank""".stripMargin,
-    "q_bpe_encode" ->
-      s"""SELECT doc_id, n_tokens, n_words
-        |FROM read_csv('$FixtureRoot/__GRAFT_SF__/q_bpe_encode.csv',
-        |  header=true, columns={'doc_id':'BIGINT','n_tokens':'BIGINT',
-        |  'n_words':'BIGINT'})
-        |ORDER BY doc_id""".stripMargin,
-    "q_tokenizer_fertility" ->
-      s"""SELECT lang, n_docs, n_words, n_tokens, fertility, chars_per_token
-        |FROM read_csv('$FixtureRoot/__GRAFT_SF__/q_tokenizer_fertility.csv',
-        |  header=true, columns={'lang':'VARCHAR','n_docs':'BIGINT',
-        |  'n_words':'BIGINT','n_tokens':'BIGINT','fertility':'DOUBLE',
-        |  'chars_per_token':'DOUBLE'})
-        |ORDER BY lang""".stripMargin,
-    "q_unigram_train" ->
-      s"""SELECT rank, piece, count, logp
-        |FROM read_csv('$FixtureRoot/__GRAFT_SF__/q_unigram_train.csv',
-        |  header=true, columns={'rank':'BIGINT','piece':'VARCHAR',
-        |  'count':'BIGINT','logp':'DOUBLE'})
-        |ORDER BY rank""".stripMargin,
-    "q_unigram_encode" ->
-      s"""SELECT doc_id, n_tokens, n_words
-        |FROM read_csv('$FixtureRoot/__GRAFT_SF__/q_unigram_encode.csv',
-        |  header=true, columns={'doc_id':'BIGINT','n_tokens':'BIGINT',
-        |  'n_words':'BIGINT'})
-        |ORDER BY doc_id""".stripMargin,
-    "q_unigram_fertility" ->
-      s"""SELECT grp, n_docs, n_words, n_tokens, fertility, chars_per_token
-        |FROM read_csv('$FixtureRoot/__GRAFT_SF__/q_unigram_fertility.csv',
-        |  header=true, columns={'grp':'VARCHAR','n_docs':'BIGINT',
-        |  'n_words':'BIGINT','n_tokens':'BIGINT','fertility':'DOUBLE',
-        |  'chars_per_token':'DOUBLE'})
-        |ORDER BY grp""".stripMargin
-  ) ++ ExtQueries.oracleSql ++ AnalyticsQueries.oracleSql ++ InsightQueries.oracleSql ++
-    FrontierQueries.oracleSql ++ AtlasQueries.oracleSql ++ VanguardQueries.oracleSql ++
-    ZenithQueries.oracleSql ++ SummitQueries.oracleSql ++ PinnacleQueries.oracleSql ++
-    ApexQueries.oracleSql ++ TitanQueries.oracleSql ++ OmegaQueries.oracleSql ++ NexusQueries.oracleSql ++
-    VertexQueries.oracleSql ++ MeridianQueries.oracleSql ++ HorizonQueries.oracleSql ++
-    KeystoneQueries.oracleSql ++ BeaconQueries.oracleSql ++ CrestQueries.oracleSql
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * shuffle of left+right keyed by the join key plus a per-key sort — the same
   * profile as sessionize, and the same whale-key caveat (a key holding a large
   * fraction of both sides serializes its partition; pre-aggregate the right
-  * side per (key, time) — as [[graft.ExtQueries.qAsofLastOrder]] does — to keep
+  * side per (key, time) — as [[graft.RelationalQueries.qAsofLastOrder]] does — to keep
   * timelines short).
   *
   * At equal timestamps the right row sorts FIRST (side flag), so a right row

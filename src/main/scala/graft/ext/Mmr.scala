@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * double-accumulator dot ([[SimSearch.dot]]), `max` is order-independent,
   * and every argmax tie-breaks by ascending id — so any engine computing the
   * same formula picks the same rows (the generated DuckDB oracle in
-  * [[graft.VanguardQueries]] unrolls the identical greedy steps).
+  * [[graft.SimilarityQueries]] unrolls the identical greedy steps).
   *
   * Step 1 has an empty selected set: its score is `λ·rel − (1−λ)·0`,
   * consistent with the general formula.

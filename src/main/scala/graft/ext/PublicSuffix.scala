@@ -33,9 +33,9 @@ import org.apache.spark.sql.functions._
 object PublicSuffix {
 
   /** Default committed rule table (repo fixture; overridable like the
-    * tokenizer fixtures via graft.SparkEntry.FixtureRoot).
+    * tokenizer fixtures via graft.Inputs.FixtureRoot).
     */
-  def defaultRulesPath: String = s"${graft.SparkEntry.FixtureRoot}/psl.csv"
+  def defaultRulesPath: String = s"${graft.Inputs.FixtureRoot}/psl.csv"
 
   /** Loads and GROUPS the rule table: one row per concrete suffix base
     * with `has_exact` / `has_wildcard` / `has_exception` flags (a base can

@@ -15,7 +15,7 @@ object SimSearch {
 
   /** Deterministic ±1 hyperplane sign for (dimension i, plane p) — the single source
     * of truth shared by the LSH operators here, [[Dedup.embeddingDupPairs]], and the
-    * generated SQL oracles in [[graft.ExtQueries]].
+    * generated SQL oracles ([[graft.Inputs.lshBucketPlanesSql]]).
     */
   def planeSign(i: Int, p: Int): Double =
     if (((i + p) * 2654435761L >>> 13) % 2 == 0) 1.0 else -1.0

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * — exactly `conv(substring(md5(concat(a, ':', b)), 1, 13), 16, 10)`.
   *
   * Why an expression: deterministic popularity-proposal negative sampling
-  * ([[graft.InsightQueries.qNegativeSamples]]) evaluates this pick once per
+  * ([[graft.MetricsQueries.qNegativeSamples]]) evaluates this pick once per
   * (user, candidate) — #users × 200 rows, the suite's largest per-row
   * expression bill. The built-in chain allocates, per row, a UTF8String
   * concat, a 32-char hex STRING from `md5`, a substring slice, and a

@@ -29,36 +29,26 @@ class SparkEntrySpec extends AnyFunSuite {
       "allowlisted query gained an oracle - remove it from rowsOnlyQueries")
   }
 
-  test("no query name is defined by two registries (Map ++ would silently " +
-      "shadow the earlier one — caught a q_dsir_weights collision in r13)") {
-    val registries: Seq[(String, Set[String])] = Seq(
-      "ExtQueries" -> ExtQueries.queries.keySet,
-      "AnalyticsQueries" -> AnalyticsQueries.queries.keySet,
-      "InsightQueries" -> InsightQueries.queries.keySet,
-      "FrontierQueries" -> FrontierQueries.queries.keySet,
-      "AtlasQueries" -> AtlasQueries.queries.keySet,
-      "VanguardQueries" -> VanguardQueries.queries.keySet,
-      "ZenithQueries" -> ZenithQueries.queries.keySet,
-      "SummitQueries" -> SummitQueries.queries.keySet,
-      "PinnacleQueries" -> PinnacleQueries.queries.keySet,
-      "ApexQueries" -> ApexQueries.queries.keySet,
-      "TitanQueries" -> TitanQueries.queries.keySet,
-      "OmegaQueries" -> OmegaQueries.queries.keySet,
-      "NexusQueries" -> NexusQueries.queries.keySet,
-      "VertexQueries" -> VertexQueries.queries.keySet,
-      "MeridianQueries" -> MeridianQueries.queries.keySet,
-      "HorizonQueries" -> HorizonQueries.queries.keySet,
-      "KeystoneQueries" -> KeystoneQueries.queries.keySet,
-      "BeaconQueries" -> BeaconQueries.queries.keySet,
-      "CrestQueries" -> CrestQueries.queries.keySet)
-    val dups = registries.combinations(2).flatMap { case Seq((na, a), (nb, b)) =>
-      (a & b).map(k => s"$k in $na and $nb")
-    }.toSeq
-    assert(dups.isEmpty, s"shadowed query names: $dups")
-    val totalDeclared = registries.map(_._2.size).sum
-    val base = SparkEntry.queries.keySet -- registries.flatMap(_._2)
-    assert(base.size + totalDeclared == SparkEntry.queries.size,
-      "SparkEntry base map shadows or is shadowed by a registry")
+  test("a duplicate name fails the catalog, naming both families") {
+    def family(n: String, names: String*): QueryFamily = new QueryFamily(n) {
+      val specs: Seq[QuerySpec] =
+        names.map(q => QuerySpec(q, (_, _) => null, "SELECT 1"))
+    }
+    val e = intercept[IllegalArgumentException](Catalog.index(Seq(
+      family("alpha", "q_a", "q_shared"), family("beta", "q_b"),
+      family("gamma", "q_shared"))))
+    assert(e.getMessage.contains("q_shared"), e.getMessage)
+    assert(e.getMessage.contains("alpha") && e.getMessage.contains("gamma"),
+      e.getMessage)
+  }
+
+  test("the catalog holds 406 distinct q_ names and no empty family") {
+    val declared = Catalog.families.flatMap(_.specs.map(_.name))
+    assert(declared.size == 406, declared.size)
+    assert(declared.distinct.size == declared.size)
+    assert(SparkEntry.queries.size == 406)
+    Catalog.families.foreach(f => assert(f.specs.nonEmpty, s"${f.name} is empty"))
+    assert(Catalog.families.map(_.name).distinct.size == Catalog.families.size)
   }
 
   test("query names follow the q_ convention and are non-empty SQL") {

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** ScalaCheck properties for the round-8 ApexQueries operator batches —
-  * invariants that hold for EVERY input, on generated data with fixed seeds
-  * (the Round8PropertiesSpec convention).
+/** ScalaCheck properties for graft.ext operators behind catalog queries of
+  * the stats, similarity, text and metrics families — invariants that hold
+  * for EVERY input, on generated data with fixed seeds (the
+  * Round8PropertiesSpec convention).
   */
 class ApexPropertiesSpec extends SparkTestBase {
   import spark.implicits._

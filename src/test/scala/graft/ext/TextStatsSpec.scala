@@ -34,7 +34,7 @@ class TextStatsSpec extends SparkTestBase {
   }
 
   test("langIdMulti classifies each profile language, unk with zero hits") {
-    val df = graft.ExtQueries.langFixture.toDF("doc_id", "text")
+    val df = graft.TextQueries.langFixture.toDF("doc_id", "text")
     val out = TextStats.langIdMultiDF(df, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     assert(out(1L)._1 == "en" && out(2L)._1 == "es" &&
