@@ -820,8 +820,9 @@ object RelationalQueries extends QueryFamily("relational") {
   /** Referential-integrity audit across the warehouse's FK chains — the
     * data-quality gate a pipeline runs on every drop (generated data is
     * clean, so the sf oracle run is a zero-orphans regression check; the
-    * orphan-detection logic itself is fixture-tested in
-    * InsightQueriesSpec, the q_customers_no_orders precedent).
+    * orphan-detection logic itself, NULL child keys included, is
+    * fixture-tested in RelationalQueriesSpec, next to the
+    * q_customers_no_orders precedent).
     */
   def qFkIntegrity(spark: SparkSession, dir: String): DataFrame = {
     // ONE pass per child: LEFT join against the parent's DISTINCT keys

@@ -222,16 +222,19 @@ object Dedup {
     * [[signaturesFromShingles]]'s aggregate over DISTINCT shingles
     * (differential spec), with ZERO shuffle before banding. The aggregate
     * form remains the path for pre-filtered shingle sets (stop-shingle cut,
-    * incremental-store deltas).
+    * incremental-store deltas). `carryCols` ride along after the id, as in
+    * [[bandKeys]].
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        k: Int = 3, numHashes: Int = 16): DataFrame = {
+                        k: Int = 3, numHashes: Int = 16,
+                        carryCols: Seq[String] = Nil): DataFrame = {
+    val keep = (idCol +: carryCols).map(col)
     // two projections on purpose: CollapseProject keeps the non-cheap kernel
     // aliased once, so the array computes one time per row, not per column
-    val withSig = df.select(col(idCol),
+    val withSig = df.select(keep :+
       graft.functions.MinHashSigs.minhashSigs(col(textCol), k, numHashes)
-        .as("__sig"))
-    withSig.select(col(idCol) +: (0 until numHashes).map(j =>
+        .as("__sig"): _*)
+    withSig.select(keep ++ (0 until numHashes).map(j =>
       element_at(col("__sig"), j + 1).as(s"mh_$j")): _*)
   }
 

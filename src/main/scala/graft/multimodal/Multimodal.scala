@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -97,7 +97,6 @@ object Multimodal {
     */
   def perceptualDupPairs(df: DataFrame, idCol: String, mediaCol: String,
                          maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 15, "need 0 <= maxHamming <= 15")
     val mediaIdx = df.schema.fieldIndex(mediaCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val idField = df.schema(idCol)
@@ -114,22 +113,37 @@ object Multimodal {
     bandedHammingPairs(hashed, idCol, "dhash", maxHamming)
   }
 
+  /** The pigeonhole band layout of a 64-bit fingerprint, as an
+    * `array<struct<band: int, bits: long>>` to explode: `maxHamming + 1`
+    * bands of `64 / (maxHamming + 1)` bits, so two fingerprints within
+    * `maxHamming` bits agree exactly on at least one band. The batch banded
+    * joins below and the streaming twins
+    * ([[graft.streaming.StreamingOps.fingerprintCandidatesStreamTtl]],
+    * [[graft.streaming.StreamingOps.shingleCandidatesStreamTtl]]) all band
+    * through here, which is what keeps the streamed pairs a subset of the
+    * batch pairs.
+    */
+  private[graft] def hammingBands(fp: Column, maxHamming: Int): Column = {
+    require(maxHamming >= 0 && maxHamming <= 15,
+      s"need 0 <= maxHamming <= 15, got $maxHamming")
+    val nBands = maxHamming + 1
+    val bandBits = 64 / nBands
+    val mask = (1L << bandBits) - 1
+    array((0 until nBands).map { b =>
+      struct(lit(b).as("band"),
+        shiftrightunsigned(fp, b * bandBits).bitwiseAND(lit(mask)).as("bits"))
+    }: _*)
+  }
+
   /** Pigeonhole-banded Hamming join over a 64-bit hash column — the shared
     * candidate-generation core of [[perceptualDupPairs]] (image dHash) and
-    * [[audioDupPairs]] (audio envelope fingerprint): maxHamming + 1 bands,
-    * so any pair within the bound collides on at least one band (exact
+    * [[audioDupPairs]] (audio envelope fingerprint): [[hammingBands]], so
+    * any pair within the bound collides on at least one band (exact
     * recall), candidates verified with `bit_count(xor)`. Never corpus².
     */
   private def bandedHammingPairs(hashed: DataFrame, idCol: String,
                                  hashCol: String, maxHamming: Int): DataFrame = {
-    val nBands = maxHamming + 1
-    val bandBits = 64 / nBands
-    val mask = (1L << bandBits) - 1
-    val bands = explode(array((0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col(hashCol), b * bandBits).bitwiseAND(lit(mask))
-          .as("bits"))
-    }: _*))
+    val bands = explode(hammingBands(col(hashCol), maxHamming))
     val banded = hashed.select(col(idCol), col(hashCol), bands.as("__bb"))
       .select(col(idCol), col(hashCol),
         col("__bb.band").as("band"), col("__bb.bits").as("bits"))
@@ -224,7 +238,6 @@ object Multimodal {
     */
   def audioDupPairs(df: DataFrame, idCol: String, mediaCol: String,
                     maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 15, "need 0 <= maxHamming <= 15")
     val mediaIdx = df.schema.fieldIndex(mediaCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val idField = df.schema(idCol)
@@ -361,7 +374,6 @@ object Multimodal {
     */
   def videoDupPairs(df: DataFrame, idCol: String, mediaCol: String,
                     maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 15, "need 0 <= maxHamming <= 15")
     val mediaIdx = df.schema.fieldIndex(mediaCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val idField = df.schema(idCol)
@@ -420,7 +432,6 @@ object Multimodal {
   def audioDupPairsShifted(df: DataFrame, idCol: String, mediaCol: String,
                            maxHamming: Int = 3, windowFrames: Int = 256,
                            maxShingles: Int = 256): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 15, "need 0 <= maxHamming <= 15")
     val mediaIdx = df.schema.fieldIndex(mediaCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val shingled = df.sparkSession.createDataFrame(
@@ -442,7 +453,6 @@ object Multimodal {
   def videoDupPairsShifted(df: DataFrame, idCol: String, mediaCol: String,
                            maxHamming: Int = 3, windowBytes: Int = 256,
                            maxShingles: Int = 256): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 15, "need 0 <= maxHamming <= 15")
     val mediaIdx = df.schema.fieldIndex(mediaCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val shingled = df.sparkSession.createDataFrame(
@@ -477,7 +487,6 @@ object Multimodal {
                                   windowFrames: Int = 256,
                                   hopFrames: Int = 64,
                                   maxShingles: Int = 256): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 15, "need 0 <= maxHamming <= 15")
     val mediaIdx = df.schema.fieldIndex(mediaCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val shingled = df.sparkSession.createDataFrame(
@@ -502,7 +511,6 @@ object Multimodal {
                                   windowBytes: Int = 256,
                                   hopBytes: Int = 64,
                                   maxShingles: Int = 256): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 15, "need 0 <= maxHamming <= 15")
     val mediaIdx = df.schema.fieldIndex(mediaCol)
     val idIdx = df.schema.fieldIndex(idCol)
     val shingled = df.sparkSession.createDataFrame(
@@ -687,14 +695,7 @@ object Multimodal {
                                         maxHamming: Int,
                                         offsetName: String = "offset_windows")
       : DataFrame = {
-    val nBands = maxHamming + 1
-    val bandBits = 64 / nBands
-    val mask = (1L << bandBits) - 1
-    val bands = explode(array((0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("fp"), b * bandBits).bitwiseAND(lit(mask))
-          .as("bits"))
-    }: _*))
+    val bands = explode(hammingBands(col("fp"), maxHamming))
     val banded = shingled
       .select(col(idCol), col("s"), col("fp"), bands.as("__bb"))
       .select(col(idCol), col("s"), col("fp"),

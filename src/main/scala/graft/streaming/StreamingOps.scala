@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
@@ -64,70 +64,99 @@ object StreamingOps {
 
   final case class CandidatePair(id_a: Long, id_b: Long)
 
+  /** The canonical-chain bucket state machine every near-dup twin below
+    * runs. Each row of `df` is one arrival (`arrival`, `ts`) in one bucket
+    * (`key`); a bucket's state is its canonical arrival. Per visit, a
+    * bucket that timed out drops its state; otherwise its distinct arrivals
+    * are taken in `order`: the first seeds an empty bucket, an arrival with
+    * the canonical's id refreshes it (never self-pairs), and any other
+    * arrival goes to `pair` with the canonical, then takes over when its id
+    * is smaller. `key` and `arrival` are one column for a plain value or
+    * several for a tuple. `ttlMs = Some(t)` re-arms an event-time timeout at
+    * `max(last event time + t, watermark + 1)` (a timeout must stay above
+    * the watermark to be settable); `None` keeps state without a timeout
+    * and never reads `ts`.
+    *
+    * The trade every twin documents: two non-canonical arrivals never pair
+    * with EACH OTHER, only with the canonical (three same-batch copies
+    * a < b < c emit (a, b) and (a, c), never (b, c)), so a hot bucket grows
+    * pairs linearly in arrivals, never quadratically; and a duplicate
+    * arriving after its bucket expired re-seeds instead of pairing. The
+    * batch twin is the exact backstop for both.
+    */
+  private def canonicalChain[K: Encoder, S: Encoder, O: Encoder](
+      df: DataFrame, key: Seq[Column], arrival: Seq[Column], ts: Column,
+      ttlMs: Option[Long], id: S => Long, order: Ordering[S])(
+      pair: (S, S) => Option[O]): Dataset[O] = {
+    ttlMs.foreach(t => require(t > 0, s"ttlMs must be positive, got $t"))
+    def tuple(cs: Seq[Column]): Column =
+      if (cs.size == 1) cs.head
+      else struct(cs.zipWithIndex.map { case (c, i) => c.as(s"_${i + 1}") }: _*)
+    val timeout = ttlMs.fold(GroupStateTimeout.NoTimeout)(
+      _ => GroupStateTimeout.EventTimeTimeout)
+    df.select(tuple(key).as("_1"), tuple(arrival).as("_2"), ts.as("_3"))
+      .as(Encoders.tuple(implicitly[Encoder[K]], implicitly[Encoder[S]],
+        Encoders.TIMESTAMP))
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[S, O](OutputMode.Append, timeout) {
+        (_: K, it: Iterator[(K, S, Timestamp)], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            val rows = it.toSeq
+            val out = scala.collection.mutable.ArrayBuffer[O]()
+            var canon = state.getOption
+            rows.map(_._2).distinct.sorted(order).foreach { a =>
+              canon match {
+                case Some(c) if id(a) != id(c) =>
+                  out ++= pair(c, a)
+                  if (id(a) < id(c)) canon = Some(a)
+                // an empty bucket seeds; the canonical's own id refreshes it
+                case _ => canon = Some(a)
+              }
+            }
+            canon.foreach { c =>
+              state.update(c)
+              ttlMs.foreach(t => state.setTimeoutTimestamp(math.max(
+                rows.map(_._3.getTime).max + t, state.getCurrentWatermarkMs() + 1)))
+            }
+            out.iterator
+          }
+      }
+  }
+
+  /** Both ids of a bucket's canonical and a new arrival, smaller first. */
+  private val idPair: (Long, Long) => Option[CandidatePair] =
+    (c, a) => Some(CandidatePair(math.min(c, a), math.max(c, a)))
+
   /** Streaming MinHash+LSH near-dup candidate detection — the incremental twin of
     * [[graft.ext.Dedup.minhashLshPairs]]'s candidate-generation stage. Arriving
-    * documents are signed and banded with the SAME hash family as the batch
-    * operator; state is one Long per occupied band bucket (the bucket's canonical
-    * = minimum doc id), and a document landing in an occupied bucket emits a
-    * `(canonical, doc)` candidate pair.
+    * documents are signed and banded exactly as the batch operator does
+    * ([[graft.ext.Dedup.minhashSignatures]] over the fused
+    * [[graft.functions.MinHashSigs]] kernel, then [[graft.ext.Dedup.bandKeys]]);
+    * state is one Long per occupied band bucket (the bucket's canonical =
+    * minimum doc id), and a document landing in an occupied bucket emits a
+    * `(canonical, doc)` candidate pair ([[canonicalChain]]).
     *
     * Two structural differences from the batch path, both forced by streaming:
-    *  - the signature is a per-row fold over the shingle array
-    *    (`functions.aggregate`) instead of an explode + groupBy min — zero
-    *    shuffle before the keyed state, so no streaming-aggregation watermark is
-    *    needed for signing;
+    *  - the signature is computed per row by the kernel instead of an explode +
+    *    groupBy min — zero shuffle before the keyed state, so no
+    *    streaming-aggregation watermark is needed for signing;
     *  - candidates are NOT Jaccard-verified here (verification needs both full
     *    shingle sets; run the batch `verifyJaccard` over the emitted pairs, or
     *    join pairs back against a document store downstream). The same pair can
     *    also emit from several bands — `.distinct()` downstream.
     *
     * State grows with distinct occupied buckets (8 bytes + key per bucket), the
-    * same asymptotics as the batch band table; add a state-store TTL in
-    * deployment if the corpus is unbounded.
+    * same asymptotics as the batch band table; [[minhashCandidatesStreamTtl]]
+    * is the deployment shape for an unbounded corpus.
     */
   def minhashCandidatesStream(docs: DataFrame, idCol: String = "doc_id",
                               textCol: String = "text", k: Int = 3,
                               numHashes: Int = 16, rowsPerBand: Int = 4)
-      : Dataset[CandidatePair] = {
-    import docs.sparkSession.implicits._
-    import graft.ext.Dedup
-    val numBands = numHashes / rowsPerBand
-    val shingleArr = graft.functions.WordShingles.shingles(col(textCol), k)
-    val mh = (0 until numHashes).map { j =>
-      aggregate(shingleArr, lit(Long.MaxValue), (acc, s) =>
-        least(acc, (lit(Dedup.minhashA(j)) * Dedup.tokenHash32(s)
-          + lit(Dedup.minhashB(j))) % lit(Dedup.MinhashPrime)))
-        .as(s"mh_$j")
-    }
-    val sig = docs.select(col(idCol).cast("long").as("__id") +: mh: _*)
-    val banded = (0 until numBands).map { b =>
-      val slice = (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), md5(concat_ws(",", slice: _*)).as("bkey"))
-    }
-    // per-row generator over numBands elements — interpreted, but O(bands), not hot
-    val keyed = sig
-      .select(col("__id"), explode(array(banded: _*)).as("bk"))
-      .select(col("__id").as("_1"), col("bk.band").as("_2"), col("bk.bkey").as("_3"))
-      .as[(Long, Int, String)]
-    keyed
-      .groupByKey { case (_, band, bkey) => (band, bkey) }
-      .flatMapGroupsWithState[Long, CandidatePair](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, String), it: Iterator[(Long, Int, String)], state: GroupState[Long]) =>
-          val ids = it.map(_._1).toSeq.distinct.sorted
-          val out = scala.collection.mutable.ArrayBuffer[CandidatePair]()
-          var canon = state.getOption.getOrElse(Long.MaxValue)
-          ids.foreach { id =>
-            if (canon == Long.MaxValue) canon = id
-            else if (id != canon) {
-              out += CandidatePair(math.min(canon, id), math.max(canon, id))
-              canon = math.min(canon, id)
-            }
-          }
-          if (canon != Long.MaxValue) state.update(canon)
-          out.iterator
-      }
-  }
+      : Dataset[CandidatePair] =
+    minhashChain(docs, None, None, idCol, textCol, k, numHashes, rowsPerBand)
 
   /** [[minhashCandidatesStream]] with EVENT-TIME state TTL — the deployment
     * shape for unbounded corpora, where NoTimeout state grows with occupied
@@ -143,61 +172,24 @@ object StreamingOps {
                                  textCol: String = "text", k: Int = 3,
                                  numHashes: Int = 16, rowsPerBand: Int = 4,
                                  allowedLateness: String = "0 seconds")
+      : Dataset[CandidatePair] =
+    minhashChain(docs.withWatermark(tsCol, allowedLateness), Some(tsCol),
+      Some(ttlMs), idCol, textCol, k, numHashes, rowsPerBand)
+
+  private def minhashChain(docs: DataFrame, tsCol: Option[String],
+                           ttlMs: Option[Long], idCol: String, textCol: String,
+                           k: Int, numHashes: Int, rowsPerBand: Int)
       : Dataset[CandidatePair] = {
     import docs.sparkSession.implicits._
     import graft.ext.Dedup
-    require(ttlMs > 0, s"ttlMs must be positive, got $ttlMs")
-    val numBands = numHashes / rowsPerBand
-    val shingleArr = graft.functions.WordShingles.shingles(col(textCol), k)
-    val mh = (0 until numHashes).map { j =>
-      aggregate(shingleArr, lit(Long.MaxValue), (acc, s) =>
-        least(acc, (lit(Dedup.minhashA(j)) * Dedup.tokenHash32(s)
-          + lit(Dedup.minhashB(j))) % lit(Dedup.MinhashPrime)))
-        .as(s"mh_$j")
-    }
-    val sig = docs.withWatermark(tsCol, allowedLateness)
-      .select(Seq(col(idCol).cast("long").as("__id"), col(tsCol).as("__ts")) ++ mh: _*)
-    val banded = (0 until numBands).map { b =>
-      val slice = (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), md5(concat_ws(",", slice: _*)).as("bkey"))
-    }
-    val keyed = sig
-      .select(col("__id"), col("__ts"), explode(array(banded: _*)).as("bk"))
-      .select(col("__id").as("_1"), col("__ts").as("_2"),
-        col("bk.band").as("_3"), col("bk.bkey").as("_4"))
-      .as[(Long, Timestamp, Int, String)]
-    keyed
-      .groupByKey { case (_, _, band, bkey) => (band, bkey) }
-      .flatMapGroupsWithState[Long, CandidatePair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, String), it: Iterator[(Long, Timestamp, Int, String)],
-         state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rows = it.toSeq
-            val ids = rows.map(_._1).distinct.sorted
-            val out = scala.collection.mutable.ArrayBuffer[CandidatePair]()
-            var canon = state.getOption.getOrElse(Long.MaxValue)
-            ids.foreach { id =>
-              if (canon == Long.MaxValue) canon = id
-              else if (id != canon) {
-                out += CandidatePair(math.min(canon, id), math.max(canon, id))
-                canon = math.min(canon, id)
-              }
-            }
-            if (canon != Long.MaxValue) {
-              state.update(canon)
-              // re-arm: expire ttlMs past this bucket's latest event time (must
-              // stay strictly above the current watermark to be settable)
-              val maxTs = rows.map(_._2.getTime).max
-              state.setTimeoutTimestamp(
-                math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
+    val sig = Dedup.minhashSignatures(docs, idCol, textCol, k, numHashes,
+      tsCol.toSeq)
+    val banded = Dedup.bandKeys(sig, idCol, numHashes / rowsPerBand,
+      rowsPerBand, tsCol.toSeq)
+    canonicalChain[(Int, String), Long, CandidatePair](banded,
+      Seq(col("band"), col("bkey")), Seq(col(idCol).cast("long")),
+      tsCol.fold(lit(null).cast("timestamp"))(col), ttlMs, identity,
+      Ordering.Long)(idPair)
   }
 
   final case class HammingPair(id_a: Long, id_b: Long, hamming: Int)
@@ -207,18 +199,19 @@ object StreamingOps {
     * .Multimodal]]'s banded batch joins (image dHash, audio envelope,
     * video mdat), closing the streaming story for that tier the way
     * [[minhashCandidatesStreamTtl]] does for set-level dedup: each
-    * arriving (id, 64-bit fingerprint) keys into `maxHamming + 1` band
-    * buckets (pigeonhole: a pair within the bound shares at least one
-    * bucket), a bucket holds one canonical (id, fingerprint), and an
-    * arrival pairs against the canonical with an EXACT `bitCount` verify.
-    * Canonical-chain trade as in the minhash/winnow twins: a hot bucket
-    * grows pairs linearly in arrivals, never quadratically, and the same
-    * pair may surface from more than one band (downstream dedups —
-    * identical to the batch operators' pre-`distinct` candidate stream).
-    * Bucket state expires `ttlMs` past its last-seen event time, re-armed
-    * per visit, so an unbounded corpus keeps bounded state; a duplicate
-    * recurring after the horizon re-seeds instead of pairing, with the
-    * batch operators as the exact backstop.
+    * arriving (id, 64-bit fingerprint) keys into the batch joins' own
+    * [[graft.multimodal.Multimodal.hammingBands]] buckets (pigeonhole: a
+    * pair within the bound shares at least one bucket), a bucket holds one
+    * canonical (id, fingerprint), and an arrival pairs against the
+    * canonical with an EXACT `bitCount` verify. The canonical doc
+    * re-arriving with a CHANGED fingerprint refreshes the stored one, so
+    * later arrivals never verify against a stale fingerprint.
+    * Canonical-chain trade as in the minhash/winnow twins
+    * ([[canonicalChain]]): the same pair may surface from more than one
+    * band (downstream dedups — identical to the batch operators'
+    * pre-`distinct` candidate stream). Bucket state expires `ttlMs` past
+    * its last-seen event time, re-armed per visit, so an unbounded corpus
+    * keeps bounded state, with the batch operators as the exact backstop.
     */
   def fingerprintCandidatesStreamTtl(fps: DataFrame, tsCol: String,
                                      ttlMs: Long, idCol: String = "doc_id",
@@ -227,62 +220,16 @@ object StreamingOps {
                                      allowedLateness: String = "0 seconds")
       : Dataset[HammingPair] = {
     import fps.sparkSession.implicits._
-    require(ttlMs > 0, s"ttlMs must be positive, got $ttlMs")
-    require(maxHamming >= 0 && maxHamming <= 15,
-      s"need 0 <= maxHamming <= 15, got $maxHamming")
-    val nBands = maxHamming + 1
-    val bandBits = 64 / nBands
-    val mask = (1L << bandBits) - 1
-    val banded = (0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("__fp"), b * bandBits).bitwiseAND(lit(mask))
-          .as("bits"))
+    val fp = col(fpCol).cast("long")
+    canonicalChain[(Int, Long), (Long, Long), HammingPair](
+      fps.withWatermark(tsCol, allowedLateness).withColumn("__bb",
+        explode(graft.multimodal.Multimodal.hammingBands(fp, maxHamming))),
+      Seq(col("__bb.band"), col("__bb.bits")), Seq(col(idCol).cast("long"), fp),
+      col(tsCol), Some(ttlMs), _._1, Ordering.by(_._1)) { (c, a) =>
+      val d = java.lang.Long.bitCount(c._2 ^ a._2)
+      if (d > maxHamming) None
+      else Some(HammingPair(math.min(c._1, a._1), math.max(c._1, a._1), d))
     }
-    val keyed = fps.withWatermark(tsCol, allowedLateness)
-      .select(col(idCol).cast("long").as("__id"), col(tsCol).as("__ts"),
-        col(fpCol).cast("long").as("__fp"))
-      .select(col("__id"), col("__ts"), col("__fp"),
-        explode(array(banded: _*)).as("bk"))
-      .select(col("__id").as("_1"), col("__ts").as("_2"),
-        col("__fp").as("_3"), col("bk.band").as("_4"), col("bk.bits").as("_5"))
-      .as[(Long, Timestamp, Long, Int, Long)]
-    keyed
-      .groupByKey { case (_, _, _, band, bits) => (band, bits) }
-      .flatMapGroupsWithState[(Long, Long), HammingPair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Long), it: Iterator[(Long, Timestamp, Long, Int, Long)],
-         state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rows = it.toSeq
-            val arrivals = rows.map(r => (r._1, r._3)).distinct.sortBy(_._1)
-            val out = scala.collection.mutable.ArrayBuffer[HammingPair]()
-            var canon: (Long, Long) = state.getOption.orNull
-            arrivals.foreach { case (id, fp) =>
-              if (canon == null) canon = (id, fp)
-              // the canonical doc re-arriving with a CHANGED fingerprint
-              // must refresh the stored one, or later arrivals verify
-              // against a stale fingerprint until the bucket's TTL expires
-              else if (id == canon._1) canon = (id, fp)
-              else {
-                val d = java.lang.Long.bitCount(canon._2 ^ fp)
-                if (d <= maxHamming)
-                  out += HammingPair(math.min(canon._1, id),
-                    math.max(canon._1, id), d)
-                if (id < canon._1) canon = (id, fp)
-              }
-            }
-            if (canon != null) {
-              state.update(canon)
-              val maxTs = rows.map(_._2.getTime).max
-              state.setTimeoutTimestamp(
-                math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
   }
 
   final case class ShinglePair(id_a: Long, id_b: Long, hamming: Int,
@@ -294,21 +241,17 @@ object StreamingOps {
     * .videoDupPairsShifted]]: input rows are the already-shingled
     * (id, shingle index, 64-bit fingerprint) stream (the same
     * per-blob [[graft.multimodal.Multimodal.envelopeShingles]] fan-out
-    * the batch path produces), each row keys into `maxHamming + 1` band
-    * buckets, a bucket holds one canonical (id, shingle, fp), and an
-    * arrival from a DIFFERENT blob pairs against it with an exact
-    * bitCount verify, reporting the shingle-offset witness — so a
-    * window-aligned trimmed copy of an in-horizon original is caught as
-    * it streams in, exactly the case the whole-signal
-    * [[fingerprintCandidatesStreamTtl]] twin cannot see. Same canonical-
-    * chain trade and TTL-bounded state as the other dedup twins; a blob's
-    * own later shingles refresh its canonical entry and never self-pair.
-    * The trade's two misses, explicitly: (1) two NON-canonical arrivals
-    * never pair against EACH OTHER, only against the bucket's canonical —
-    * three same-batch copies a < b < c emit (a, b) and (a, c) but never
-    * (b, c) (StreamReplaySpec holds this case); (2) a duplicate arriving
-    * after its original's bucket state expired past the TTL horizon
-    * re-seeds instead of pairing. For both, the batch operator
+    * the batch path produces), each row keys into the batch path's
+    * [[graft.multimodal.Multimodal.hammingBands]] buckets, a bucket holds
+    * one canonical (id, shingle, fp), and an arrival from a DIFFERENT blob
+    * pairs against it with an exact bitCount verify, reporting the
+    * shingle-offset witness — so a window-aligned trimmed copy of an
+    * in-horizon original is caught as it streams in, exactly the case the
+    * whole-signal [[fingerprintCandidatesStreamTtl]] twin cannot see. Same
+    * canonical-chain trade and TTL-bounded state as the other dedup twins
+    * ([[canonicalChain]]; StreamReplaySpec holds the three-copies case); a
+    * blob's own later shingles refresh its canonical entry and never
+    * self-pair. The batch operator
     * ([[graft.multimodal.Multimodal.audioDupPairsShifted]] and kin) is
     * the exact backstop — the streamed pairs are a subset of the batch
     * pairs, complete whenever each bucket holds one canonical per
@@ -325,63 +268,18 @@ object StreamingOps {
                                  allowedLateness: String = "0 seconds")
       : Dataset[ShinglePair] = {
     import fps.sparkSession.implicits._
-    require(ttlMs > 0, s"ttlMs must be positive, got $ttlMs")
-    require(maxHamming >= 0 && maxHamming <= 15,
-      s"need 0 <= maxHamming <= 15, got $maxHamming")
-    val nBands = maxHamming + 1
-    val bandBits = 64 / nBands
-    val mask = (1L << bandBits) - 1
-    val banded = (0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("__fp"), b * bandBits).bitwiseAND(lit(mask))
-          .as("bits"))
+    val fp = col(fpCol).cast("long")
+    canonicalChain[(Int, Long), (Long, Int, Long), ShinglePair](
+      fps.withWatermark(tsCol, allowedLateness).withColumn("__bb",
+        explode(graft.multimodal.Multimodal.hammingBands(fp, maxHamming))),
+      Seq(col("__bb.band"), col("__bb.bits")),
+      Seq(col(idCol).cast("long"), col(shingleCol).cast("int"), fp),
+      col(tsCol), Some(ttlMs), _._1, Ordering.by(t => (t._1, t._2))) { (c, a) =>
+      val d = java.lang.Long.bitCount(c._3 ^ a._3)
+      if (d > maxHamming) None
+      else if (c._1 < a._1) Some(ShinglePair(c._1, a._1, d, c._2 - a._2))
+      else Some(ShinglePair(a._1, c._1, d, a._2 - c._2))
     }
-    val keyed = fps.withWatermark(tsCol, allowedLateness)
-      .select(col(idCol).cast("long").as("__id"), col(tsCol).as("__ts"),
-        col(shingleCol).cast("int").as("__s"), col(fpCol).cast("long").as("__fp"))
-      .select(col("__id"), col("__ts"), col("__s"), col("__fp"),
-        explode(array(banded: _*)).as("bk"))
-      .select(col("__id").as("_1"), col("__ts").as("_2"), col("__s").as("_3"),
-        col("__fp").as("_4"), col("bk.band").as("_5"), col("bk.bits").as("_6"))
-      .as[(Long, Timestamp, Int, Long, Int, Long)]
-    keyed
-      .groupByKey { case (_, _, _, _, band, bits) => (band, bits) }
-      .flatMapGroupsWithState[(Long, Int, Long), ShinglePair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Long),
-         it: Iterator[(Long, Timestamp, Int, Long, Int, Long)],
-         state: GroupState[(Long, Int, Long)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rows = it.toSeq
-            val arrivals = rows.map(r => (r._1, r._3, r._4)).distinct
-              .sortBy(t => (t._1, t._2))
-            val out = scala.collection.mutable.ArrayBuffer[ShinglePair]()
-            var canon: (Long, Int, Long) = state.getOption.orNull
-            arrivals.foreach { case (id, s, fp) =>
-              if (canon == null) canon = (id, s, fp)
-              // same blob: refresh the canonical shingle (never self-pair)
-              else if (id == canon._1) canon = (id, s, fp)
-              else {
-                val d = java.lang.Long.bitCount(canon._3 ^ fp)
-                if (d <= maxHamming)
-                  out += (if (canon._1 < id)
-                    ShinglePair(canon._1, id, d, canon._2 - s)
-                  else ShinglePair(id, canon._1, d, s - canon._2))
-                if (id < canon._1) canon = (id, s, fp)
-              }
-            }
-            if (canon != null) {
-              state.update(canon)
-              val maxTs = rows.map(_._2.getTime).max
-              state.setTimeoutTimestamp(
-                math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
   }
 
   final case class CdcSegMatch(id_a: Long, id_b: Long, offset_frames: Int)
@@ -400,11 +298,11 @@ object StreamingOps {
     * ≥ minShared distinct matched segments and the minimal offset
     * witness, which is precisely the batch threshold + groupBy reduce.
     * Same canonical-chain trade and TTL-bounded state as the other dedup
-    * twins (two non-canonical same-batch arrivals pair against the
-    * canonical, not each other; an expired bucket re-seeds) — and the
-    * batch df-cap has a streaming analogue built in: a bucket holds ONE
-    * canonical, so a hot boilerplate segment pairs each arrival against
-    * one representative, linearly, never quadratically.
+    * twins ([[canonicalChain]]) — and the batch df-cap has a streaming
+    * analogue built in: a bucket holds ONE canonical, so a hot boilerplate
+    * segment pairs each arrival against one representative, linearly,
+    * never quadratically. A blob repeating its own segment refreshes the
+    * canonical position and never self-pairs.
     */
   def cdcCandidatesStreamTtl(segs: DataFrame, tsCol: String, ttlMs: Long,
                              idCol: String = "doc_id",
@@ -414,49 +312,14 @@ object StreamingOps {
                              allowedLateness: String = "0 seconds")
       : Dataset[CdcSegMatch] = {
     import segs.sparkSession.implicits._
-    require(ttlMs > 0, s"ttlMs must be positive, got $ttlMs")
-    val keyed = segs.withWatermark(tsCol, allowedLateness)
-      .select(col(idCol).cast("long").as("_1"), col(tsCol).as("_2"),
-        col(posCol).cast("int").as("_3"), col(lenCol).cast("int").as("_4"),
-        col(fpCol).cast("long").as("_5"))
-      .as[(Long, Timestamp, Int, Int, Long)]
-    keyed
-      .groupByKey { case (_, _, _, len, fp) => (fp, len) }
-      .flatMapGroupsWithState[(Long, Int), CdcSegMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Long, Int),
-         it: Iterator[(Long, Timestamp, Int, Int, Long)],
-         state: GroupState[(Long, Int)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rows = it.toSeq
-            val arrivals = rows.map(r => (r._1, r._3)).distinct
-              .sortBy(identity)
-            val out = scala.collection.mutable.ArrayBuffer[CdcSegMatch]()
-            var canon: (Long, Int) = state.getOption.orNull
-            arrivals.foreach { case (id, pos) =>
-              if (canon == null) canon = (id, pos)
-              // same blob re-arriving (a repeat of its own segment):
-              // refresh the canonical position, never self-pair
-              else if (id == canon._1) canon = (id, pos)
-              else {
-                out += (if (canon._1 < id)
-                  CdcSegMatch(canon._1, id, canon._2 - pos)
-                else CdcSegMatch(id, canon._1, pos - canon._2))
-                if (id < canon._1) canon = (id, pos)
-              }
-            }
-            if (canon != null) {
-              state.update(canon)
-              val maxTs = rows.map(_._2.getTime).max
-              state.setTimeoutTimestamp(
-                math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
+    canonicalChain[(Long, Int), (Long, Int), CdcSegMatch](
+      segs.withWatermark(tsCol, allowedLateness),
+      Seq(col(fpCol).cast("long"), col(lenCol).cast("int")),
+      Seq(col(idCol).cast("long"), col(posCol).cast("int")), col(tsCol),
+      Some(ttlMs), _._1, Ordering.Tuple2[Long, Int]) { (c, a) =>
+      if (c._1 < a._1) Some(CdcSegMatch(c._1, a._1, c._2 - a._2))
+      else Some(CdcSegMatch(a._1, c._1, a._2 - c._2))
+    }
   }
 
   /** Streaming winnowing near-dup candidates with event-time state TTL —
@@ -467,12 +330,13 @@ object StreamingOps {
     * [[graft.functions.WinnowKeys]] kernel — same selection the batch oracle
     * replays) key into per-fingerprint buckets holding one canonical doc id;
     * a doc landing in an occupied bucket emits a candidate pair against the
-    * canonical (the canonical-chain trade: a boilerplate fingerprint grows
-    * pairs LINEARLY in arrivals, never quadratically — the streaming analog
-    * of the batch maxDf cut). Bucket state expires `ttlMs` past its
-    * last-seen event time, re-armed per visit, so an unbounded corpus keeps
-    * bounded state; a duplicate recurring after the horizon re-seeds instead
-    * of pairing, with the batch operator as the exact backstop.
+    * canonical (the canonical-chain trade of [[canonicalChain]]: a
+    * boilerplate fingerprint grows pairs LINEARLY in arrivals, never
+    * quadratically — the streaming analog of the batch maxDf cut). Bucket
+    * state expires `ttlMs` past its last-seen event time, re-armed per
+    * visit, so an unbounded corpus keeps bounded state; a duplicate
+    * recurring after the horizon re-seeds instead of pairing, with the
+    * batch operator as the exact backstop.
     */
   def winnowCandidatesStreamTtl(docs: DataFrame, tsCol: String, ttlMs: Long,
                                 idCol: String = "doc_id",
@@ -481,43 +345,13 @@ object StreamingOps {
                                 allowedLateness: String = "0 seconds")
       : Dataset[CandidatePair] = {
     import docs.sparkSession.implicits._
-    require(ttlMs > 0, s"ttlMs must be positive, got $ttlMs")
-    val keyed = docs.withWatermark(tsCol, allowedLateness)
-      .select(col(idCol).cast("long").as("_1"), col(tsCol).as("_2"),
-        explode(array_distinct(transform(
-          graft.functions.WinnowKeys.winnowKeys(col(textCol), k, w),
-          kk => shiftright(kk, 20)))).as("_3"))
-      .as[(Long, Timestamp, Long)]
-    keyed
-      .groupByKey(_._3)
-      .flatMapGroupsWithState[Long, CandidatePair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, it: Iterator[(Long, Timestamp, Long)],
-         state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val rows = it.toSeq
-            val ids = rows.map(_._1).distinct.sorted
-            val out = scala.collection.mutable.ArrayBuffer[CandidatePair]()
-            var canon = state.getOption.getOrElse(Long.MaxValue)
-            ids.foreach { id =>
-              if (canon == Long.MaxValue) canon = id
-              else if (id != canon) {
-                out += CandidatePair(math.min(canon, id), math.max(canon, id))
-                canon = math.min(canon, id)
-              }
-            }
-            if (canon != Long.MaxValue) {
-              state.update(canon)
-              val maxTs = rows.map(_._2.getTime).max
-              state.setTimeoutTimestamp(
-                math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
+    canonicalChain[Long, Long, CandidatePair](
+      docs.withWatermark(tsCol, allowedLateness),
+      Seq(explode(array_distinct(transform(
+        graft.functions.WinnowKeys.winnowKeys(col(textCol), k, w),
+        kk => shiftright(kk, 20))))),
+      Seq(col(idCol).cast("long")), col(tsCol), Some(ttlMs), identity,
+      Ordering.Long)(idPair)
   }
 
   /** Streaming twin of [[graft.ext.TextQuality.contamination]]: score arriving

@@ -51,6 +51,11 @@ class StreamStateGuardSpec extends SparkTestBase {
           docs.select(col("doc_id"), col("ts"), lit(0).as("s"),
             col("doc_id").cast("long").as("fp")),
           "ts", ttlMs = 60000L),
+      "cdcCandidatesStreamTtl" ->
+        cdcCandidatesStreamTtl(
+          docs.select(col("doc_id"), col("ts"), lit(0).as("pos"),
+            lit(8).as("len"), col("doc_id").cast("long").as("fp")),
+          "ts", ttlMs = 60000L),
       "funnelStreamLate" ->
         funnelStreamLate(MemoryStream[FunnelEvent].toDS(), Seq("a", "b")),
       "sessionizeLate" -> sessionizeLate(MemoryStream[SessionEvent].toDS()),
