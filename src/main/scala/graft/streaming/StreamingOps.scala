@@ -130,6 +130,82 @@ object StreamingOps {
   private val idPair: (Long, Long) => Option[CandidatePair] =
     (c, a) => Some(CandidatePair(math.min(c, a), math.max(c, a)))
 
+  /** The per-key loop every NoTimeout keyed twin below runs (the
+    * watermark-hardened [[funnelStreamLate]] and [[sessionizeLate]] run
+    * their own, with an event-time timeout). Per visit, the key's stored
+    * state is restored as an `Option` (`None` for a key without state), the
+    * micro-batch's arrivals are folded through `step` in `order` (arrival
+    * order when `None` — sketches and double sums depend on it), each step
+    * returning the next state and at most one row; a fold that ends at
+    * `Some` state goes through `close`, which returns the state to store
+    * and the visit's snapshot rows (none by default), and a fold that ends
+    * at `None` removes the key's state.
+    */
+  private def keyedFold[K: Encoder, E, S: Encoder, O: Encoder](
+      events: Dataset[E], key: E => K, mode: OutputMode,
+      order: Option[Ordering[E]])(
+      step: (K, Option[S], E) => (Option[S], Option[O]),
+      close: (K, S) => (S, IterableOnce[O]) =
+        (_: K, s: S) => (s, Iterator.empty)): Dataset[O] =
+    events.groupByKey(key).flatMapGroupsWithState[S, O](mode,
+      GroupStateTimeout.NoTimeout) {
+      (k: K, it: Iterator[E], state: GroupState[S]) =>
+        val out = scala.collection.mutable.ArrayBuffer[O]()
+        var cur = state.getOption
+        order.fold(it)(o => it.toSeq.sorted(o).iterator).foreach { e =>
+          val (next, row) = step(k, cur, e)
+          cur = next
+          out ++= row
+        }
+        cur match {
+          case Some(s) =>
+            val (kept, rows) = close(k, s)
+            state.update(kept)
+            out ++= rows
+          case None => if (state.exists) state.remove()
+        }
+        out.iterator
+    }
+
+  /** The epoch day of a DateType value: `toLocalDate` inverts Spark's
+    * DateType → java.sql.Date decode (local midnight) TZ-independently;
+    * floorDiv of `getTime` would shift a day on a JVM east of UTC.
+    */
+  private def epochDay(d: java.sql.Date): Long = d.toLocalDate.toEpochDay
+
+  /** The DateType value of an epoch day, the inverse of [[epochDay]]:
+    * `Date.valueOf(LocalDate)` round-trips through Spark's JVM-default-TZ
+    * DateType conversion without shifting on a non-UTC JVM.
+    */
+  private def dateOf(epochDay: Long): java.sql.Date =
+    java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(epochDay))
+
+  /** [[keyedFold]] for the daily twins, with their in-order/unique-day
+    * contract ENFORCED: per key, days must arrive in increasing order across
+    * micro-batches (a micro-batch's days are sorted here), and `step` folds
+    * only an arrival whose epoch day lies after the state's day `cursor`
+    * (`zero`'s cursor is `Long.MinValue`). A late or duplicate day is
+    * dropped, not folded: it would pair against a history that was never
+    * shifted to it (a lag ring, a decay exponent ≤ 0) and move the cursor
+    * backwards, silently corrupting every later day. State is written on
+    * every visit.
+    */
+  private def dailyFold[K: Encoder, E, S: Encoder, O: Encoder](
+      daily: Dataset[E], key: E => K, day: E => java.sql.Date, zero: S,
+      cursor: S => Long)(
+      step: (K, S, E, Long) => (S, Option[O]),
+      close: (K, S) => (S, IterableOnce[O]) =
+        (_: K, s: S) => (s, Iterator.empty)): Dataset[O] =
+    keyedFold[K, E, S, O](daily, key, OutputMode.Update,
+      Some(Ordering.by((e: E) => day(e).getTime)))({ (k, cur, e) =>
+      val st = cur.getOrElse(zero)
+      val d = epochDay(day(e))
+      if (d > cursor(st)) {
+        val (next, row) = step(k, st, e, d)
+        (Some(next), row)
+      } else (Some(st), None)
+    }, close)
+
   /** Streaming MinHash+LSH near-dup candidate detection — the incremental twin of
     * [[graft.ext.Dedup.minhashLshPairs]]'s candidate-generation stage. Arriving
     * documents are signed and banded exactly as the batch operator does
@@ -408,26 +484,29 @@ object StreamingOps {
       : Dataset[StageReached] = {
     import events.sparkSession.implicits._
     val stageIdx = stages.zipWithIndex.toMap
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, StageReached](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-          val sorted = it.toSeq.sortBy(_.ts.getTime)
-          var cur = state.getOption.getOrElse(FunnelState(-1, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer[StageReached]()
-          sorted.foreach { e =>
-            val next = cur.stage + 1
-            if (next < stages.length &&
-                stageIdx.get(e.event_type).contains(next) &&
-                (cur.stage < 0 || e.ts.getTime >= cur.reachMs)) {
-              cur = FunnelState(next, e.ts.getTime)
-              out += StageReached(user, next, stages(next), e.ts.getTime)
-            }
-          }
-          if (cur.stage >= 0) state.update(cur)
-          out.iterator
-      }
+    keyedFold[Long, FunnelEvent, FunnelState, StageReached](events, _.user_id,
+      OutputMode.Append, Some(Ordering.by(_.ts.getTime))) { (user, cur, e) =>
+      // a user before the first stage has no state, and gets none
+      val row = funnelAdvance(stages, stageIdx, user,
+        cur.fold(-1)(_.stage), cur.fold(Long.MinValue)(_.reachMs), e)
+      (row.map(r => FunnelState(r.stage, r.reach_ms)).orElse(cur), row)
+    }
+  }
+
+  /** The stage rule of both funnel twins: `e` advances a user at `stage`
+    * (-1 before the first), reached at `reachMs`, when it is the next
+    * stage's event at or after that reach time; the row it emits carries
+    * the new stage and reach time.
+    */
+  private def funnelAdvance(stages: Seq[String], stageIdx: Map[String, Int],
+                            user: Long, stage: Int, reachMs: Long,
+                            e: FunnelEvent): Option[StageReached] = {
+    val next = stage + 1
+    if (next < stages.length &&
+        stageIdx.get(e.event_type).contains(next) &&
+        (stage < 0 || e.ts.getTime >= reachMs))
+      Some(StageReached(user, next, stages(next), e.ts.getTime))
+    else None
   }
 
   final case class FunnelLateState(stage: Int, reachMs: Long,
@@ -474,13 +553,10 @@ object StreamingOps {
           val out = scala.collection.mutable.ArrayBuffer[StageReached]()
           ripe.sortBy(e => (e.ts.getTime, stageIdx.getOrElse(e.event_type, Int.MaxValue)))
             .foreach { e =>
-              val next = stage + 1
-              if (next < stages.length &&
-                  stageIdx.get(e.event_type).contains(next) &&
-                  (stage < 0 || e.ts.getTime >= reachMs)) {
-                stage = next
-                reachMs = e.ts.getTime
-                out += StageReached(user, next, stages(next), e.ts.getTime)
+              funnelAdvance(stages, stageIdx, user, stage, reachMs, e).foreach { r =>
+                stage = r.stage
+                reachMs = r.reach_ms
+                out += r
               }
             }
           if (stage < 0 && hold.isEmpty) state.remove()
@@ -509,29 +585,27 @@ object StreamingOps {
   def sessionize(events: Dataset[SessionEvent], gapMs: Long = 30 * 60 * 1000L)
       : Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          val sorted = it.toSeq.sortBy(_.ts.getTime)
-          var cur = state.getOption
-          val closed = scala.collection.mutable.ArrayBuffer[SessionOut]()
-          sorted.foreach { e =>
-            val t = e.ts.getTime
-            cur match {
-              case Some(s) if t - s.last <= gapMs =>
-                cur = Some(SessionState(s.start, t, s.n + 1, s.sum + e.value))
-              case Some(s) =>
-                closed += SessionOut(user, s.start, s.last, s.n, s.sum)
-                cur = Some(SessionState(t, t, 1, e.value))
-              case None =>
-                cur = Some(SessionState(t, t, 1, e.value))
-            }
-          }
-          cur.foreach(state.update)
-          closed.iterator
-      }
+    keyedFold[Long, SessionEvent, SessionState, SessionOut](events, _.user_id,
+      OutputMode.Append, Some(Ordering.by(_.ts.getTime))) { (user, cur, e) =>
+      val (open, closed) = sessionGap(gapMs, user, cur, e)
+      (Some(open), closed)
+    }
+  }
+
+  /** The gap rule of both sessionize twins: an event within `gapMs` of the
+    * open session's last event extends it; any other event opens a new
+    * session and closes the open one, returned as its emitted row.
+    */
+  private def sessionGap(gapMs: Long, user: Long, cur: Option[SessionState],
+                         e: SessionEvent): (SessionState, Option[SessionOut]) = {
+    val t = e.ts.getTime
+    cur match {
+      case Some(s) if t - s.last <= gapMs =>
+        (SessionState(s.start, t, s.n + 1, s.sum + e.value), None)
+      case open =>
+        (SessionState(t, t, 1, e.value),
+          open.map(s => SessionOut(user, s.start, s.last, s.n, s.sum)))
+    }
   }
 
   final case class SessionLateState(cur: Option[SessionState],
@@ -570,16 +644,9 @@ object StreamingOps {
           var cur = prev.cur
           val closed = scala.collection.mutable.ArrayBuffer[SessionOut]()
           ripe.sortBy(_.ts.getTime).foreach { e =>
-            val t = e.ts.getTime
-            cur match {
-              case Some(s) if t - s.last <= gapMs =>
-                cur = Some(SessionState(s.start, t, s.n + 1, s.sum + e.value))
-              case Some(s) =>
-                closed += SessionOut(user, s.start, s.last, s.n, s.sum)
-                cur = Some(SessionState(t, t, 1, e.value))
-              case None =>
-                cur = Some(SessionState(t, t, 1, e.value))
-            }
+            val (open, done) = sessionGap(gapMs, user, cur, e)
+            closed ++= done
+            cur = Some(open)
           }
           // close the open session once the watermark clears its gap horizon:
           // nothing that could still extend it can arrive on time anymore
@@ -746,29 +813,19 @@ object StreamingOps {
     */
   def collapseRunsStream(events: Dataset[RunEvent]): Dataset[RunOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RunState, RunOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[RunEvent], state: GroupState[RunState]) =>
-          val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var cur = state.getOption
-          val closed = scala.collection.mutable.ArrayBuffer[RunOut]()
-          sorted.foreach { e =>
-            val t = e.ts.getTime
-            cur match {
-              case Some(s) if s.value == e.value =>
-                cur = Some(s.copy(to = t, n = s.n + 1))
-              case Some(s) =>
-                closed += RunOut(user, s.run_id, s.value, s.from, s.to, t, s.n)
-                cur = Some(RunState(e.value, s.run_id + 1, t, t, 1L))
-              case None =>
-                cur = Some(RunState(e.value, 1L, t, t, 1L))
-            }
-          }
-          cur.foreach(state.update)
-          closed.iterator
-      }
+    keyedFold[Long, RunEvent, RunState, RunOut](events, _.user_id,
+      OutputMode.Append, Some(Ordering.by(e => (e.ts.getTime, e.event_id)))) {
+      (user, cur, e) =>
+        val t = e.ts.getTime
+        cur match {
+          case Some(s) if s.value == e.value =>
+            (Some(s.copy(to = t, n = s.n + 1)), None)
+          case Some(s) =>
+            (Some(RunState(e.value, s.run_id + 1, t, t, 1L)),
+              Some(RunOut(user, s.run_id, s.value, s.from, s.to, t, s.n)))
+          case None => (Some(RunState(e.value, 1L, t, t, 1L)), None)
+        }
+    }
   }
 
   final case class AttribEvent(user_id: Long, event_id: Long, ts: Timestamp,
@@ -798,33 +855,18 @@ object StreamingOps {
                         convType: String, lookbackMs: Long)
       : Dataset[AttributedConv] = {
     import events.sparkSession.implicits._
-    events
-      .filter(e => touchTypes.contains(e.event_type) || e.event_type == convType)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttribState, AttributedConv](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[AttribEvent], state: GroupState[AttribState]) =>
-          val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var cur = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer[AttributedConv]()
-          sorted.foreach { e =>
-            val ms = e.ts.getTime
-            if (e.event_type == convType) {
-              cur.foreach { t =>
-                if (ms - t.touch_ms <= lookbackMs)
-                  out += AttributedConv(user, e.event_id, ms, t.channel, t.touch_ms)
-              }
-              cur = None // conversion closes the segment
-            } else {
-              cur = Some(AttribState(e.event_type, ms, e.event_id))
-            }
-          }
-          cur match {
-            case Some(s) => state.update(s)
-            case None    => if (state.exists) state.remove()
-          }
-          out.iterator
-      }
+    keyedFold[Long, AttribEvent, AttribState, AttributedConv](
+      events.filter(e => touchTypes.contains(e.event_type) ||
+        e.event_type == convType),
+      _.user_id, OutputMode.Append,
+      Some(Ordering.by(e => (e.ts.getTime, e.event_id)))) { (user, cur, e) =>
+      val ms = e.ts.getTime
+      if (e.event_type == convType)
+        // the conversion closes the segment: no state until the next touch
+        (None, cur.filter(t => ms - t.touch_ms <= lookbackMs).map(t =>
+          AttributedConv(user, e.event_id, ms, t.channel, t.touch_ms)))
+      else (Some(AttribState(e.event_type, ms, e.event_id)), None)
+    }
   }
 
   final case class ChangeEvent(key: Long, ver: Long, op: String, payload: String)
@@ -849,24 +891,16 @@ object StreamingOps {
   def compactLatestStream(changes: Dataset[ChangeEvent],
                           tombstoneOp: String = "del"): Dataset[CompactOut] = {
     import changes.sparkSession.implicits._
-    changes
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CompactState, CompactOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[ChangeEvent], state: GroupState[CompactState]) =>
-          var cur = state.getOption
-          it.foreach { e =>
-            cur = Some(cur match {
-              case Some(s) if e.ver > s.ver =>
-                CompactState(e.ver, e.op, e.payload, s.n + 1)
-              case Some(s) => s.copy(n = s.n + 1)
-              case None => CompactState(e.ver, e.op, e.payload, 1L)
-            })
-          }
-          cur.foreach(state.update)
-          cur.map(s => CompactOut(key, s.ver, s.op, s.payload, s.n,
-            s.op != tombstoneOp)).iterator
-      }
+    keyedFold[Long, ChangeEvent, CompactState, CompactOut](changes, _.key,
+      OutputMode.Update, None)({ (_, cur, e) =>
+      (Some(cur match {
+        case Some(s) if e.ver > s.ver =>
+          CompactState(e.ver, e.op, e.payload, s.n + 1)
+        case Some(s) => s.copy(n = s.n + 1)
+        case None => CompactState(e.ver, e.op, e.payload, 1L)
+      }), None)
+    }, (key, s) => (s, Some(CompactOut(key, s.ver, s.op, s.payload, s.n,
+      s.op != tombstoneOp))))
   }
 
   final case class HHItem(shard: Int, item: String)
@@ -874,21 +908,6 @@ object StreamingOps {
   final case class HHCounter(shard: Int, item: String, est: Long, err: Long,
                              n_seen: Long)
 
-  /** Streaming heavy hitters — the incremental twin of the batch
-    * [[graft.functions.SpaceSavingAggregator]] path (`q_heavy_hitters`).
-    * Each shard keeps ONE SpaceSaving sketch (`capacity` counters) in keyed
-    * state and re-emits its counters every micro-batch (Update mode): the
-    * latest emission per shard IS the sketch snapshot, and shard snapshots
-    * merge downstream with the aggregator's own mergeable-summary merge —
-    * the same map-side-sketch / merge split as the batch plan, with state
-    * bounded at O(nShards × capacity) regardless of stream cardinality or
-    * length (no watermark needed: the sketch never grows).
-    *
-    * Callers shard by `hash(item) % nShards` so every occurrence of an item
-    * lands in one shard — then per-shard guarantees are exactly the batch
-    * ones: est − err ≤ true ≤ est, and exactness when a shard's distinct
-    * items fit in `capacity`.
-    */
   final case class DailyCount(event_type: String, day: java.sql.Date,
                               n_events: Long)
   final case class EwmaState(num: Double, den: Double, lastEpochDay: Long)
@@ -904,42 +923,28 @@ object StreamingOps {
     * decay without contributing), so day t costs O(1) instead of the batch
     * join's O(windowDays) regardless of history length.
     *
-    * Two documented deltas vs batch: the recursion never drops terms past
+    * One documented delta vs batch: the recursion never drops terms past
     * `windowDays` (geometric decay makes the tail negligible once
     * `decay^windowDays` ≈ 0 — equal within fp noise when history is shorter
-    * than the window), and per-type days must arrive in day order across
-    * micro-batches (within a batch they are sorted here) — the
-    * [[funnelStream]] ordering assumption; feed it from a watermarked daily
-    * aggregation to make that hold.
+    * than the window). Same in-order/unique-day contract as
+    * [[acfDailyStream]] ([[dailyFold]]): a late or duplicate day is dropped,
+    * not folded with weight `decay^Δdays ≥ 1` — feed it from a watermarked
+    * daily aggregation so that none arrives.
     */
   def ewmaDailyStream(daily: Dataset[DailyCount],
                       decay: Double = 0.9): Dataset[EwmaOut] = {
     import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[EwmaState, EwmaOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (typ: String, it: Iterator[DailyCount], state: GroupState[EwmaState]) =>
-          var st = state.getOption.getOrElse(EwmaState(0.0, 0.0, Long.MinValue))
-          // a micro-batch may carry several days of one type: process in day
-          // order (bounded by days per batch, not by history)
-          val out = it.toSeq.sortBy(_.day.getTime).map { e =>
-            // toLocalDate inverts Spark's DateType → java.sql.Date decode
-            // (local midnight) TZ-independently; floorDiv of getTime would
-            // shift a day on a JVM east of UTC
-            val epochDay = e.day.toLocalDate.toEpochDay
-            val w =
-              if (st.lastEpochDay == Long.MinValue) 0.0
-              else math.pow(decay, (epochDay - st.lastEpochDay).toDouble)
-            val num = e.n_events.toDouble + w * st.num
-            val den = 1.0 + w * st.den
-            st = EwmaState(num, den, epochDay)
-            EwmaOut(typ, e.day, e.n_events,
-              math.round(num / den * 1e6) / 1e6)
-          }
-          state.update(st)
-          out.iterator
-      }
+    dailyFold[String, DailyCount, EwmaState, EwmaOut](daily, _.event_type,
+      _.day, EwmaState(0.0, 0.0, Long.MinValue), _.lastEpochDay) {
+      (typ, st, e, day) =>
+        val w =
+          if (st.lastEpochDay == Long.MinValue) 0.0
+          else math.pow(decay, (day - st.lastEpochDay).toDouble)
+        val num = e.n_events.toDouble + w * st.num
+        val den = 1.0 + w * st.den
+        (EwmaState(num, den, day), Some(EwmaOut(typ, e.day, e.n_events,
+          math.round(num / den * 1e6) / 1e6)))
+    }
   }
 
   /** Streaming twin of [[graft.ext.Drift.psi]]: the monitored slice arrives
@@ -1024,34 +1029,18 @@ object StreamingOps {
                   k: Double, h: Double): Dataset[CusumOut] = {
     import daily.sparkSession.implicits._
     require(refSd > 0, s"reference sd must be > 0, got $refSd")
-    daily
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[CusumState, CusumOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (series: String, it: Iterator[DailyValue],
-         state: GroupState[CusumState]) =>
-          var st = state.getOption.getOrElse(
-            CusumState(0.0, 0.0, Long.MinValue, 0L, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[CusumOut]
-          it.toSeq.sortBy(_.day.getTime).foreach { e =>
-            // toLocalDate inverts Spark's DateType → java.sql.Date decode
-            // (local midnight) TZ-independently; floorDiv of getTime would
-            // shift a day on a JVM east of UTC
-            val epochDay = e.day.toLocalDate.toEpochDay
-            if (st.lastEpochDay == Long.MinValue || epochDay > st.lastEpochDay) {
-              val z = (e.x - refMean) / refSd
-              // left-assoc (s + z) - k, matching the batch fold exactly
-              val s = math.max(0.0, st.s + z - k)
-              val (maxS, peak) =
-                if (s > st.maxS) (s, epochDay) else (st.maxS, st.peakEpochDay)
-              val alarms = st.alarms + (if (s > h) 1L else 0L)
-              st = CusumState(s, maxS, peak, alarms, epochDay)
-              out += CusumOut(series, e.day, s, s > h, maxS, alarms)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    dailyFold[String, DailyValue, CusumState, CusumOut](daily, _.series, _.day,
+      CusumState(0.0, 0.0, Long.MinValue, 0L, Long.MinValue), _.lastEpochDay) {
+      (series, st, e, day) =>
+        val z = (e.x - refMean) / refSd
+        // left-assoc (s + z) - k, matching the batch fold exactly
+        val s = math.max(0.0, st.s + z - k)
+        val (maxS, peak) =
+          if (s > st.maxS) (s, day) else (st.maxS, st.peakEpochDay)
+        val alarms = st.alarms + (if (s > h) 1L else 0L)
+        (CusumState(s, maxS, peak, alarms, day),
+          Some(CusumOut(series, e.day, s, s > h, maxS, alarms)))
+    }
   }
   final case class AcfState(ring: Seq[Double], lastEpochDay: Long,
                             moments: Seq[(Long, Double, Double, Double, Double,
@@ -1066,8 +1055,8 @@ object StreamingOps {
     * at every emit — the bhFdr sufficient-statistics split. Calendar gaps
     * shift the ring (missing days pair with nothing, exactly like the batch
     * equi-join on day+lag); per-series days must arrive in day order across
-    * micro-batches (sorted within a batch), the [[ewmaDailyStream]]
-    * ordering assumption.
+    * micro-batches (sorted within a batch), and a late or duplicate day is
+    * dropped, not folded ([[dailyFold]]).
     *
     * The streaming sums fold doubles in arrival order vs the batch
     * operator's DECIMAL accumulators — agreement is within fp noise
@@ -1076,54 +1065,36 @@ object StreamingOps {
   def acfDailyStream(daily: Dataset[DailyValue],
                      maxLag: Int = 10): Dataset[AcfOut] = {
     import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[AcfState, AcfOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (series: String, it: Iterator[DailyValue], state: GroupState[AcfState]) =>
-          var st = state.getOption.getOrElse(AcfState(Seq.empty, Long.MinValue,
-            Seq.fill(maxLag)((0L, 0.0, 0.0, 0.0, 0.0, 0.0))))
-          it.toSeq.sortBy(_.day.getTime).foreach { e =>
-            // toLocalDate inverts Spark's DateType → java.sql.Date decode
-            // (local midnight) TZ-independently; floorDiv of getTime would
-            // shift a day on a JVM east of UTC
-            val epochDay = e.day.toLocalDate.toEpochDay
-            // the in-order/unique-day contract, ENFORCED: a duplicate or
-            // out-of-order day would pair against an unshifted ring and then
-            // prepend a second entry for the same day, silently corrupting
-            // every later lag alignment — drop such arrivals instead
-            if (st.lastEpochDay != Long.MinValue && epochDay <= st.lastEpochDay) {
-              // skip: late/duplicate day
-            } else {
-            // shift the ring past calendar gaps: ring(i) = value at day−1−i
-            val gap =
-              if (st.lastEpochDay == Long.MinValue) 0
-              else (epochDay - st.lastEpochDay).toInt
-            val shifted =
-              if (gap == 0) st.ring
-              else (Seq.fill(math.min(gap - 1, maxLag))(Double.NaN) ++ st.ring)
-                .take(maxLag)
-            val moments = st.moments.zipWithIndex.map { case (m, i) =>
-              // lag L = i+1 pairs today's y with the ring entry L−1 back
-              if (i < shifted.length && !shifted(i).isNaN) {
-                val (n, sx, sy, sxy, sxx, syy) = m
-                val x = shifted(i); val y = e.x
-                (n + 1, sx + x, sy + y, sxy + x * y, sxx + x * x, syy + y * y)
-              } else m
-            }
-            st = AcfState((e.x +: shifted).take(maxLag), epochDay, moments)
-            }
-          }
-          state.update(st)
-          st.moments.zipWithIndex.map { case ((n, sx, sy, sxy, sxx, syy), i) =>
-            val nn = n.toDouble
-            val num = nn * sxy - sx * sy
-            val den = math.sqrt((nn * sxx - sx * sx) * (nn * syy - sy * sy))
-            AcfOut(series, i + 1, n,
-              if (den == 0.0) Double.NaN
-              else math.round(num / den * 1e6) / 1e6)
-          }.iterator
-      }
+    dailyFold[String, DailyValue, AcfState, AcfOut](daily, _.series, _.day,
+      AcfState(Seq.empty, Long.MinValue,
+        Seq.fill(maxLag)((0L, 0.0, 0.0, 0.0, 0.0, 0.0))), _.lastEpochDay)({
+      (_, st, e, day) =>
+        // shift the ring past calendar gaps: ring(i) = value at day−1−i
+        val gap =
+          if (st.lastEpochDay == Long.MinValue) 0
+          else (day - st.lastEpochDay).toInt
+        val shifted =
+          if (gap == 0) st.ring
+          else (Seq.fill(math.min(gap - 1, maxLag))(Double.NaN) ++ st.ring)
+            .take(maxLag)
+        val moments = st.moments.zipWithIndex.map { case (m, i) =>
+          // lag L = i+1 pairs today's y with the ring entry L−1 back
+          if (i < shifted.length && !shifted(i).isNaN) {
+            val (n, sx, sy, sxy, sxx, syy) = m
+            val x = shifted(i); val y = e.x
+            (n + 1, sx + x, sy + y, sxy + x * y, sxx + x * x, syy + y * y)
+          } else m
+        }
+        (AcfState((e.x +: shifted).take(maxLag), day, moments), None)
+    }, (series, st) => (st,
+      st.moments.zipWithIndex.map { case ((n, sx, sy, sxy, sxx, syy), i) =>
+        val nn = n.toDouble
+        val num = nn * sxy - sx * sy
+        val den = math.sqrt((nn * sxx - sx * sx) * (nn * syy - sy * sy))
+        AcfOut(series, i + 1, n,
+          if (den == 0.0) Double.NaN
+          else math.round(num / den * 1e6) / 1e6)
+      }))
   }
 
   /** Streaming BH-FDR segment scan — the incremental twin of
@@ -1200,19 +1171,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("class_size"))
       .withColumn("k_at_risk", col("class_size") < k)
 
-  /** Streaming twin of [[graft.ext.Boilerplate.chunkBoilerplate]]'s detection
-    * side: per (group, chunk) running document frequency with a boilerplate
-    * flag at an ABSOLUTE doc count. Each document arrives once on a corpus
-    * ingest stream, so within-doc chunk repeats are deduped doc-locally
-    * (`array_distinct` before the explode — per-row codegen, no state) and
-    * the streaming count is an exact distinct-doc count without keeping doc
-    * ids in state. The threshold is an absolute `minDocs`, not the batch
-    * operator's fraction: a fraction of a growing group denominator could
-    * UNflag a chunk as clean docs arrive, and a monotone flag is what makes
-    * gating downstream consumers on it safe (the kAnonymityClassStream
-    * argument, inverted: here the risky state is the one rows can only
-    * enter).
-    */
   /** Stream-static SCD2 enrichment — the streaming twin of the batch
     * point-in-time join ([[graft.ext.AsOfJoin.asOf]], `q_pit_join`): each
     * streaming fact left-joins the dimension VERSION valid at its event time
@@ -1263,38 +1221,35 @@ object StreamingOps {
   def alwaysValidPStream(rows: Dataset[AvRow], rho: Double): Dataset[AvOut] = {
     import rows.sparkSession.implicits._
     val rho2 = rho * rho
-    rows.groupByKey(_.segment)
-      .mapGroupsWithState[AvState, AvOut](GroupStateTimeout.NoTimeout) {
-        (seg: String, it: Iterator[AvRow], state: GroupState[AvState]) =>
-          var st = state.getOption.getOrElse(
-            AvState(0L, 0.0, 0.0, 0L, 0.0, 0.0, 1.0))
-          it.foreach { r =>
-            val v = r.vm.toDouble
-            if (r.arm == "A")
-              st = st.copy(nA = st.nA + 1, s1A = st.s1A + v,
-                s2A = st.s2A + v * v)
-            else if (r.arm == "B")
-              st = st.copy(nB = st.nB + 1, s1B = st.s1B + v,
-                s2B = st.s2B + v * v)
-          }
-          val p =
-            if (st.nA > 1 && st.nB > 1) {
-              val ssA = st.s2A - st.s1A * st.s1A / st.nA
-              val ssB = st.s2B - st.s1B * st.s1B / st.nB
-              val varPool = (ssA + ssB) / (st.nA + st.nB - 2) / 1e12
-              val bigV = varPool * (1.0 / st.nA + 1.0 / st.nB)
-              val delta = st.s1A / st.nA / 1e6 - st.s1B / st.nB / 1e6
-              if (bigV > 0.0) {
-                val lam = math.sqrt(bigV / (bigV + rho2)) *
-                  math.exp(delta * delta * rho2 /
-                    (2.0 * bigV * (bigV + rho2)))
-                math.min(1.0, 1.0 / lam)
-              } else 1.0
-            } else 1.0
-          st = st.copy(pMin = math.min(st.pMin, p))
-          state.update(st)
-          AvOut(seg, st.nA, st.nB, p, st.pMin)
-      }
+    keyedFold[String, AvRow, AvState, AvOut](rows, _.segment,
+      OutputMode.Update, None)({ (_, cur, r) =>
+      val st = cur.getOrElse(AvState(0L, 0.0, 0.0, 0L, 0.0, 0.0, 1.0))
+      val v = r.vm.toDouble
+      (Some(
+        if (r.arm == "A")
+          st.copy(nA = st.nA + 1, s1A = st.s1A + v, s2A = st.s2A + v * v)
+        else if (r.arm == "B")
+          st.copy(nB = st.nB + 1, s1B = st.s1B + v, s2B = st.s2B + v * v)
+        else st), None)
+    }, { (seg, st) =>
+      // one p per visit, from the visit's final moments
+      val p =
+        if (st.nA > 1 && st.nB > 1) {
+          val ssA = st.s2A - st.s1A * st.s1A / st.nA
+          val ssB = st.s2B - st.s1B * st.s1B / st.nB
+          val varPool = (ssA + ssB) / (st.nA + st.nB - 2) / 1e12
+          val bigV = varPool * (1.0 / st.nA + 1.0 / st.nB)
+          val delta = st.s1A / st.nA / 1e6 - st.s1B / st.nB / 1e6
+          if (bigV > 0.0) {
+            val lam = math.sqrt(bigV / (bigV + rho2)) *
+              math.exp(delta * delta * rho2 /
+                (2.0 * bigV * (bigV + rho2)))
+            math.min(1.0, 1.0 / lam)
+          } else 1.0
+        } else 1.0
+      val kept = st.copy(pMin = math.min(st.pMin, p))
+      (kept, Some(AvOut(seg, kept.nA, kept.nB, p, kept.pMin)))
+    })
   }
 
   /** Streaming twin of [[graft.ext.Experiment.powerMde]]: the per-segment
@@ -1312,6 +1267,19 @@ object StreamingOps {
     graft.ext.Experiment.mdeFromMoments(
       graft.ext.Experiment.perArmMoments(df, segmentCol, armCol, valueCol))
 
+  /** Streaming twin of [[graft.ext.Boilerplate.chunkBoilerplate]]'s detection
+    * side: per (group, chunk) running document frequency with a boilerplate
+    * flag at an ABSOLUTE doc count. Each document arrives once on a corpus
+    * ingest stream, so within-doc chunk repeats are deduped doc-locally
+    * (`array_distinct` before the explode — per-row codegen, no state) and
+    * the streaming count is an exact distinct-doc count without keeping doc
+    * ids in state. The threshold is an absolute `minDocs`, not the batch
+    * operator's fraction: a fraction of a growing group denominator could
+    * UNflag a chunk as clean docs arrive, and a monotone flag is what makes
+    * gating downstream consumers on it safe (the kAnonymityClassStream
+    * argument, inverted: here the risky state is the one rows can only
+    * enter).
+    */
   def boilerplateChunkStream(docs: DataFrame, groupCol: String,
                              textCol: String, chunkTokens: Int,
                              minDocs: Long): DataFrame =
@@ -1323,24 +1291,35 @@ object StreamingOps {
       .agg(count(lit(1)).as("df_docs"))
       .withColumn("is_boiler", col("df_docs") >= minDocs)
 
+  /** Streaming heavy hitters — the incremental twin of the batch
+    * [[graft.functions.SpaceSavingAggregator]] path (`q_heavy_hitters`).
+    * Each shard keeps ONE SpaceSaving sketch (`capacity` counters) in keyed
+    * state and re-emits its counters every micro-batch (Update mode): the
+    * latest emission per shard IS the sketch snapshot, and shard snapshots
+    * merge downstream with the aggregator's own mergeable-summary merge —
+    * the same map-side-sketch / merge split as the batch plan, with state
+    * bounded at O(nShards × capacity) regardless of stream cardinality or
+    * length (no watermark needed: the sketch never grows).
+    *
+    * Callers shard by `hash(item) % nShards` so every occurrence of an item
+    * lands in one shard — then per-shard guarantees are exactly the batch
+    * ones: est − err ≤ true ≤ est, and exactness when a shard's distinct
+    * items fit in `capacity`.
+    */
   def heavyHittersStream(items: Dataset[HHItem], capacity: Int): Dataset[HHCounter] = {
     import items.sparkSession.implicits._
     val agg = new graft.functions.SpaceSavingAggregator(capacity)
-    items
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState[HHState, HHCounter](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (shard: Int, it: Iterator[HHItem], state: GroupState[HHState]) =>
-          var st = state.getOption.getOrElse(HHState(agg.zero, 0L))
-          it.foreach(e => st = HHState(agg.reduce(st.buf, e.item), st.n_seen + 1))
-          state.update(st)
-          // n_seen stamps each snapshot: a consumer keeps, per shard, the rows
-          // with the maximal n_seen — the latest (complete) sketch — instead
-          // of guessing from per-item emissions that may be stale after
-          // eviction
-          st.buf.counters.iterator.map(c =>
-            HHCounter(shard, c.item, c.est, c.err, st.n_seen))
-      }
+    keyedFold[Int, HHItem, HHState, HHCounter](items, _.shard,
+      OutputMode.Update, None)({ (_, cur, e) =>
+      val st = cur.getOrElse(HHState(agg.zero, 0L))
+      (Some(HHState(agg.reduce(st.buf, e.item), st.n_seen + 1)), None)
+    }, (shard, st) => (st,
+      // n_seen stamps each snapshot: a consumer keeps, per shard, the rows
+      // with the maximal n_seen — the latest (complete) sketch — instead
+      // of guessing from per-item emissions that may be stale after
+      // eviction
+      st.buf.counters.iterator.map(c =>
+        HHCounter(shard, c.item, c.est, c.err, st.n_seen))))
   }
 
   final case class RunsState(lastSign: Int, nUp: Long, nDown: Long,
@@ -1367,41 +1346,27 @@ object StreamingOps {
   def runsTestStream(daily: Dataset[DailyValue],
                      refMean: Double): Dataset[RunsOut] = {
     import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[RunsState, RunsOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (series: String, it: Iterator[DailyValue],
-         state: GroupState[RunsState]) =>
-          var st = state.getOption.getOrElse(
-            RunsState(0, 0L, 0L, 0L, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[RunsOut]
-          it.toSeq.sortBy(_.day.getTime).foreach { e =>
-            // toLocalDate inverts Spark's DateType → java.sql.Date decode
-            // (local midnight) TZ-independently; floorDiv of getTime would
-            // shift a day on a JVM east of UTC
-            val epochDay = e.day.toLocalDate.toEpochDay
-            val sign = if (e.x > refMean) 1 else if (e.x < refMean) -1 else 0
-            if (sign != 0 &&
-              (st.lastEpochDay == Long.MinValue || epochDay > st.lastEpochDay)) {
-              val runs = st.nRuns + (if (sign != st.lastSign) 1L else 0L)
-              st = RunsState(sign,
-                st.nUp + (if (sign == 1) 1L else 0L),
-                st.nDown + (if (sign == -1) 1L else 0L),
-                runs, epochDay)
-              // same formula shapes as the batch operator
-              val p2 = (st.nUp * st.nDown * 2).toDouble
-              val n = (st.nUp + st.nDown).toDouble
-              val eR = 1.0 + p2 / n
-              val varR = p2 * (p2 - n) / (n * n * (n - 1))
-              val z = if (varR > 0.0) (st.nRuns - eR) / math.sqrt(varR)
-                else Double.NaN
-              out += RunsOut(series, e.day, st.nUp, st.nDown, st.nRuns, eR, z)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    dailyFold[String, DailyValue, RunsState, RunsOut](daily, _.series, _.day,
+      RunsState(0, 0L, 0L, 0L, Long.MinValue), _.lastEpochDay) {
+      (series, st, e, day) =>
+        val sign = if (e.x > refMean) 1 else if (e.x < refMean) -1 else 0
+        if (sign == 0) (st, None)
+        else {
+          val next = RunsState(sign,
+            st.nUp + (if (sign == 1) 1L else 0L),
+            st.nDown + (if (sign == -1) 1L else 0L),
+            st.nRuns + (if (sign != st.lastSign) 1L else 0L), day)
+          // same formula shapes as the batch operator
+          val p2 = (next.nUp * next.nDown * 2).toDouble
+          val n = (next.nUp + next.nDown).toDouble
+          val eR = 1.0 + p2 / n
+          val varR = p2 * (p2 - n) / (n * n * (n - 1))
+          val z = if (varR > 0.0) (next.nRuns - eR) / math.sqrt(varR)
+            else Double.NaN
+          (next, Some(RunsOut(series, e.day, next.nUp, next.nDown,
+            next.nRuns, eR, z)))
+        }
+    }
   }
 
   final case class PeakState(d1: Long, v1: Double, d2: Long, v2: Double)
@@ -1417,36 +1382,18 @@ object StreamingOps {
     */
   def peaksStream(daily: Dataset[DailyValue]): Dataset[PeakOut] = {
     import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[PeakState, PeakOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (series: String, it: Iterator[DailyValue],
-         state: GroupState[PeakState]) =>
-          var st = state.getOption.getOrElse(
-            PeakState(Long.MinValue, 0.0, Long.MinValue, 0.0))
-          val out = scala.collection.mutable.ArrayBuffer.empty[PeakOut]
-          it.toSeq.sortBy(_.day.getTime).foreach { e =>
-            // toLocalDate inverts Spark's DateType → java.sql.Date decode
-            // (local midnight) TZ-independently; floorDiv of getTime would
-            // shift a day on a JVM east of UTC
-            val epochDay = e.day.toLocalDate.toEpochDay
-            if (st.d2 == Long.MinValue || epochDay > st.d2) {
-              // ROW adjacency in day order — the batch lag/lead convention
-              // (calendar holes are just neighbors, not edges)
-              if (st.d1 != Long.MinValue &&
-                st.v2 > st.v1 && st.v2 > e.x) {
-                val prom = st.v2 - math.max(st.v1, e.x)
-                out += PeakOut(series,
-                  java.sql.Date.valueOf(
-                    java.time.LocalDate.ofEpochDay(st.d2)), st.v2, prom)
-              }
-              st = PeakState(st.d2, st.v2, epochDay, e.x)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    dailyFold[String, DailyValue, PeakState, PeakOut](daily, _.series, _.day,
+      PeakState(Long.MinValue, 0.0, Long.MinValue, 0.0), _.d2) {
+      (series, st, e, day) =>
+        // ROW adjacency in day order — the batch lag/lead convention
+        // (calendar holes are just neighbors, not edges)
+        val peak =
+          if (st.d1 != Long.MinValue && st.v2 > st.v1 && st.v2 > e.x)
+            Some(PeakOut(series, dateOf(st.d2), st.v2,
+              st.v2 - math.max(st.v1, e.x)))
+          else None
+        (PeakState(st.d2, st.v2, day, e.x), peak)
+    }
   }
 
   final case class HoltState(n: Long, x1: Double, level: Double,
@@ -1467,42 +1414,26 @@ object StreamingOps {
   def holtStream(daily: Dataset[DailyValue], alpha: Double = 0.5,
                  beta: Double = 0.25): Dataset[HoltOut] = {
     import daily.sparkSession.implicits._
-    daily
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[HoltState, HoltOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (series: String, it: Iterator[DailyValue],
-         state: GroupState[HoltState]) =>
-          var st = state.getOption.getOrElse(
-            HoltState(0L, 0.0, 0.0, 0.0, 0.0, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[HoltOut]
-          it.toSeq.sortBy(_.day.getTime).foreach { e =>
-            // toLocalDate inverts Spark's DateType → java.sql.Date decode
-            // (local midnight) TZ-independently; floorDiv of getTime would
-            // shift a day on a JVM east of UTC
-            val epochDay = e.day.toLocalDate.toEpochDay
-            if (st.lastEpochDay == Long.MinValue || epochDay > st.lastEpochDay) {
-              val n = st.n + 1
-              st =
-                if (n == 1L) HoltState(n, e.x, st.level, st.trend, st.sae, epochDay)
-                else if (n == 2L)
-                  HoltState(n, st.x1, e.x, e.x - st.x1, st.sae, epochDay)
-                else {
-                  // operation order matches Forecast.holtLinear term by term
-                  val f = st.level + st.trend
-                  val sae = st.sae + math.abs(e.x - f)
-                  val lNew = alpha * e.x + (1.0 - alpha) * f
-                  val bNew = beta * (lNew - st.level) + (1.0 - beta) * st.trend
-                  HoltState(n, st.x1, lNew, bNew, sae, epochDay)
-                }
-              if (n >= 3L)
-                out += HoltOut(series, e.day, n, st.level, st.trend,
-                  st.level + st.trend, st.sae / (n - 2))
-            }
+    dailyFold[String, DailyValue, HoltState, HoltOut](daily, _.series, _.day,
+      HoltState(0L, 0.0, 0.0, 0.0, 0.0, Long.MinValue), _.lastEpochDay) {
+      (series, st, e, day) =>
+        val n = st.n + 1
+        val next =
+          if (n == 1L) HoltState(n, e.x, st.level, st.trend, st.sae, day)
+          else if (n == 2L)
+            HoltState(n, st.x1, e.x, e.x - st.x1, st.sae, day)
+          else {
+            // operation order matches Forecast.holtLinear term by term
+            val f = st.level + st.trend
+            val sae = st.sae + math.abs(e.x - f)
+            val lNew = alpha * e.x + (1.0 - alpha) * f
+            val bNew = beta * (lNew - st.level) + (1.0 - beta) * st.trend
+            HoltState(n, st.x1, lNew, bNew, sae, day)
           }
-          state.update(st)
-          out.iterator
-      }
+        (next, if (n < 3L) None
+          else Some(HoltOut(series, e.day, n, next.level, next.trend,
+            next.level + next.trend, next.sae / (n - 2))))
+    }
   }
 
   /** Streaming twin of [[graft.ext.Profiling.freshness]]: per-source event
@@ -1744,77 +1675,68 @@ object StreamingOps {
     require(p > 0.0 && p < 1.0, s"p must lie in (0,1), got $p")
     import values.sparkSession.implicits._
     val d = Array(0.0, p / 2.0, p, (1.0 + p) / 2.0, 1.0)
-    values
-      .groupByKey(_.series)
-      .flatMapGroupsWithState[P2State, P2Out](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (series: String, it: Iterator[P2Value], state: GroupState[P2State]) =>
-          var st = state.getOption.getOrElse(
-            P2State(Seq.empty, Seq.empty, Seq.empty, Seq.empty, 0L))
-          var init = st.init.toArray
-          var q = st.q.toArray
-          var n = st.n.toArray
-          var np = st.np.toArray
-          var count = st.count
-          it.toSeq.sortBy(_.seq).foreach { v =>
-            val x = v.x
-            count += 1
-            if (q.isEmpty) {
-              init = init :+ x
-              if (init.length == 5) {
-                q = init.sorted
-                n = Array(1L, 2L, 3L, 4L, 5L)
-                np = Array(1.0, 1.0 + 4.0 * d(1), 1.0 + 4.0 * d(2),
-                  1.0 + 4.0 * d(3), 5.0)
-                init = Array.empty
-              }
-            } else {
-              // locate cell k, clamping the extreme markers
-              var k = -1
-              if (x < q(0)) { q(0) = x; k = 0 }
-              else if (x >= q(4)) { q(4) = math.max(q(4), x); k = 3 }
-              else {
-                k = 0
-                var i = 1
-                while (i < 5 && x >= q(i)) { k = i; i += 1 }
-                if (k > 3) k = 3
-              }
-              var i = k + 1
-              while (i < 5) { n(i) += 1; i += 1 }
-              i = 0
-              while (i < 5) { np(i) += d(i); i += 1 }
-              // adjust interior markers
-              i = 1
-              while (i <= 3) {
-                val dd = np(i) - n(i)
-                if ((dd >= 1.0 && n(i + 1) - n(i) > 1) ||
-                    (dd <= -1.0 && n(i - 1) - n(i) < -1)) {
-                  val s = if (dd >= 1.0) 1 else -1
-                  // piecewise-parabolic (P²) candidate
-                  val qp = q(i) + s.toDouble / (n(i + 1) - n(i - 1)) * (
-                    (n(i) - n(i - 1) + s) * (q(i + 1) - q(i)) /
-                      (n(i + 1) - n(i)) +
-                    (n(i + 1) - n(i) - s) * (q(i) - q(i - 1)) /
-                      (n(i) - n(i - 1)))
-                  q(i) =
-                    if (q(i - 1) < qp && qp < q(i + 1)) qp
-                    else q(i) + s * (q(i + s) - q(i)) / (n(i + s) - n(i))
-                  n(i) += s
-                }
-                i += 1
-              }
-            }
+    keyedFold[String, P2Value, P2State, P2Out](values, _.series,
+      OutputMode.Update, Some(Ordering.by(_.seq)))({ (_, cur, v) =>
+      val st = cur.getOrElse(
+        P2State(Seq.empty, Seq.empty, Seq.empty, Seq.empty, 0L))
+      val x = v.x
+      if (st.q.isEmpty) {
+        val init = st.init :+ x
+        (Some(
+          if (init.length < 5) st.copy(init = init, count = st.count + 1)
+          else P2State(Seq.empty, init.sorted, Seq(1L, 2L, 3L, 4L, 5L),
+            Seq(1.0, 1.0 + 4.0 * d(1), 1.0 + 4.0 * d(2), 1.0 + 4.0 * d(3),
+              5.0), st.count + 1)), None)
+      } else {
+        val q = st.q.toArray
+        val n = st.n.toArray
+        val np = st.np.toArray
+        // locate cell k, clamping the extreme markers
+        var k = -1
+        if (x < q(0)) { q(0) = x; k = 0 }
+        else if (x >= q(4)) { q(4) = math.max(q(4), x); k = 3 }
+        else {
+          k = 0
+          var i = 1
+          while (i < 5 && x >= q(i)) { k = i; i += 1 }
+          if (k > 3) k = 3
+        }
+        var i = k + 1
+        while (i < 5) { n(i) += 1; i += 1 }
+        i = 0
+        while (i < 5) { np(i) += d(i); i += 1 }
+        // adjust interior markers
+        i = 1
+        while (i <= 3) {
+          val dd = np(i) - n(i)
+          if ((dd >= 1.0 && n(i + 1) - n(i) > 1) ||
+              (dd <= -1.0 && n(i - 1) - n(i) < -1)) {
+            val s = if (dd >= 1.0) 1 else -1
+            // piecewise-parabolic (P²) candidate
+            val qp = q(i) + s.toDouble / (n(i + 1) - n(i - 1)) * (
+              (n(i) - n(i - 1) + s) * (q(i + 1) - q(i)) /
+                (n(i + 1) - n(i)) +
+              (n(i + 1) - n(i) - s) * (q(i) - q(i - 1)) /
+                (n(i) - n(i - 1)))
+            q(i) =
+              if (q(i - 1) < qp && qp < q(i + 1)) qp
+              else q(i) + s * (q(i + s) - q(i)) / (n(i + s) - n(i))
+            n(i) += s
           }
-          st = P2State(init.toSeq, q.toSeq, n.toSeq, np.toSeq, count)
-          state.update(st)
-          val est =
-            if (q.nonEmpty) q(2)
-            else if (init.nonEmpty) {
-              val s = init.sorted
-              s(math.min(s.length - 1, (p * s.length).toInt))
-            } else Double.NaN
-          Iterator.single(P2Out(series, count, est))
+          i += 1
+        }
+        (Some(P2State(st.init, q.toSeq, n.toSeq, np.toSeq, st.count + 1)),
+          None)
       }
+    }, { (series, st) =>
+      val est =
+        if (st.q.nonEmpty) st.q(2)
+        else if (st.init.nonEmpty) {
+          val s = st.init.sorted
+          s(math.min(s.length - 1, (p * s.length).toInt))
+        } else Double.NaN
+      (st, Some(P2Out(series, st.count, est)))
+    })
   }
 
   final case class TurnoverEvent(board: String, key: Long, ts: Timestamp)
@@ -1855,41 +1777,30 @@ object StreamingOps {
     def topOf(counts: Map[Long, Long]): Seq[Long] =
       counts.toSeq.sortBy { case (key, n) => (-n, key) }.take(k).map(_._1)
 
-    events
-      .groupByKey(_.board)
-      .flatMapGroupsWithState[TurnoverState, TurnoverOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (board: String, it: Iterator[TurnoverEvent],
-         state: GroupState[TurnoverState]) =>
-          var st = state.getOption.getOrElse(
-            TurnoverState(Long.MinValue, Map.empty, Long.MinValue, Seq.empty))
-          val out = scala.collection.mutable.ArrayBuffer.empty[TurnoverOut]
-          it.toSeq.sortBy(e => (e.ts.getTime, e.key)).foreach { e =>
-            val day = Math.floorDiv(e.ts.getTime, 86400000L)
-            if (st.day == Long.MinValue) {
-              st = st.copy(day = day, counts = Map(e.key -> 1L))
-            } else if (day == st.day) {
-              st = st.copy(counts =
-                st.counts.updated(e.key, st.counts.getOrElse(e.key, 0L) + 1L))
-            } else if (day > st.day) {
-              // the open day closes: its top-k is final
-              val top = topOf(st.counts)
-              if (st.prevDay == st.day - 1) {
-                val common = top.toSet.intersect(st.prevTop.toSet).size.toLong
-                val denom = (top.size + st.prevTop.size - common).toDouble
-                // Date.valueOf(LocalDate) round-trips the UTC epoch day
-                // through Spark's JVM-default-TZ DateType conversion
-                // without shifting on a non-UTC JVM
-                out += TurnoverOut(board,
-                  java.sql.Date.valueOf(
-                    java.time.LocalDate.ofEpochDay(st.day)),
-                  common, common.toDouble / denom)
-              }
-              st = TurnoverState(day, Map(e.key -> 1L), st.day, top)
-            } // day < st.day: late event for an already-closed day — dropped
-          }
-          state.update(st)
-          out.iterator
-      }
+    keyedFold[String, TurnoverEvent, TurnoverState, TurnoverOut](events,
+      _.board, OutputMode.Append, Some(Ordering.by(e => (e.ts.getTime, e.key)))) {
+      (board, cur, e) =>
+        val st = cur.getOrElse(
+          TurnoverState(Long.MinValue, Map.empty, Long.MinValue, Seq.empty))
+        val day = Math.floorDiv(e.ts.getTime, 86400000L)
+        if (st.day == Long.MinValue)
+          (Some(st.copy(day = day, counts = Map(e.key -> 1L))), None)
+        else if (day == st.day)
+          (Some(st.copy(counts =
+            st.counts.updated(e.key, st.counts.getOrElse(e.key, 0L) + 1L))), None)
+        else if (day > st.day) {
+          // the open day closes: its top-k is final
+          val top = topOf(st.counts)
+          val row =
+            if (st.prevDay != st.day - 1) None
+            else {
+              val common = top.toSet.intersect(st.prevTop.toSet).size.toLong
+              val denom = (top.size + st.prevTop.size - common).toDouble
+              Some(TurnoverOut(board, dateOf(st.day), common,
+                common.toDouble / denom))
+            }
+          (Some(TurnoverState(day, Map(e.key -> 1L), st.day, top)), row)
+        } else (Some(st), None) // late event for an already-closed day — dropped
+    }
   }
 }

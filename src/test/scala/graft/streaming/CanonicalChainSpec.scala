@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import scala.util.Random
 
-import graft.{Scratch, SparkTestBase}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
+import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.GroupStateTimeout
@@ -52,32 +51,10 @@ class CanonicalChainSpec extends SparkTestBase {
   private def replay[I <: Product : Encoder](batches: Seq[Seq[I]],
                                              first: DataFrame => Dataset[_],
                                              second: DataFrame => Dataset[_])
-      : Seq[String] = {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[I]
-    val dir = Files.createTempDirectory("graft_chain")
-    Scratch.register(dir.toString)
-    val outDir = dir.resolve("out").toString
-    val ckDir = dir.resolve("ck").toString
-    val noDataConf = "spark.sql.streaming.noDataMicroBatches.enabled"
-    spark.conf.set(noDataConf, "false")
-    try Seq(first -> batches.take(SwitchAt), second -> batches.drop(SwitchAt))
-      .foreach { case (build, part) =>
-        val query = build(input.toDF()).toDF().writeStream
-          .foreachBatch { (df: Dataset[Row], _: Long) =>
-            df.write.mode("append").parquet(outDir)
-          }
-          .outputMode("append")
-          .option("checkpointLocation", ckDir)
-          .start()
-        try part.foreach { b =>
-          if (b.nonEmpty) input.addData(b: _*)
-          query.processAllAvailable()
-        } finally query.stop()
-      }
-    finally spark.conf.unset(noDataConf)
-    spark.read.parquet(outDir).collect().map(_.toSeq.mkString(",")).toSeq.sorted
-  }
+      : Seq[String] =
+    StreamReplay.replay(spark, batches, first,
+        resume = Some(SwitchAt -> second), noDataBatches = false)
+      .collect().map(_.toSeq.mkString(",")).toSeq.sorted
 
   /** Parent form, current form, and parent checkpoint resumed by the
     * current form: all three emit the same multiset, and it is not empty. */

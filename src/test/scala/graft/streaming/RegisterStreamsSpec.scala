@@ -6,11 +6,11 @@ import org.apache.spark.sql.streaming.Trigger
 
 final case class KmvItem(item: Long)
 
-/** Round-11 streaming twins: KMV and AMS sign-sketch registers — drained
-  * snapshots must equal an independent plain-Scala replay of the batch
-  * register math (the hll/bloomRegistersStream discipline).
+/** The KMV and AMS sign-sketch register streams: drained snapshots must
+  * equal an independent plain-Scala replay of the batch register math (the
+  * hll/bloomRegistersStream discipline).
   */
-class VertexStreamingSpec extends SparkTestBase {
+class RegisterStreamsSpec extends SparkTestBase {
   import spark.implicits._
 
   private def md5h32(s: String): Long =

@@ -657,6 +657,9 @@ class StreamingOpsSpec extends SparkTestBase {
       .writeStream.format("memory").queryName("runs_stream")
       .outputMode("update").start()
     q.processAllAvailable()
+    // late + duplicate arrivals must be dropped, not folded
+    input.addData(DailyValue("a", d(1), 999.0), DailyValue("a", d(3), 999.0))
+    q.processAllAvailable()
     input.addData(rows.drop(3): _*)
     q.processAllAvailable(); q.stop()
     val last = spark.table("runs_stream").collect()
@@ -685,6 +688,10 @@ class StreamingOpsSpec extends SparkTestBase {
     val q = StreamingOps.peaksStream(input.toDS())
       .writeStream.format("memory").queryName("peaks_stream")
       .outputMode("update").start()
+    q.processAllAvailable()
+    // late + duplicate arrivals must be dropped, not folded (folded, they
+    // would confirm a peak of 999 on day 3)
+    input.addData(DailyValue("a", d(2), 0.0), DailyValue("a", d(3), 999.0))
     q.processAllAvailable()
     input.addData(rows.drop(3): _*)
     q.processAllAvailable(); q.stop()
@@ -1503,6 +1510,38 @@ class StreamingOpsSpec extends SparkTestBase {
     }
   }
 
+  test("ewmaDailyStream drops late and duplicate days: a later micro-batch " +
+      "of them leaves the emitted ewma values unchanged") {
+    implicit val sc = spark.sqlContext
+    import StreamingOps.{DailyCount, EwmaOut}
+    def day(s: String) = java.sql.Date.valueOf(s)
+    val first = Seq(DailyCount("A", day("2024-01-01"), 10L),
+      DailyCount("A", day("2024-01-02"), 20L))
+    val stale = Seq(DailyCount("A", day("2024-01-01"), 99L),
+      DailyCount("A", day("2024-01-02"), 99L))
+    val last = Seq(DailyCount("A", day("2024-01-04"), 40L),
+      DailyCount("A", day("2024-01-05"), 30L))
+    def emitted(name: String, batches: Seq[DailyCount]*): Seq[(String, Double)] = {
+      val input = MemoryStream[DailyCount]
+      val query = StreamingOps.ewmaDailyStream(input.toDS(), decay = 0.9)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("update").start()
+      batches.foreach { b =>
+        input.addData(b: _*)
+        query.processAllAvailable()
+      }
+      query.stop()
+      spark.table(name).as[EwmaOut].collect()
+        .map(r => r.day.toString -> r.ewma).toSeq.sorted
+    }
+    val inOrder = emitted("ewma_in_order", first, last)
+    assert(inOrder.map(_._1) ==
+      Seq("2024-01-01", "2024-01-02", "2024-01-04", "2024-01-05"))
+    val withStale = emitted("ewma_stale", first, stale, last)
+    assert(withStale == inOrder,
+      s"late/duplicate days moved the ewma: $withStale vs $inOrder")
+  }
+
   test("heavyHittersStream: sharded sketches merge to the batch guarantees") {
     implicit val sc = spark.sqlContext
     import StreamingOps.{HHItem, HHCounter}
@@ -1619,9 +1658,16 @@ class StreamingOpsSpec extends SparkTestBase {
     val query = StreamingOps.acfDailyStream(input.toDS(), maxLag = 4)
       .writeStream.format("memory").queryName("acf_out")
       .outputMode("update").start()
-    vals.grouped(4).foreach { chunk =>
+    vals.grouped(4).zipWithIndex.foreach { case (chunk, i) =>
       input.addData(chunk: _*)
       query.processAllAvailable()
+      // late + duplicate arrivals must be dropped, not folded
+      if (i == 0) {
+        input.addData(
+          StreamingOps.DailyValue("s", java.sql.Date.valueOf("2024-01-02"), 999.0),
+          StreamingOps.DailyValue("s", java.sql.Date.valueOf("2024-01-04"), 999.0))
+        query.processAllAvailable()
+      }
     }
     query.stop()
 
