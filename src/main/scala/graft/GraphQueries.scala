@@ -335,8 +335,7 @@ object GraphQueries extends QueryFamily("graph") {
     // the edge table feeds LPA (3 rounds) AND the modularity joins —
     // checkpoint once so the basket-explode pipeline doesn't re-run per
     // consumer (the q_dedup_prefix localCheckpoint discipline)
-    val edges = Inputs.copurchaseEdges(spark, dir)
-      .localCheckpoint(eager = true)
+    val edges = Materialize(Inputs.copurchaseEdges(spark, dir)).df
     val labels = graft.ext.Communities.labelPropagation(edges,
       "src", "dst", "w", iters = 3)
     graft.ext.Communities.modularity(edges, "src", "dst", "w",
@@ -603,8 +602,7 @@ object GraphQueries extends QueryFamily("graph") {
     // Materialize the co-purchase pair table once: the union's two projections
     // and the two checkpoints inside personalizedPageRank (edge table, seed
     // set) otherwise each re-execute the whole basket-pair pipeline.
-    val e = Inputs.copurchaseEdges(spark, dir)
-      .localCheckpoint(eager = true)
+    val e = Materialize(Inputs.copurchaseEdges(spark, dir)).df
     val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst"),
       col("w")))
     val seeds = sym.select(col("src").as("node")).distinct()

@@ -173,10 +173,9 @@ object MetricsQueries extends QueryFamily("metrics") {
     // basket form: one order-keyed set aggregate feeds pair generation, item
     // frequencies AND the order count — checkpointed because three branches
     // of one aggregate would otherwise each re-run it (the plan-shape trap)
-    val baskets = Tables.lineitem(spark, dir)
+    val baskets = Materialize(Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("okey"), col("l_partkey").as("item"))
-      .groupBy(col("okey")).agg(collect_set(col("item")).as("items"))
-      .localCheckpoint(eager = true)
+      .groupBy(col("okey")).agg(collect_set(col("item")).as("items"))).df
     val pairs = baskets
       .select(explode(col("items")).as("item_a"), col("items"))
       .select(col("item_a"), explode(col("items")).as("item_b"))
@@ -425,11 +424,10 @@ object MetricsQueries extends QueryFamily("metrics") {
     // undirected adjacency from ONE generator (the union-of-projections shape
     // re-runs the edge aggregate per branch); the edge table is iterated over
     // three differently-keyed branches, so materialize it once
-    val adj = repeatEdges(spark, dir).select(explode(array(
+    val adj = Materialize(repeatEdges(spark, dir).select(explode(array(
         struct(col("src").as("u"), col("dst").as("v")),
         struct(col("dst").as("u"), col("src").as("v")))).as("p"))
-      .select(col("p.u"), col("p.v"))
-      .localCheckpoint(eager = true)
+      .select(col("p.u"), col("p.v"))).df
     val hop2 = adj.as("x").join(adj.as("y"), col("x.v") === col("y.u"))
       .filter(col("x.u") =!= col("y.v"))
       .groupBy(col("x.u").as("item_id"), col("y.v").as("rec_id"))
@@ -582,8 +580,8 @@ object MetricsQueries extends QueryFamily("metrics") {
     // the distinct interaction table feeds three differently-keyed branches
     // (popularity top-200, the user roster, the history anti-join) — one
     // materialization instead of three sales-join re-runs (17 scans observed)
-    val a = sales(spark, dir).select(col("user_id"), col("item_id")).distinct()
-      .localCheckpoint(eager = true)
+    val a = Materialize(sales(spark, dir)
+      .select(col("user_id"), col("item_id")).distinct()).df
     val popTop = a.groupBy(col("item_id")).agg(count(lit(1)).as("pop_n"))
       .orderBy(col("pop_n").desc, col("item_id")).limit(200)
       .select(col("item_id"))

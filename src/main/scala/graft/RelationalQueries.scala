@@ -1826,15 +1826,13 @@ object RelationalQueries extends QueryFamily("relational") {
   def qConsistentHash(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.Sharding
     val cust = Tables.customer(spark, dir).select(col("c_custkey"))
-    val ring17 = Sharding.ring(spark, 17, 8)
-      .localCheckpoint(eager = true) // both owner passes read it
+    val ring17 = Materialize(Sharding.ring(spark, 17, 8)).df // both owner passes read it
     val ring16 = ring17.filter(col("node") < 16)
-    val owners = Sharding
+    val owners = Materialize(Sharding
       .consistentOwners(cust, "c_custkey", ring16)
       .withColumnRenamed("node", "nb")
       .join(Sharding.consistentOwners(cust, "c_custkey", ring17)
-        .withColumnRenamed("node", "na"), "key")
-      .localCheckpoint(eager = true) // three count passes read it
+        .withColumnRenamed("node", "na"), "key")).df // three count passes read it
     val nodes = spark.range(17).select(col("id").as("node"))
     nodes
       .join(owners.groupBy(col("nb").as("node"))
@@ -1914,12 +1912,11 @@ object RelationalQueries extends QueryFamily("relational") {
     import graft.ext.Sharding
     val cust = Tables.customer(spark, dir).select(col("c_custkey"))
     val n16 = spark.range(16).select(col("id").as("node"))
-    val owners = Sharding.rendezvousOwners(cust, "c_custkey", n16)
+    val owners = Materialize(Sharding.rendezvousOwners(cust, "c_custkey", n16)
       .withColumnRenamed("node", "nb")
       .join(Sharding
         .rendezvousOwners(cust, "c_custkey", n16.filter(col("node") > 0))
-        .withColumnRenamed("node", "na"), "key")
-      .localCheckpoint(eager = true)
+        .withColumnRenamed("node", "na"), "key")).df
     n16
       .join(owners.groupBy(col("nb").as("node"))
         .agg(count(lit(1)).as("kb")), Seq("node"), "left")

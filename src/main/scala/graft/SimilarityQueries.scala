@@ -1414,11 +1414,11 @@ object SimilarityQueries extends QueryFamily("similarity") {
     val emb = Tables.embeddings(spark, dir)
     val seeds = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val cents = Clustering.lloydCentroids(emb, "vec_id", "embedding", seeds,
-        "cid", "cvec", iters = 1, dims = 64)
-      .localCheckpoint(eager = true) // assignment + residual join read it
-    val resid = ProductQuant.residualVectors(emb, "vec_id", "embedding",
-      cents).localCheckpoint(eager = true) // codebook slice + encode read it
+    val cents = Materialize(Clustering.lloydCentroids(emb, "vec_id",
+      "embedding", seeds, "cid", "cvec", iters = 1, dims = 64))
+      .df // assignment + residual join read it
+    val resid = Materialize(ProductQuant.residualVectors(emb, "vec_id",
+      "embedding", cents)).df // codebook slice + encode read it
     val residCb = resid.filter(col("vec_id") < 4)
       .select(col("vec_id").as("code"), col("resid").as("cvec"))
     val rawMse = ProductQuant.subspaceMse(ProductQuant.encode(

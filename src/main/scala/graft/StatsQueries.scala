@@ -2434,13 +2434,13 @@ object StatsQueries extends QueryFamily("stats") {
       .select(col("p_brand").as("brand"),
         (round(col("l_discount") * 100, 0).cast("long") >= 5).as("hi"),
         (col("l_returnflag") === "R").cast("long").as("ret"))
-    val byBrand = x.groupBy(col("brand"))
+    // overall + per-stratum branches read it
+    val byBrand = Materialize(x.groupBy(col("brand"))
       .agg(sum(when(col("hi"), 1L).otherwise(0L)).as("n_hi"),
         sum(when(col("hi"), col("ret")).otherwise(0L)).as("r_hi"),
         sum(when(!col("hi"), 1L).otherwise(0L)).as("n_lo"),
         sum(when(!col("hi"), col("ret")).otherwise(0L)).as("r_lo"))
-      .filter(col("n_hi") > 0 && col("n_lo") > 0)
-      .localCheckpoint(eager = true) // overall + per-stratum branches read it
+      .filter(col("n_hi") > 0 && col("n_lo") > 0)).df
     val diffB = col("r_hi").cast("double") / col("n_hi") -
       col("r_lo").cast("double") / col("n_lo")
     val overall = byBrand.agg(
@@ -2495,12 +2495,11 @@ object StatsQueries extends QueryFamily("stats") {
     * purchases?", the two-series companion of q_acf.
     */
   def qXcorr(spark: SparkSession, dir: String): DataFrame = {
-    val dly = Tables.events(spark, dir)
+    val dly = Materialize(Tables.events(spark, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"),
         round(col("value") * 1e6, 0).cast("decimal(38,0)").as("vm"))
       .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("vm")).as("v"))
-      .localCheckpoint(eager = true) // both series filters read it
+      .agg(sum(col("vm")).as("v"))).df // both series filters read it
     graft.ext.Series.crossCorrelation(
       dly.filter(col("event_type") === "click"),
       dly.filter(col("event_type") === "purchase"),
@@ -2600,9 +2599,9 @@ object StatsQueries extends QueryFamily("stats") {
     * |days| × active-users rows, a calendar-bounded frame.
     */
   def qStickiness(spark: SparkSession, dir: String): DataFrame = {
-    val ud = Tables.events(spark, dir)
-      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      .localCheckpoint(eager = true) // spine + DAU + MAU branches read it
+    // spine + DAU + MAU branches read it
+    val ud = Materialize(Tables.events(spark, dir)
+      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()).df
     val days = ud.select(col("day")).distinct().withColumnRenamed("day", "d")
     val dau = ud.groupBy(col("day").as("d")).agg(count(lit(1)).as("dau"))
     val mau = days.join(ud,
@@ -2758,12 +2757,11 @@ object StatsQueries extends QueryFamily("stats") {
     * the literal ln θ, 14-day truncation.)
     */
   def qAdstock(spark: SparkSession, dir: String): DataFrame = {
-    val dly = Tables.events(spark, dir)
+    val dly = Materialize(Tables.events(spark, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"),
         round(col("value") * 1e6, 0).cast("decimal(38,0)").as("vm"))
       .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("vm")).as("v"))
-      .localCheckpoint(eager = true)
+      .agg(sum(col("vm")).as("v"))).df
     graft.ext.Attribution.adstockCorrelation(
       dly.filter(col("event_type") === "click"),
       dly.filter(col("event_type") === "purchase"),
@@ -2907,10 +2905,11 @@ object StatsQueries extends QueryFamily("stats") {
       .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
       .select(col("l_partkey"), date_format(col("o_orderdate"), "yyyy-MM")
         .as("m"))
-    val s1 = li.filter(col("m") === "1995-01").select(col("l_partkey")).distinct()
-      .localCheckpoint(eager = true) // counted + overlap-joined
-    val s2 = li.filter(col("m") === "1995-02").select(col("l_partkey")).distinct()
-      .localCheckpoint(eager = true)
+    // counted + overlap-joined
+    val s1 = Materialize(li.filter(col("m") === "1995-01")
+      .select(col("l_partkey")).distinct()).df
+    val s2 = Materialize(li.filter(col("m") === "1995-02")
+      .select(col("l_partkey")).distinct()).df
     val n1 = s1.agg(count(lit(1)).as("n1"))
     val n2 = s2.agg(count(lit(1)).as("n2"))
     val m = s1.join(s2, "l_partkey").agg(count(lit(1)).as("m"))
@@ -3004,12 +3003,12 @@ object StatsQueries extends QueryFamily("stats") {
     * CLUSTERED by brand, where the naive binomial SE undercounts.
     */
   def qJackknifeSe(spark: SparkSession, dir: String): DataFrame = {
-    val b = Tables.lineitem(spark, dir)
+    // totals + per-brand LOO read it
+    val b = Materialize(Tables.lineitem(spark, dir)
       .join(Tables.part(spark, dir), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n_b"),
-        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("r_b"))
-      .localCheckpoint(eager = true) // totals + per-brand LOO read it
+        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("r_b"))).df
     val tot = b.agg(sum(col("n_b")).as("nn"), sum(col("r_b")).as("rr"),
       count(lit(1)).as("k"))
     val loo = b.crossJoin(broadcast(tot))

@@ -2276,9 +2276,8 @@ object TextQueries extends QueryFamily("text") {
     // checkpoint the (doc, bucket) counts so the token explode over the
     // text column runs once, not once per consumer (plan audit: 9 scans
     // of documents without it)
-    val dgl = tok.groupBy(col("doc_id"), col("g"), col("lang"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val dgl = Materialize(tok.groupBy(col("doc_id"), col("g"), col("lang"))
+      .agg(count(lit(1)).as("c"))).df
     val buckets = dgl.groupBy(col("g"))
       .agg(sum(when(col("lang") === "de", col("c")).otherwise(0L)).as("ct"),
         sum(col("c")).as("cr"))

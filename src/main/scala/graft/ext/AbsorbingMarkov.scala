@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Absorption probabilities of an empirical Markov chain by fixed-round
   * value iteration: from each state, the probability of eventually reaching
@@ -48,18 +49,16 @@ object AbsorbingMarkov {
     // iteration builds one nested plan over those tiny tables (4 rounds of
     // 25-row joins need no per-round materialization; a per-round
     // localCheckpoint would pay 2 jobs/round of pure scheduling overhead)
-    val trans = events
+    val trans = Materialize(events
       .select(Seq(col(entityCol), col(stateCol).as("s")) ++
         orderCols.map(col): _*)
       .withColumn("t", lead(col("s"), 1).over(w))
       .filter(col("t").isNotNull)
       .groupBy(col("s"), col("t")).agg(count(lit(1)).as("n_st"))
-      .repartition(1)
-      .localCheckpoint(eager = true)
+      .repartition(1)).df
     val outs = trans.groupBy(col("s")).agg(sum(col("n_st")).as("n_s"))
-    val states = events.select(col(stateCol).as("state")).distinct()
-      .repartition(1)
-      .localCheckpoint(eager = true)
+    val states = Materialize(events.select(col(stateCol).as("state")).distinct()
+      .repartition(1)).df
     var p = states.select(col("state"),
       when(col("state") === absorbing, lit(1.0)).otherwise(lit(0.0))
         .as("p"))
@@ -123,23 +122,20 @@ object AbsorbingMarkov {
     // column literally called "t", say) cannot shadow them
     val base = events.select(Seq(col(entityCol), col(stateCol).as("__s")) ++
       orderCols.map(col): _*)
-    val trans = base
+    val trans = Materialize(base
       .withColumn("__t", lead(col("__s"), 1).over(w))
       .filter(col("__t").isNotNull)
       .groupBy(col("__s").as("s"), col("__t").as("t"))
       .agg(count(lit(1)).as("n_st"))
-      .repartition(1)
-      .localCheckpoint(eager = true)
+      .repartition(1)).df
     val outs = trans.groupBy(col("s")).agg(sum(col("n_st")).as("n_s"))
-    val states = events.select(col(stateCol).as("state")).distinct()
-      .repartition(1)
-      .localCheckpoint(eager = true)
-    val starts = base
+    val states = Materialize(events.select(col(stateCol).as("state")).distinct()
+      .repartition(1)).df
+    val starts = Materialize(base
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .groupBy(col("__s").as("state")).agg(count(lit(1)).as("n_start"))
-      .repartition(1)
-      .localCheckpoint(eager = true)
+      .repartition(1)).df
     // start-weighted conversion of one ablated chain (removed = None for
     // the baseline): value iteration with p(removed) pinned 0
     def conv(removed: Option[String]) = {

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** BM25 ranked retrieval (Robertson & Zaragoza 2009) — the ranked complement
   * of the boolean `q_keyword_and` and the query-time counterpart of q_tfidf's
@@ -32,8 +33,8 @@ object Bm25 {
     require(terms.nonEmpty, "bm25TopK needs at least one query term")
     import org.apache.spark.sql.expressions.Window
     val toks = docs.select(col(idCol), explode(split(col(textCol), " ")).as("tok"))
-    val dl = toks.groupBy(col(idCol)).agg(count(lit(1)).as("dl"))
-      .localCheckpoint(eager = true) // corpus stats + per-doc join read it
+    // corpus stats + per-doc join read it
+    val dl = Materialize(toks.groupBy(col(idCol)).agg(count(lit(1)).as("dl"))).df
     val corpus = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_toks"))
     val tf = toks.filter(col("tok").isin(terms: _*))
       .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))
@@ -77,17 +78,16 @@ object Bm25 {
   def moreLikeThis(docs: DataFrame, idCol: String, textCol: String,
                    queryId: Long, topK: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tf = docs
+    // df agg + weights + query side read it
+    val tf = Materialize(docs
       .select(col(idCol), explode(split(col(textCol), " ")).as("tok"))
-      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = true) // df agg + weights + query side read it
+      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))).df
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val weights = tf.join(dfreq, "tok").crossJoin(broadcast(n))
+    val weights = Materialize(tf.join(dfreq, "tok").crossJoin(broadcast(n))
       .select(col(idCol), col("tok"),
         (col("tf") * log((col("n_docs") + 1).cast("double") / (col("df") + 1)))
-          .as("w"))
-      .localCheckpoint(eager = true) // norms + both dot-product sides read it
+          .as("w"))).df // norms + both dot-product sides read it
     val norms = weights.groupBy(col(idCol))
       .agg(sqrt(sum((col("w") * col("w")).cast("decimal(18,8)"))
         .cast("double")).as("nrm"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Distributed BPE merge training (Sennrich et al. 2016, arXiv:1508.07909) in
   * the standard word-frequency formulation: the corpus collapses to a
@@ -85,10 +86,9 @@ object BpeTrain {
       .filter(length(col("__w")) > 0)
       .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
       .filter(col("__f") >= minFreq)
-    val base: Dataset[VocabRow] = vocabDf
+    val base: Dataset[VocabRow] = Materialize(vocabDf
       .as[(String, Long)]
-      .map { case (w, f) => VocabRow(w.map(_.toString) :+ EndOfWord, f) }
-      .localCheckpoint(eager = true)
+      .map { case (w, f) => VocabRow(w.map(_.toString) :+ EndOfWord, f) }).df
     // cheap job over the already-materialized checkpoint blocks (the Hits
     // partitioned-copy gate pattern): decide where the merge loop runs.
     // sum(size(symbols)) is the collected-footprint proxy the gate bounds
@@ -146,7 +146,7 @@ object BpeTrain {
           vocab = applyMerge(vocab, left, right)
           iter += 1
           if (iter % CheckpointEvery == 0 && iter < nMerges) {
-            val next = vocab.localCheckpoint(eager = true)
+            val next = Materialize(vocab).df
             if (ckpt != null) ckpt.unpersist()
             vocab = next
             ckpt = next
@@ -304,8 +304,16 @@ object BpeTrain {
     * (group, n_docs, n_words, n_tokens, fertility, chars_per_token).
     */
   def fertilityByGroup(docs: DataFrame, idCol: String, textCol: String,
-                       groupCol: String, merges: Seq[Merge]): DataFrame = {
-    val enc = encode(docs, idCol, textCol, merges)
+                       groupCol: String, merges: Seq[Merge]): DataFrame =
+    fertility(docs, idCol, textCol, groupCol,
+      encode(docs, idCol, textCol, merges))
+
+  /** The group-keyed aggregate behind every tokenizer's `fertilityByGroup`,
+    * over `enc`, that tokenizer's per-doc (idCol, n_tokens, n_words, ...)
+    * encode output.
+    */
+  private[ext] def fertility(docs: DataFrame, idCol: String, textCol: String,
+                             groupCol: String, enc: DataFrame): DataFrame =
     docs.select(col(idCol), col(groupCol).as("grp"),
         length(col(textCol)).cast("long").as("__chars"))
       .join(enc, idCol)
@@ -315,7 +323,6 @@ object BpeTrain {
       .select(col("grp"), col("n_docs"), col("n_words"), col("n_tokens"),
         round(col("n_tokens").cast("double") / col("n_words"), 6).as("fertility"),
         round(col("__c").cast("double") / col("n_tokens"), 6).as("chars_per_token"))
-  }
 
   /** Highest-frequency adjacent symbol pair (freq desc, then (left, right)
     * asc for determinism); None when no row has two symbols left.

@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.{Materialize, Materialized}
 
 /** Deterministic distributed graph coloring — Jones & Plassmann, "A
   * parallel graph coloring heuristic" (SIAM J. Sci. Comput. 1993): the
@@ -30,10 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Coloring {
 
-  private def prio(c: Column): Column =
-    conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long") *
-      2147483648L + c
-
   /** Color the undirected graph (any edge orientation; symmetrized and
     * self-loop-stripped internally) with at most `rounds` Jones-Plassmann
     * sweeps. Output: (node, color, round) — color ≥ 0 with the 1-based
@@ -46,32 +43,29 @@ object Coloring {
     val raw = edges.select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-    // Checkpointed HASH-PARTITIONED on u/node: localCheckpoint preserves
+    // Checkpointed HASH-PARTITIONED on u/node: Materialize preserves
     // the physical partitioning, so ROUND 1's groupBy(u) and the per-round
     // `used` semi-join (which always reads `sym`) reuse it instead of
     // re-shuffling. From round 2 on, eAct is a filter over the fused union
     // checkpoint below, which is NOT u-partitioned — that round's nbMin
     // re-shuffles, a measured trade: fusing the two per-round jobs into
     // one checkpoint beat keeping the u-partitioning (see SCALE.md r12).
-    val sym = raw.select(explode(array(
+    val sym = Materialize(raw.select(explode(array(
         struct(col("a").as("u"), col("b").as("v")),
         struct(col("b").as("u"), col("a").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"),
-        prio(col("e.v")).as("pv"))
-      .repartition(col("u"))
-      .localCheckpoint()
-    val nodes = sym.select(col("u").as("node")).distinct()
-      .select(col("node"), prio(col("node")).as("pn"))
-      .repartition(col("node")).localCheckpoint()
+        Mis.prio(col("e.v")).as("pv"))
+      .repartition(col("u"))).df
+    val Materialized(nodes, _, nodeBytes) = Materialize(sym
+      .select(col("u").as("node")).distinct()
+      .select(col("node"), Mis.prio(col("node")).as("pn"))
+      .repartition(col("node")))
     // Gated broadcast hints on every NODE-SIZED side joined against the
-    // edge table (winners, colored, per-round picks): checkpoint-fed
-    // LogicalRDDs carry the original edge-join-sized estimates, so the
-    // planner sort-merges and re-shuffles the full surviving edge table
-    // per round (the r17 Mis JobProbe finding — 41 MB → 1.8 MB shuffled
-    // there). All hinted tables are ≤ |V| rows by construction; one count
-    // job over the materialized nodes checkpoint bounds the whole run,
-    // and above the gate the joins stay shuffled as before.
-    val bcast = BroadcastGate.hint(nodes.count())
+    // edge table (winners, colored, per-round picks; why hints:
+    // [[graft.Materialize]]). All hinted tables are ≤ |V| rows of at most
+    // the node table's width, so its checkpoint bytes bound the whole run;
+    // above the gate the joins stay shuffled as before.
+    val bcast = Materialize.broadcastHint(nodeBytes)
     var eAct = sym
     var colored: DataFrame = nodes.limit(0)
       .select(col("node"), lit(0).as("color"), lit(0).as("round"))
@@ -110,7 +104,7 @@ object Coloring {
         // branch uses; its exchanges are identical, so ReuseExchange
         // evaluates them once. Filters over the checkpointed blocks then
         // split the two tables back out without recompute.
-        val both = picked0
+        val both = Materialize(picked0
           .select(lit("p").as("tag"), col("node").as("x1"),
             lit(null).cast("long").as("x2"), col("color").cast("long")
               .as("x3"), col("round").cast("long").as("x4"))
@@ -121,8 +115,7 @@ object Coloring {
               col("v") === col("dv"), "leftanti")
             .select(lit("e").as("tag"), col("u").as("x1"),
               col("v").as("x2"), col("pv").as("x3"),
-              lit(null).cast("long").as("x4")))
-          .localCheckpoint()
+              lit(null).cast("long").as("x4")))).df
         val picked = both.filter(col("tag") === "p")
           .select(col("x1").as("node"), col("x3").cast("int").as("color"),
             col("x4").cast("int").as("round"))
@@ -132,7 +125,7 @@ object Coloring {
       } else {
         // the last round has no edge shrink — checkpoint the picks alone
         // (colored is read twice by the output union + anti-join)
-        colored = colored.unionByName(picked0.localCheckpoint())
+        colored = colored.unionByName(Materialize(picked0).df)
       }
     }
     colored.unionByName(

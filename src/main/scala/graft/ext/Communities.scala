@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Synchronous label propagation (Raghavan et al. 2007, made deterministic) —
   * community detection over product co-purchase / user-interaction graphs,
@@ -33,16 +34,13 @@ object Communities {
     // materialize the DIRECTED edges first: the symmetrizing union reads
     // them twice, and without this the whole upstream edge pipeline (basket
     // explode included) executes once per union branch
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).as("w"))
-      .localCheckpoint(eager = true)
+    val e0 = Materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+        col(weightCol).as("w"))).df
     // symmetrize once; both directions carry the same weight
-    val sym = e0
-      .union(e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .localCheckpoint(eager = true)
+    val sym = Materialize(e0
+      .union(e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))).df
 
-    val nodes = sym.select(col("src").as("node")).distinct()
-      .localCheckpoint(eager = true)
+    val nodes = Materialize(sym.select(col("src").as("node")).distinct()).df
     var labels = nodes.select(col("node"), col("node").as("label"))
 
     val rank = Window.partitionBy(col("dst"))
@@ -58,10 +56,9 @@ object Communities {
       // `labels` is consumed TWICE each round (adoption join + carry-left
       // join), so the lazy plan re-executes round t−1 twice per round-t
       // evaluation — 2^iters round-1 runs by the end without this
-      labels = labels.join(adopted, Seq("node"), "left")
+      labels = Materialize(labels.join(adopted, Seq("node"), "left")
         .select(col("node"),
-          coalesce(col("new_label"), col("label")).as("label"))
-        .localCheckpoint(eager = true)
+          coalesce(col("new_label"), col("label")).as("label"))).df
     }
     labels
   }

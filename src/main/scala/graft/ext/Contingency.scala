@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Chi-square test of independence + Cramér's V over a two-way contingency
   * table — the categorical-association partner of [[RankCorr]] (numeric) and
@@ -80,9 +81,9 @@ object Contingency {
     * h_y, u_x_given_y, u_y_given_x).
     */
   def theilsU(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val cells = df.select(col(xCol).as("x"), col(yCol).as("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nxy"))
-      .localCheckpoint() // four aggregate consumers below
+    // four aggregate consumers below
+    val cells = Materialize(df.select(col(xCol).as("x"), col(yCol).as("y"))
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nxy"))).df
     val nx = cells.groupBy(col("x")).agg(sum(col("nxy")).as("nx"))
     val ny = cells.groupBy(col("y")).agg(sum(col("nxy")).as("ny"))
     val tot = cells.agg(sum(col("nxy")).as("n"))

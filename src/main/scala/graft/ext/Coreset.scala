@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Coreset / diversity sampling over an embedding column — k-center greedy
   * (farthest-point sampling, FPS): starting from a seed, repeatedly select
@@ -35,10 +36,9 @@ object Coreset {
     require(seedRow.nonEmpty, s"seed id $seedId not found in $idCol")
     val seedVec = seedRow(0).getSeq[Float](0)
     def simTo(q: Seq[Float]) = SimSearch.cosineToQuery(col("__v"), q)
-    var pts = df.filter(col(idCol) =!= seedId)
+    var pts = Materialize(df.filter(col(idCol) =!= seedId)
       .select(col(idCol).as("__id"), col(vecCol).as("__v"))
-      .withColumn("__bs", simTo(seedVec))
-      .localCheckpoint(eager = true)
+      .withColumn("__bs", simTo(seedVec))).df
     var sel = Seq((1, seedId, Option.empty[Double]))
     var exhausted = false
     for (i <- 2 to k if !exhausted) {
@@ -51,9 +51,8 @@ object Coreset {
           val nextVec = next.getSeq[Float](1)
           sel = sel :+ ((i, next.getLong(0), Some(next.getDouble(2))))
           if (i < k)
-            pts = pts.filter(col("__id") =!= next.getLong(0))
-              .withColumn("__bs", greatest(col("__bs"), simTo(nextVec)))
-              .localCheckpoint(eager = true)
+            pts = Materialize(pts.filter(col("__id") =!= next.getLong(0))
+              .withColumn("__bs", greatest(col("__bs"), simTo(nextVec)))).df
       }
     }
     val spark = df.sparkSession

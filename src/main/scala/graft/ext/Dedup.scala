@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.{Materialize, Materialized}
 
 /** Document deduplication for large-scale training-data pipelines: exact (hash-group),
   * n-gram Jaccard, MinHash+LSH, SimHash — north-star extensions beyond the reference.
@@ -126,7 +127,7 @@ object Dedup {
   def jaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
                          k: Int = 3, threshold: Double = 0.5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = shingles(df, idCol, textCol, k).localCheckpoint(eager = true)
+    val sh = Materialize(shingles(df, idCol, textCol, k)).df
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
     val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df_sh"))
     val w = Window.partitionBy(col(idCol)).orderBy(col("df_sh"), col("shingle"))
@@ -476,8 +477,8 @@ object Dedup {
     require(thresholds.nonEmpty, "thresholdCurve needs at least one threshold")
     val spark = df.sparkSession
     import spark.implicits._
-    val pairs = jaccardPairs(df, idCol, textCol, k, thresholds.min)
-      .localCheckpoint(eager = true) // feeds the pair sweep AND the doc sweep
+    // feeds the pair sweep AND the doc sweep
+    val pairs = Materialize(jaccardPairs(df, idCol, textCol, k, thresholds.min)).df
     val th = thresholds.toDF("threshold")
     val nDocs = df.agg(countDistinct(col(idCol)).as("n_docs"))
     val pairCounts = pairs.crossJoin(broadcast(th))
@@ -642,22 +643,19 @@ object Dedup {
     // materialize the edge table once: every propagation round joins against it,
     // and without this the whole upstream pair pipeline (shingle join included)
     // would re-execute per round
-    val edges = pairs.select(col("id_a"), col("id_b"))
-      .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .localCheckpoint(eager = true)
+    val Materialized(edges, nEdges, _) = Materialize(pairs.select(col("id_a"), col("id_b"))
+      .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b"))))
     val integralId = {
       import org.apache.spark.sql.types._
       Seq(ByteType, ShortType, IntegerType, LongType)
         .contains(edges.schema("id_a").dataType)
     }
-    // counting the checkpointed edges is a narrow scan of local blocks — the
-    // size check costs one cheap job, not a recompute of the pair pipeline
-    if (integralId && edges.count() <= unionFindMaxEdges)
+    if (integralId && nEdges <= unionFindMaxEdges)
       return (unionFindLabels(edges), 1, true)
-    var labels = edges.select(col("id_a").as("id"), col("id_a").as("cluster_id"))
+    var labels = Materialize(edges
+      .select(col("id_a").as("id"), col("id_a").as("cluster_id"))
       .union(edges.select(col("id_a").as("id"), col("id_b").as("cluster_id")))
-      .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))
-      .localCheckpoint(eager = true)
+      .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))).df
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -683,7 +681,7 @@ object Dedup {
               Seq("mid"))
             .select(col("id"), col("jmp").as("cluster_id"), col("old"))
         else base.select(col("id"), col("mid").as("cluster_id"), col("old"))
-      val next = stepped.localCheckpoint(eager = true)
+      val next = Materialize(stepped).df
       val changed = next.filter(col("cluster_id") =!= col("old")).limit(1).count()
       labels = next.select(col("id"), col("cluster_id"))
       converged = changed == 0
@@ -816,9 +814,8 @@ object Dedup {
     // sig (one row per doc) feeds three differently-keyed branches (banding +
     // both verify sides); checkpoint so the tokenize + bit-sum aggregate
     // runs once instead of per branch.
-    val sig = df.select(col(idCol),
-        graft.functions.SimHash60.simhash60(col(textCol)).as("simhash"))
-      .localCheckpoint(eager = true)
+    val sig = Materialize(df.select(col(idCol),
+        graft.functions.SimHash60.simhash60(col(textCol)).as("simhash"))).df
     // one explode generator, not a UNION ALL of band projections — the union
     // shape re-runs the bit-sum simhash aggregate per band (same column-pruning
     // trap as the MinHash bandKeys, see that note)
@@ -910,12 +907,11 @@ object Dedup {
     val banded = bandKeys(
       minhashSignatures(df, idCol, textCol, k, numHashes),
       idCol, numHashes / rowsPerBand, rowsPerBand)
-    val cand = banded.select(col(idCol).as("id_a"), col("band"), col("bkey"))
+    val cand = Materialize(banded.select(col(idCol).as("id_a"), col("band"), col("bkey"))
       .join(banded.select(col(idCol).as("id_b"), col("band"), col("bkey")),
         Seq("band", "bkey"))
       .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-      .localCheckpoint(eager = true) // two branches below read it
+      .select("id_a", "id_b").distinct()).df // two branches below read it
     val truth = jaccardPairs(df, idCol, textCol, k, threshold)
       .select("id_a", "id_b")
     val nd = df.select(col(idCol)).distinct()

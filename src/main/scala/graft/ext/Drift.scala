@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Distribution-drift and feature-dependence audits — the monitoring layer a
   * training-data pipeline runs on every corpus drop before it reaches a
@@ -47,9 +48,8 @@ object Drift {
     // four consumers (roster, events, totals, grand) would each re-run the
     // count aggregate — and its corpus scan — as Catalyst specializes shared
     // subtrees per branch; materialize the tiny (group, value) count once
-    val c = df.groupBy(col(groupCol).as("src"), col(valueCol).as("x"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = true)
+    val c = Materialize(df.groupBy(col(groupCol).as("src"), col(valueCol).as("x"))
+      .agg(count(lit(1)).as("cnt"))).df
     val roster = c.select(col("src").as("s")).distinct()
     val ev = c.crossJoin(broadcast(roster))
       .groupBy(col("s"), col("x"))
@@ -114,9 +114,8 @@ object Drift {
     * Returns one row per group: (group, n, u, z).
     */
   def mannWhitneyOneVsRest(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val c = df.groupBy(col(groupCol).as("src"), col(valueCol).as("x"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = true)
+    val c = Materialize(df.groupBy(col(groupCol).as("src"), col(valueCol).as("x"))
+      .agg(count(lit(1)).as("cnt"))).df
     val pool = c.groupBy(col("x")).agg(sum(col("cnt")).as("t"))
     // |distinct values| rows — the global window is value-domain bounded,
     // same exception class as the KS per-target window
@@ -166,10 +165,9 @@ object Drift {
     val spark = ref.sparkSession
     // 1-row stats feed both binned branches; (slice, bin) counts feed the
     // ref and cur spine joins — materialize both so neither re-scans input
-    val stats = ref.agg(
+    val stats = Materialize(ref.agg(
       min(col(valueCol).cast("double")).as("mn"),
-      max(col(valueCol).cast("double")).as("mx"))
-      .localCheckpoint(eager = true)
+      max(col(valueCol).cast("double")).as("mx"))).df
     def binned(df: DataFrame, slice: String): DataFrame =
       df.crossJoin(broadcast(stats)).select(
         lit(slice).as("slice"),
@@ -177,9 +175,8 @@ object Drift {
           floor((col(valueCol).cast("double") - col("mn")) * nBins /
             (col("mx") - col("mn"))), lit(0L)), lit(nBins - 1L))
           .cast("int").as("bin"))
-    val counts = binned(ref, "ref").unionAll(binned(cur, "cur"))
-      .groupBy(col("slice"), col("bin")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = true)
+    val counts = Materialize(binned(ref, "ref").unionAll(binned(cur, "cur"))
+      .groupBy(col("slice"), col("bin")).agg(count(lit(1)).as("cnt"))).df
     val spine = spark.range(nBins).select(col("id").cast("int").as("bin"))
     val wide = spine
       .join(broadcast(counts.filter(col("slice") === "ref")
@@ -220,9 +217,8 @@ object Drift {
       pairLabel: String): DataFrame = {
     // cells feed the marginals, the totals AND the final join — materialize
     // the (bounded) contingency table once instead of 4 input re-scans
-    val cells = df.groupBy(col(colA).as("a"), col(colB).as("b"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = true)
+    val cells = Materialize(df.groupBy(col(colA).as("a"), col(colB).as("b"))
+      .agg(count(lit(1)).as("cnt"))).df
     val ra = cells.groupBy(col("a")).agg(sum(col("cnt")).as("ra"))
     val cb = cells.groupBy(col("b")).agg(sum(col("cnt")).as("cb"))
     val n = cells.agg(sum(col("cnt")).as("n"),

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.{Materialize, Materialized}
 
 /** Embedding-column utilities for vector pipelines: int8 quantization (the
   * standard 4× storage/bandwidth cut before an ANN index is built) — pure
@@ -148,11 +149,9 @@ object Embeddings {
       .groupBy()
       .agg(transform(array_sort(collect_list(struct(col("__pos"),
         col("__mu")))), e => e.getField("__mu")).as("__muv"))
-    val centered = df.crossJoin(broadcast(mu))
+    val Materialized(centered, n, _) = Materialize(df.crossJoin(broadcast(mu))
       .select(zip_with(col(vecCol), col("__muv"),
-        (x, m) => x.cast("double") - m).as("__cv"))
-      .localCheckpoint(eager = true) // every round reads it
-    val n = centered.count()
+        (x, m) => x.cast("double") - m).as("__cv"))) // every round reads it
     var u = centered.sparkSession.range(1)
       .select(transform(sequence(lit(1), lit(dims)), _ => lit(1.0))
         .as("__u"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** CUPED (Controlled-experiment Using Pre-Experiment Data) — the industry-
   * standard variance-reduction readout for A/B tests: regress the experiment
@@ -35,9 +36,8 @@ object Experiment {
     * (map-side combined) plus an |arms|-row pool.
     */
   def srm(units: DataFrame, armCol: String): DataFrame = {
-    val byArm = units.groupBy(col(armCol).as("arm"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = true)
+    val byArm = Materialize(units.groupBy(col(armCol).as("arm"))
+      .agg(count(lit(1)).as("n"))).df
     val g = byArm.agg(sum(col("n")).as("n_tot"), count(lit(1)).as("k"))
     val expected = col("n_tot").cast("double") / col("k").cast("double")
     val dev = col("n").cast("double") - expected
@@ -120,7 +120,7 @@ object Experiment {
   def bhFdrFromCounts(counts: DataFrame, groupCol: String,
                       alpha: Double = 0.05): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val g = counts.localCheckpoint(eager = true)
+    val g = Materialize(counts).df
     val tot = g.agg(sum(col("n")).as("nn"), sum(col("pos")).as("pp"),
       count(lit(1)).as("m"))
     val withTot = g.crossJoin(broadcast(tot))
@@ -164,13 +164,12 @@ object Experiment {
   def cuped(units: DataFrame, armCol: String, xCol: String, yCol: String): DataFrame = {
     val x = col(xCol).cast("decimal(18,4)")
     val y = col(yCol).cast("decimal(18,4)")
-    val byArm = units.groupBy(col(armCol).as("arm"))
+    // consumed by the pooled aggregate AND the final select — materialize
+    // the |arms|-row moment table once instead of re-running the unit scan
+    val byArm = Materialize(units.groupBy(col(armCol).as("arm"))
       .agg(count(lit(1)).as("n"),
         sum(x).as("sx"), sum(y).as("sy"),
-        sum(x * y).as("sxy"), sum(x * x).as("sxx"), sum(y * y).as("syy"))
-      // consumed by the pooled aggregate AND the final select — materialize
-      // the |arms|-row moment table once instead of re-running the unit scan
-      .localCheckpoint(eager = true)
+        sum(x * y).as("sxy"), sum(x * x).as("sxx"), sum(y * y).as("syy"))).df
     // |arms| rows: pool exactly, then broadcast the scalar row back.
     val g = byArm.agg(
         sum(col("n")).as("gn"), sum(col("sx")).as("gsx"), sum(col("sy")).as("gsy"),
@@ -213,9 +212,8 @@ object Experiment {
     * Output: one row (n, p_o, p_e, kappa).
     */
   def cohensKappa(df: DataFrame, predCol: String, truthCol: String): DataFrame = {
-    val cells = df.groupBy(col(predCol).as("pred"), col(truthCol).as("truth"))
-      .agg(count(lit(1)).as("n_cell"))
-      .localCheckpoint(eager = true)
+    val cells = Materialize(df.groupBy(col(predCol).as("pred"), col(truthCol).as("truth"))
+      .agg(count(lit(1)).as("n_cell"))).df
     val n = cells.agg(sum(col("n_cell")).as("n"))
     val po = cells.filter(col("pred") === col("truth"))
       .agg(coalesce(sum(col("n_cell")), lit(0L)).as("n_agree"))
@@ -850,14 +848,13 @@ object Experiment {
     // second time. The eager checkpoint materializes the tiny bin table once;
     // without it the two readers below would each re-specialize and re-execute
     // the whole upstream (column pruning defeats exchange reuse).
-    val g = base.groupBy(col("__bin"))
+    val g = Materialize(base.groupBy(col("__bin"))
       .agg(count(lit(1)).as("nk"),
         sum(col("__p").cast("decimal(27,12)")).as("sp"),
         sum(col("__o")).as("so"),
         sum(((col("__p") - col("__o").cast("double")) *
           (col("__p") - col("__o").cast("double"))).cast("decimal(27,12)"))
-          .as("sbk"))
-      .localCheckpoint(eager = true)
+          .as("sbk"))).df
     val tot = g.agg(sum(col("nk")).as("n"),
       sum(col("so")).as("son"),
       sum(col("sbk")).as("sbs"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Breadth-first reachability profiling — "how far is the graph from its
   * busiest hub?": BFS levels from a deterministic seed (the max-degree node,
@@ -33,37 +34,31 @@ object GraphPaths {
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    val both = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-      // joined once per BFS round; the union's branches prune to the same
-      // columns, so the distinct's exchange is reused across them inside this
-      // one materialization job (a pre-union checkpoint measured slower, r16)
-      .localCheckpoint(eager = true)
+    // joined once per BFS round; the union's branches prune to the same
+    // columns, so the distinct's exchange is reused across them inside this
+    // one materialization job (a pre-union checkpoint measured slower, r16)
+    val both = Materialize(e.select(col("a").as("u"), col("b").as("v"))
+      .union(e.select(col("b").as("u"), col("a").as("v")))).df
     val seed = both.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg"))
       .orderBy(col("deg").desc, col("node"))
       .limit(1)
-    var levels = seed.select(col("node").as("id"), lit(0).as("level"))
-      .localCheckpoint(eager = true)
+    var levels = Materialize(seed.select(col("node").as("id"), lit(0).as("level")))
     var d = 1
     var grew = true
-    var nPrev = 1L // the seed row; remembered driver-side so the
-    // convergence check is ONE count job per round, not two
     while (grew && d <= maxDepth) {
-      val frontier = levels.filter(col("level") === d - 1)
+      val frontier = levels.df.filter(col("level") === d - 1)
         .select(col("id").as("u"))
       val next = both.join(frontier, Seq("u"))
         .select(col("v").as("id")).distinct()
-        .join(levels, Seq("id"), "left_anti")
+        .join(levels.df, Seq("id"), "left_anti")
         .select(col("id"), lit(d).as("level"))
-      val grown = levels.union(next).localCheckpoint(eager = true)
-      val n = grown.count() // cheap: counts the just-checkpointed blocks
-      grew = n > nPrev
-      nPrev = n
+      val grown = Materialize(levels.df.union(next))
+      grew = grown.rows > levels.rows
       levels = grown
       d += 1
     }
-    levels.groupBy(col("level")).agg(count(lit(1)).as("n_nodes"))
+    levels.df.groupBy(col("level")).agg(count(lit(1)).as("n_nodes"))
       .orderBy(col("level"))
   }
 
@@ -90,18 +85,16 @@ object GraphPaths {
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    val both = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-      // joined once per BFS round; the union's branches prune to the same
-      // columns, so the distinct's exchange is reused across them inside this
-      // one materialization job (a pre-union checkpoint measured slower, r16)
-      .localCheckpoint(eager = true)
+    // joined once per BFS round; the union's branches prune to the same
+    // columns, so the distinct's exchange is reused across them inside this
+    // one materialization job (a pre-union checkpoint measured slower, r16)
+    val both = Materialize(e.select(col("a").as("u"), col("b").as("v"))
+      .union(e.select(col("b").as("u"), col("a").as("v")))).df
     val seeds = both.select(col("u").as("node")).distinct()
       .orderBy(col("node")).limit(nSeeds)
-    var levels = seeds
+    var levels = Materialize(seeds
       .select(col("node").as("seed"), col("node").as("id"),
-        lit(0).as("dist"))
-      .localCheckpoint(eager = true)
+        lit(0).as("dist"))).df
     (1 to 3).foreach { d =>
       val frontier = levels.filter(col("dist") === d - 1)
         .select(col("seed"), col("id").as("u"))
@@ -110,7 +103,7 @@ object GraphPaths {
         .join(levels.select(col("seed"), col("id")), Seq("seed", "id"),
           "left_anti")
         .select(col("seed"), col("id"), lit(d).as("dist"))
-      levels = levels.union(next).localCheckpoint(eager = true)
+      levels = Materialize(levels.union(next)).df
     }
     levels.filter(col("dist") > 0)
       .groupBy(col("seed"))
@@ -143,8 +136,7 @@ object GraphPaths {
     require(topKHubs >= 1, s"topKHubs ($topKHubs) must be >= 1")
     // the edge list feeds the degree table, both anti-joins, and two CC
     // passes — checkpoint once so the upstream pipeline runs once
-    val e = edges.select(col(srcCol).as("id_a"), col(dstCol).as("id_b"))
-      .localCheckpoint(eager = true)
+    val e = Materialize(edges.select(col(srcCol).as("id_a"), col(dstCol).as("id_b"))).df
     val deg = e.select(col("id_a").as("node"))
       .union(e.select(col("id_b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -197,22 +189,19 @@ object GraphPaths {
         col(weightCol).cast("long").as("w"))
       .filter(col("a") =!= col("b") && col("w") >= 0)
       .groupBy(col("a"), col("b")).agg(min(col("w")).as("w"))
-    val both = e.select(col("a").as("u"), col("b").as("v"), col("w"))
-      .union(e.select(col("b").as("u"), col("a").as("v"), col("w")))
-      .localCheckpoint(eager = true)
+    val both = Materialize(e.select(col("a").as("u"), col("b").as("v"), col("w"))
+      .union(e.select(col("b").as("u"), col("a").as("v"), col("w")))).df
     val seed = both.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg"))
       .orderBy(col("deg").desc, col("node"))
       .limit(1)
-    var dist = seed.select(col("node").as("id"), lit(0L).as("d"))
-      .localCheckpoint(eager = true)
+    var dist = Materialize(seed.select(col("node").as("id"), lit(0L).as("d"))).df
     for (_ <- 1 to rounds) {
       val relaxed = both
         .join(dist.select(col("id").as("u"), col("d").as("du")), Seq("u"))
         .select(col("v").as("id"), (col("du") + col("w")).as("d"))
-      dist = dist.unionByName(relaxed)
-        .groupBy(col("id")).agg(min(col("d")).as("d"))
-        .localCheckpoint(eager = true)
+      dist = Materialize(dist.unionByName(relaxed)
+        .groupBy(col("id")).agg(min(col("d")).as("d"))).df
     }
     dist.select(col("id").as("node"), col("d").as("dist"))
       .orderBy(col("node"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.{Materialize, Materialized}
 
 /** HITS hubs-and-authorities (Kleinberg, JACM 1999) over a DIRECTED edge
   * table — on a bipartite customer→item graph, hubs are broad consumers and
@@ -19,8 +20,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: above [[Hits.PartitionedCopyMinEdges]] edges, the distinct
   * edge table is checkpointed TWICE — once
-  * hash-partitioned by src, once by dst (localCheckpoint preserves the
-  * physical partitioning through LogicalRDD) — so each iteration's two
+  * hash-partitioned by src, once by dst ([[graft.Materialize]] preserves
+  * the physical partitioning) — so each iteration's two
   * gathers shuffle only the node-sized score table into the matching edge
   * copy instead of re-shuffling the edge table every round; the remaining
   * per-iteration exchanges are the gather outputs' own groupBy keys, which
@@ -41,32 +42,26 @@ object Hits {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct()
-      .localCheckpoint()
+    val Materialized(e, nEdges, edgeBytes) = Materialize(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
     // two partitioned copies: joins on src/dst reuse the edge-side layout
     // every iteration (only the node-sized score table moves). GATED on
     // edge count: the copies trade 2 up-front edge shuffles + 2 checkpoint
     // jobs for ~2·iterations in-loop edge shuffles — a clear win once the
     // edge shuffle costs real time, pure job overhead below it (measured:
     // the copies ADDED ~0.6 s at the sf0.1 tier's ~1M edges, where every
-    // edge shuffle is milliseconds). The count is one fast job over the
-    // already-materialized checkpoint blocks.
-    val nEdges = e.count()
+    // edge shuffle is milliseconds).
     val useCopies = nEdges >= PartitionedCopyMinEdges
-    val eSrc = if (useCopies) e.repartition(col("src")).localCheckpoint() else e
-    val eDst = if (useCopies) e.repartition(col("dst")).localCheckpoint() else e
+    val eSrc = if (useCopies) Materialize(e.repartition(col("src"))).df else e
+    val eDst = if (useCopies) Materialize(e.repartition(col("dst"))).df else e
     // Below the copy gate, hint the NODE-SIZED score table broadcast into
-    // each gather join: the scores read back from localCheckpoint blocks
-    // whose LogicalRDD carries the original edge-join-sized estimate, so
-    // the planner sort-merged and re-shuffled the EDGE table by src/dst
-    // every gather (the r17 Mis JobProbe finding; here ~4 × |E| records
-    // per run at sf0.1). Scores are ≤ distinct src/dst ≤ |E|, so the edge
-    // count bounds the score table for BroadcastGate's row gate; above the
-    // copy gate the partitioned copies make the score shuffle the designed
-    // cheap path, so no hint is forced there.
+    // each gather join ([[graft.Materialize]] says why; unhinted, every
+    // gather re-shuffled the EDGE table, ~4 × |E| records per run at sf0.1).
+    // ≤ |E| score rows, none wider than an edge row: the edge bytes bound
+    // them. Above the copy gate the partitioned copies make the score
+    // shuffle the designed cheap path, so no hint is forced there.
     val bcast: DataFrame => DataFrame =
-      if (useCopies) identity else BroadcastGate.hint(nEdges)
+      if (useCopies) identity else Materialize.broadcastHint(edgeBytes)
     def l1Normalize(scores: DataFrame, valCol: String): DataFrame = {
       val total = scores.agg(
         sum(col(valCol).cast("decimal(18,9)")).cast("double").as("__s"))
@@ -94,12 +89,11 @@ object Hits {
           eSrc.join(bcast(h.withColumnRenamed("node", "src")), "src")
             .groupBy(col("dst").as("node"))
             .agg(sum(col("h").cast("decimal(18,9)")).cast("double").as("a"))
-      a = l1Normalize(rawA.localCheckpoint(), "a")
+      a = l1Normalize(Materialize(rawA).df, "a")
       h = l1Normalize(
-        eDst.join(bcast(a.withColumnRenamed("node", "dst")), "dst")
+        Materialize(eDst.join(bcast(a.withColumnRenamed("node", "dst")), "dst")
           .groupBy(col("src").as("node"))
-          .agg(sum(col("a").cast("decimal(18,9)")).cast("double").as("h"))
-          .localCheckpoint(),
+          .agg(sum(col("a").cast("decimal(18,9)")).cast("double").as("h"))).df,
         "h")
     }
     a.select(lit("authority").as("kind"), col("node"), col("a").as("score"))

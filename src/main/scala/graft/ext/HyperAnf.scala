@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** HyperANF (Boldi, Rosa & Vigna, WWW'11): the neighborhood function
   * N(t) = Σ_v |B(v,t)| — how many (node, reachable-node) pairs exist within
@@ -44,21 +45,20 @@ object HyperAnf {
       case 64 => 0.709
       case _  => 0.7213 / (1.0 + 1.079 / m)
     }
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint(eager = true) // joined every hop; cut the lineage once
+    // joined every hop; cut the lineage once
+    val e = Materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))).df
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     // initial ball {v}: each node's own single-element register — the
     // [[Sketches.hllRho]] register math, keyed by node
-    var regs = nodes.select(col("node"),
+    var regs = Materialize(nodes.select(col("node"),
         conv(substring(md5(col("node").cast("string")), 1, 8), 16, 10)
           .cast("long").as("__h"))
       .select(col("node"), (col("__h") % m).as("idx"),
         (col("__h") / m).cast("long").as("__w"))
       .select(col("node"), col("idx"),
         when(col("__w") === 0, lit(32 - b + 1))
-          .otherwise(lit(32 - b + 1) - length(bin(col("__w")))).as("mreg"))
-      .localCheckpoint(eager = true)
+          .otherwise(lit(32 - b + 1) - length(bin(col("__w")))).as("mreg"))).df
 
     def estimate(r: DataFrame, hop: Int): DataFrame = {
       val perNode = r.groupBy(col("node"))
@@ -105,7 +105,7 @@ object HyperAnf {
       // suite-level reclaim is the caller's job (Verify/Bench unpersist
       // every persistent RDD after each query).
       regs =
-        if (t < hops) merged.localCheckpoint(eager = true) else merged
+        if (t < hops) Materialize(merged).df else merged
       out = out.union(estimate(regs, t))
       t += 1
     }

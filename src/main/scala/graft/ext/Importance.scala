@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import graft.Materialize
 
 /** Data-selection operators for training-corpus curation: importance weighting
   * toward a target distribution (hashed-n-gram DSIR, Xie et al. 2023,
@@ -62,17 +63,16 @@ object Importance {
     // plan's naive form; 1 scan / 1 Generate after). The materialized frame
     // is ≤ one row per (doc, distinct bucket) — capped at docs×numBuckets,
     // far below the token stream it replaces.
-    val docBuckets = docs
+    val docBuckets = Materialize(docs
       .select(col(idCol), isTarget.as("__t"),
         explode(split(col(textCol), " ")).as("__tok"))
       .withColumn("__b", tokenBucket(col("__tok"), numBuckets))
       .groupBy(col(idCol), col("__t"), col("__b"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = true)
-    val dist = docBuckets.groupBy(col("__b"))
+      .agg(count(lit(1)).as("__c"))).df
+    // numBuckets rows; feeds tot AND logRatio
+    val dist = Materialize(docBuckets.groupBy(col("__b"))
       .agg(sum(col("__c")).as("n_raw"),
-        sum(when(col("__t"), col("__c")).otherwise(0L)).as("n_tgt"))
-      .localCheckpoint(eager = true) // numBuckets rows; feeds tot AND logRatio
+        sum(when(col("__t"), col("__c")).otherwise(0L)).as("n_tgt"))).df
     val logRatio = logRatiosFromDist(dist, numBuckets)
     docBuckets
       .join(broadcast(logRatio), Seq("__b"))

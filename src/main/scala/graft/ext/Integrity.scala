@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Order-independent content digests for replication/backfill verification:
   * "is the copy of this partition byte-identical to the source?" answered
@@ -81,14 +82,13 @@ object Integrity {
     // ONE corpus aggregation per side onto the leaf (deepest) buckets;
     // parent registers roll up from child registers (counts add, xors
     // xor) — the actual Merkle-tree construction, no per-level re-scan.
-    def leaf(df: DataFrame): DataFrame = df
+    def leaf(df: DataFrame): DataFrame = Materialize(df
       .select(substring(md5(concat_ws("|", keyCols: _*)), 1, levels)
           .as("bucket"),
         conv(substring(md5(concat_ws("|", rowCols: _*)), 1, 15), 16, 10)
           .cast("long").as("__h"))
       .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(__h)").as("x"))
-      .localCheckpoint(eager = true)
+      .agg(count(lit(1)).as("n"), expr("bit_xor(__h)").as("x"))).df
     drillFromLeaves(leaf(a), leaf(b), levels)
   }
 
@@ -106,12 +106,11 @@ object Integrity {
     */
   def merkleDrillHashed(hashed: DataFrame, levels: Int = 3): DataFrame = {
     require(levels >= 1 && levels <= 4, s"levels must be 1..4, got $levels")
-    val leaves = hashed
+    val leaves = Materialize(hashed
       .select(col("side"), substring(col("kh"), 1, levels).as("bucket"),
         col("h").as("__h"))
       .groupBy(col("side"), col("bucket"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(__h)").as("x"))
-      .localCheckpoint(eager = true)
+      .agg(count(lit(1)).as("n"), expr("bit_xor(__h)").as("x"))).df
     drillFromLeaves(
       leaves.filter(col("side") === "a").select("bucket", "n", "x"),
       leaves.filter(col("side") === "b").select("bucket", "n", "x"), levels)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Apriori frequent-itemset mining to level 3 (Agrawal & Srikant,
   * VLDB'94), with the support threshold expressed as a RATE of the basket
@@ -28,18 +29,16 @@ object Itemsets {
                       supNum: Long, supDenom: Long): DataFrame = {
     require(supNum >= 1 && supDenom >= supNum,
       s"support rate must be in (0, 1]: $supNum/$supDenom")
-    val b = baskets
+    // read by the basket count, the level-1 counts, and the set assembly
+    val b = Materialize(baskets
       .select(col(basketCol).as("bk"), col(itemCol).as("it"))
-      .distinct()
-      // read by the basket count, the level-1 counts, and the set assembly
-      .localCheckpoint(eager = true)
+      .distinct()).df
     val total = b.select(col("bk")).distinct()
       .agg(count(lit(1)).as("n_baskets"))
     // level 1: per-item support (also the lift denominator)
-    val s1 = b.groupBy(col("it")).agg(count(lit(1)).as("n1"))
+    val s1 = Materialize(b.groupBy(col("it")).agg(count(lit(1)).as("n1"))
       .crossJoin(broadcast(total))
-      .filter(col("n1") * supDenom >= col("n_baskets") * supNum)
-      .localCheckpoint(eager = true)
+      .filter(col("n1") * supDenom >= col("n_baskets") * supNum)).df
     // one set per basket over the SURVIVING items, triples map-side
     val sets = b.join(s1.select(col("it")), Seq("it"), "left_semi")
       .groupBy(col("bk")).agg(sort_array(collect_set(col("it"))).as("its"))

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import graft.Materialize
 
 /** k-core extraction: the maximal subgraph in which every node has degree ≥ k
   * — the standard graph-denoising cut before community detection or
@@ -12,7 +13,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * Iterative peeling: drop all nodes with degree < k, recompute degrees on
   * the induced subgraph, repeat to fixpoint. Each round is one aggregate +
   * two semi-joins on the shrinking edge set; the edge frame is
-  * localCheckpoint'd per round so round N+1 reads round N's materialized
+  * materialized per round so round N+1 reads round N's materialized
   * output instead of replaying the whole lineage (the [[Dedup.dupClusters]]
   * discipline). Rounds are O(peeling depth) — bounded by the degeneracy
   * ordering, in practice tens — and the frame shrinks monotonically, so later
@@ -30,8 +31,8 @@ object KCore {
     * is checkpointed; when it has at most `smallGraphMaxEdges` rows (and
     * integral ids) the peeling rounds collapse to a single-task linear-time
     * peel (bucket-queue removal, O(V+E)) — one narrow coalesce instead of
-    * O(depth) rounds each costing an aggregate, two semi-join shuffles, a
-    * checkpoint and two count jobs. 5M deduped edges ≈ a few hundred MB of
+    * O(depth) rounds each costing an aggregate, two semi-join shuffles and
+    * a checkpoint. 5M deduped edges ≈ a few hundred MB of
     * adjacency in one task — well under executor memory; above the threshold
     * (or for non-integral ids) the distributed rounds run unchanged, so the
     * 100 TB path never depends on one task holding the graph.
@@ -39,37 +40,33 @@ object KCore {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxIter: Int = 100, smallGraphMaxEdges: Long = 5000000L): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    var e = edges
+    var e = Materialize(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    val idType = e.schema("a").dataType
+      .distinct())
+    val idType = e.df.schema("a").dataType
     val integral =
       Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(idType)
-    // counting the checkpointed edges scans local blocks — one cheap job
-    if (integral && e.count() <= smallGraphMaxEdges)
-      return peelSingleTask(e, k, idType)
+    if (integral && e.rows <= smallGraphMaxEdges)
+      return peelSingleTask(e.df, k, idType)
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
-      val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
+      val deg = e.df.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select(col("node"))
-      val pruned = e
+      val pruned = Materialize(e.df
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .localCheckpoint()
-      // one O(1) scalar per round off the already-materialized frames
-      converged = pruned.count() == e.count()
+        .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi"))
+      converged = pruned.rows == e.rows
       e = pruned
       it += 1
     }
     if (!converged)
       throw new IllegalStateException(
         s"kCore did not converge in $maxIter rounds — raise maxIter")
-    e.select(explode(array(col("a"), col("b"))).as("node"))
+    e.df.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= k)
   }

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Neighborhood-based link prediction over an undirected edge table —
   * candidate-edge scoring for "items that should sell together but don't
@@ -38,11 +39,10 @@ object LinkPrediction {
       .distinct()
     // one generator emits both directions; checkpointed because the frame
     // feeds both wedge sides AND the final adjacency anti-join
-    val adj = e.select(explode(array(
+    val adj = Materialize(e.select(explode(array(
         struct(col("a").as("u"), col("b").as("v")),
         struct(col("b").as("u"), col("a").as("v")))).as("p"))
-      .select(col("p.u"), col("p.v"))
-      .localCheckpoint(eager = true)
+      .select(col("p.u"), col("p.v"))).df
     val deg = adj.groupBy(col("u").as("mid")).agg(count(lit(1)).as("deg"))
     // wedges a—v—b with a < b: each unordered candidate pair materializes
     // once per common neighbor; the middle degree rides a broadcast join

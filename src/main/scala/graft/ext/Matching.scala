@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.{Materialize, Materialized}
 
 /** Deterministic greedy MAXIMAL MATCHING — the edge analog of [[Mis]]
   * (Israeli & Itai, "A fast and simple randomized parallel algorithm for
@@ -42,20 +43,17 @@ object Matching {
     val prio = concat(
       md5(concat(col("a").cast("string"), lit(":"), col("b").cast("string"))),
       lit(":"), pad(col("a")), lit(":"), pad(col("b")))
-    val e0 = edges.select(
+    val Materialized(e0, _, edgeBytes) = Materialize(edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .filter(col("a") < col("b")).distinct()
-      .withColumn("p", prio)
-      .localCheckpoint()
-    // Gated broadcast hints on the decision-side joins (the Mis/Coloring
-    // r17 pattern — checkpoint-fed sides carry edge-join-sized estimates,
-    // so the planner re-shuffles the full surviving edge table per round).
-    // Matching's decision tables are EDGE rows (dropped can approach
-    // |E_alive|), so the gate is the materialized edge count itself: one
-    // cheap count job, hints on only when every possible build side is
-    // bounded; above the gate the joins stay shuffled as before.
-    val bcast = BroadcastGate.hint(e0.count() * 2)
+      .withColumn("p", prio))
+    // Gated broadcast hints on the decision-side joins (why hints:
+    // [[graft.Materialize]]). The hinted sides are EDGE rows (dropped can
+    // approach |E_alive|) and node minima (≤ 2·|E| rows, each carrying an
+    // edge priority), so twice the edge bytes bound them all; above the gate
+    // the joins stay shuffled as before.
+    val bcast = Materialize.broadcastHint(edgeBytes * 2)
     var alive = e0
     var decidedAll: DataFrame = e0.limit(0)
       .select(col("a"), col("b"), lit("x").as("status"), lit(0).as("round"))
@@ -83,17 +81,15 @@ object Matching {
             col("b") === col("db"), "leftsemi")
           .select(col("a"), col("b")))
         .distinct()
-      val dec = matched.select(col("a"), col("b"),
+      val dec = Materialize(matched.select(col("a"), col("b"),
           lit("matched").as("status"), lit(r).as("round"))
         .unionByName(dropped.select(col("a"), col("b"),
-          lit("dropped").as("status"), lit(r).as("round")))
-        .localCheckpoint()
+          lit("dropped").as("status"), lit(r).as("round")))).df
       decidedAll = decidedAll.unionByName(dec)
       if (r < rounds) {
-        alive = alive.join(
+        alive = Materialize(alive.join(
             bcast(dec.select(col("a").as("xa"), col("b").as("xb"))),
-            col("a") === col("xa") && col("b") === col("xb"), "leftanti")
-          .localCheckpoint()
+            col("a") === col("xa") && col("b") === col("xb"), "leftanti")).df
       }
     }
     val undecided = e0

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.{Materialize, Materialized}
 
 /** Maximal independent set by Luby's algorithm (Luby, "A simple parallel
   * algorithm for the maximal independent set problem", SIAM J. Comput.
@@ -27,7 +28,7 @@ import org.apache.spark.sql.functions._
   */
 object Mis {
 
-  private def prio(c: Column): Column =
+  private[ext] def prio(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long") *
       2147483648L + c
 
@@ -53,16 +54,16 @@ object Mis {
     // (min-agg, semi/anti joins, distinct dominated), so the dedup shuffle
     // would buy nothing — callers with heavily duplicated inputs should
     // distinct upstream to keep |E| honest.
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
+    val e0 = Materialize(edges.select(col(srcCol).cast("long").as("u"),
         col(dstCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-      .select(col("u"), col("v"), prio(col("v")).as("pv"))
-      .localCheckpoint()
-    val nodes = e0.select(col("u").as("node")).distinct()
-      .select(col("node"), prio(col("node")).as("pn")).localCheckpoint()
-    // one cheap job over the materialized checkpoint blocks decides the
-    // broadcast gate for every decision-side join below
-    val bcast = BroadcastGate.hint(nodes.count())
+      .select(col("u"), col("v"), prio(col("v")).as("pv"))).df
+    val Materialized(nodes, _, nodeBytes) = Materialize(e0
+      .select(col("u").as("node")).distinct()
+      .select(col("node"), prio(col("node")).as("pn")))
+    // the node checkpoint's bytes gate the broadcast of every decision-side
+    // join below (each is ≤ |V| rows of at most as many columns)
+    val bcast = Materialize.broadcastHint(nodeBytes)
     var eAct = e0
     var decidedAll: DataFrame = nodes.limit(0)
       .select(col("node"), lit("x").as("status"), lit(0).as("round"))
@@ -91,20 +92,18 @@ object Mis {
       // 600k-edge q_mis graph the fusion measured ~1s slower; the separate
       // dec checkpoint keeps the heavy subtree single-evaluated, and the
       // follow-up eAct job reads it back for free.
-      val dec = mis.select(col("node"), lit("mis").as("status"),
+      val dec = Materialize(mis.select(col("node"), lit("mis").as("status"),
           lit(r).as("round"))
         .unionByName(dominated.select(col("node"),
-          lit("dominated").as("status"), lit(r).as("round")))
-        .localCheckpoint()
+          lit("dominated").as("status"), lit(r).as("round")))).df
       decidedAll = decidedAll.unionByName(dec)
       if (r < rounds) {
         val dn = dec.select(col("node"))
-        eAct = eAct
+        eAct = Materialize(eAct
           .join(bcast(dn.select(col("node").as("du"))),
             col("u") === col("du"), "leftanti")
           .join(bcast(dn.select(col("node").as("dv"))),
-            col("v") === col("dv"), "leftanti")
-          .localCheckpoint()
+            col("v") === col("dv"), "leftanti")).df
       }
     }
     decidedAll.unionByName(

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Training-mixture design: temperature-scaled sampling weights per corpus
   * source — the multinomial α-smoothing recipe (XLM-R / mT5: sample source s
@@ -24,9 +25,8 @@ object Mixing {
     */
   def temperatureWeights(docs: DataFrame, sourceCol: String, sizeCol: String,
                          alpha: Double = 0.7): DataFrame = {
-    val s = docs.groupBy(col(sourceCol).as("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col(sizeCol)).as("n_units"))
-      .localCheckpoint(eager = true)
+    val s = Materialize(docs.groupBy(col(sourceCol).as("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(col(sizeCol)).as("n_units"))).df
     val tot = s.agg(sum(col("n_units")).as("t_units"))
     val withShare = s.crossJoin(broadcast(tot))
       .withColumn("share", col("n_units").cast("double") / col("t_units"))
@@ -156,9 +156,8 @@ object Mixing {
     val base = docs.select(
       expr(s"CAST($orderCol AS BIGINT) div $chunkSize").as("chunk"),
       col(sourceCol).as("src"))
-    val counts = base.groupBy(col("chunk"), col("src"))
-      .agg(count(lit(1)).as("o"))
-      .localCheckpoint(eager = true) // grid + totals branches read it
+    val counts = Materialize(base.groupBy(col("chunk"), col("src"))
+      .agg(count(lit(1)).as("o"))).df // grid + totals branches read it
     val chunkTotals = counts.groupBy(col("chunk")).agg(sum(col("o")).as("n_c"))
     val srcTotals = counts.groupBy(col("src")).agg(sum(col("o")).as("n_s"))
     val grand = srcTotals.agg(sum(col("n_s")).as("n_tot"),
@@ -200,7 +199,7 @@ object Mixing {
   def neymanAllocation(docs: DataFrame, sourceCol: String, valueCol: String,
                        budget: Long): DataFrame = {
     require(budget > 0, s"budget ($budget) must be > 0")
-    val m = docs.groupBy(col(sourceCol).as("source"))
+    val m = Materialize(docs.groupBy(col(sourceCol).as("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col(valueCol).cast("long")).as("__s"),
         sum(col(valueCol).cast("long") * col(valueCol).cast("long"))
@@ -210,8 +209,7 @@ object Mixing {
           col("__s2").cast("double") / col("n_docs") -
             (col("__s").cast("double") / col("n_docs")) *
             (col("__s").cast("double") / col("n_docs")),
-          lit(0.0))).as("__sd"))
-      .localCheckpoint(eager = true) // normalizer + per-row branches read it
+          lit(0.0))).as("__sd"))).df // normalizer + per-row branches read it
     val tot = m.agg(sum(col("n_docs")).as("__tn"),
       sum((col("n_docs") * col("__sd")).cast("decimal(28,12)"))
         .cast("double").as("__tns"))

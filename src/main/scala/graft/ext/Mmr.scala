@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Maximal Marginal Relevance (MMR) re-ranking — the standard diversification
   * pass a retrieval service runs over an ANN shortlist (Carbonell & Goldstein
@@ -41,12 +42,11 @@ object Mmr {
     val q = qRow(0).getSeq[Float](0)
     // corpus-side pass: relevance + shortlist (TakeOrderedAndProject), then
     // materialize the tiny shortlist so the greedy iterations never re-scan
-    val cand = df.filter(col(idCol) =!= queryId)
+    val cand = Materialize(df.filter(col(idCol) =!= queryId)
       .select(col(idCol).as("__id"), col(vecCol).as("__v"),
         SimSearch.cosineToQuery(col(vecCol), q).as("__rel"))
       .orderBy(col("__rel").desc, col("__id"))
-      .limit(candidates)
-      .localCheckpoint(eager = true)
+      .limit(candidates)).df
     val lam = lit(lambda)
     val oneMinusLam = lit(1.0 - lambda)
     def pick(scored: DataFrame, rnk: Int): DataFrame =

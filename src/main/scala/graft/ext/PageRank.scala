@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.{Materialize, Materialized}
 
 /** Damped PageRank over an edge table — the iterative graph-analytics
   * companion to [[Dedup.dupClusters]]'s connected components: CC tells you
@@ -33,23 +34,19 @@ object PageRank {
     // checkpoint once: the edge table feeds every iteration — without the
     // lineage cut, each of the 5 contrib joins would re-run the whole
     // upstream edge-building pipeline (same discipline as dupClusters).
-    // Hash-partitioned by src FIRST, and the LogicalRDD keeps that
+    // Hash-partitioned by src FIRST, and the checkpoint keeps that
     // partitioning: every iteration's e⋈rank join then shuffles only the
     // #nodes-row rank table, never the edge table — one edge shuffle total
     // instead of one per iteration
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .repartition(col("src"))
-      .localCheckpoint()
+    val e = Materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .repartition(col("src"))).df
     // deg and nodes feed EVERY iteration (nodes twice: the rank lineage and
     // the dangling left join) — checkpoint them too, or each iteration's
     // plan re-runs the aggregate / union-distinct from scratch (the r8
     // 7926a7f fan-out discipline)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
-    val n = nodes.count() // one driver scalar
+    val deg = Materialize(e.groupBy(col("src")).agg(count(lit(1)).as("deg"))).df
+    val Materialized(nodes, n, _) = Materialize(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     var pr = nodes.withColumn("pr", lit(1.0) / lit(n.toDouble))
     (1 to iterations).foreach { i =>
       val contrib = e
@@ -87,15 +84,12 @@ object PageRank {
                            seedCol: String, iterations: Int = 3,
                            damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+    val e = Materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("w"))
-      .repartition(col("src"))
-      .localCheckpoint()
-    val outw = e.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-      .localCheckpoint()
-    val s = seeds.select(col(seedCol).as("node")).distinct()
-      .localCheckpoint()
-    val nSeeds = s.count() // one driver scalar
+      .repartition(col("src"))).df
+    val outw = Materialize(e.groupBy(col("src")).agg(sum(col("w")).as("outw"))).df
+    val Materialized(s, nSeeds, _) =
+      Materialize(seeds.select(col(seedCol).as("node")).distinct())
     require(nSeeds >= 1, "personalizedPageRank needs at least one seed")
     val teleport = 1.0 / nSeeds
     var pr = s.withColumn("ppr", lit(teleport))

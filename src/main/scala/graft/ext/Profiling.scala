@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Dataset profiling — the "analyze table" primitive a pipeline runs on every
   * new data drop before trusting it: per-column row/null/distinct counts and
@@ -30,9 +31,8 @@ object Profiling {
     val counts = df.filter(col(valueCol) >= 1)
       .groupBy(digit.as("digit")).agg(count(lit(1)).as("n_obs"))
     val spine = spark.range(1, 10).select(col("id").cast("int").as("digit"))
-    val byDigit = spine.join(counts, Seq("digit"), "left")
-      .na.fill(0L, Seq("n_obs"))
-      .localCheckpoint(eager = true)
+    val byDigit = Materialize(spine.join(counts, Seq("digit"), "left")
+      .na.fill(0L, Seq("n_obs"))).df
     val g = byDigit.agg(sum(col("n_obs")).as("n_tot"))
     // spelled ln(1+1/d)/ln(10), NOT log10(): both engines then run the same
     // two doubles ops (a direct log10 can differ in the last bit)

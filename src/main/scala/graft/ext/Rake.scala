@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** RAKE keyphrase extraction (Rose, Engel, Cramer & Cowley 2010, "Automatic
   * Keyword Extraction from Individual Documents"): candidate phrases are the
@@ -44,7 +45,7 @@ object Rake {
       .withColumn("brk",
         (col("w") === "" || col("w").isin(stopwordsEn: _*)).cast("int"))
     val wDoc = Window.partitionBy(col("id")).orderBy(col("pos"))
-    val phrases = toks
+    val phrases = Materialize(toks
       .withColumn("pid", sum(col("brk")).over(wDoc))
       .filter(col("brk") === 0)
       .groupBy(col("id"), col("pid"))
@@ -52,8 +53,7 @@ object Rake {
           array_sort(collect_list(struct(col("pos"), col("w")))),
           e => e.getField("w")), " ").as("phrase"),
         count(lit(1)).as("len"))
-      .filter(col("len") <= maxPhraseLen)
-      .localCheckpoint() // feeds word stats AND occurrence counts
+      .filter(col("len") <= maxPhraseLen)).df // feeds word stats AND occurrence counts
     val words = phrases
       .select(col("len"), explode(split(col("phrase"), " ")).as("w"))
       .groupBy(col("w"))

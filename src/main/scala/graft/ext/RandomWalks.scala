@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.{Materialize, Materialized}
 
 /** Deterministic random-walk corpus generation — the DeepWalk / node2vec
   * front end (Perozzi et al. 2014; Grover & Leskovec 2016): embed a graph by
@@ -41,28 +42,26 @@ object RandomWalks {
     // collapses to this single repartition. The distinct's partial
     // aggregate bought nothing here anyway — symmetrized edges are already
     // unique per direction (r17 JobProbe: 1.198M of 1.2M records crossed).
-    val adj = edges
+    val Materialized(adj, _, adjBytes) = Materialize(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .repartition(col("src"))
       .distinct()
       .withColumn("pos",
         row_number().over(Window.partitionBy(col("src")).orderBy(col("dst")))
-          .cast("long") - 1)
-      .localCheckpoint()
+          .cast("long") - 1))
     val deg = adj.groupBy(col("src").as("dsrc"))
       .agg(count(lit(1)).cast("long").as("deg"))
-    // Gated broadcast of the adjacency/degree sides (r17, BroadcastGate
-    // rationale): the checkpoint's LogicalRDD hides adj's real size, so
-    // each step's left joins ran as sort-merge — the src-partitioned
-    // layout spared the EXCHANGE, but every step still re-SORTED the full
-    // adjacency (steps × |E| log |E|). Under the gate, ONE broadcast hash
-    // relation is built and reused by all `steps` joins (identical
-    // broadcast subtrees dedupe via ReuseExchange) and the walker state
-    // streams through unbuffered. Above it the partitioned-layout
-    // sort-merge path stays — the correct plan for adjacencies that don't
-    // fit an executor.
-    val bcast = BroadcastGate.hint(adj.count())
+    // Gated broadcast of the adjacency/degree sides (why hints:
+    // [[graft.Materialize]]): unhinted, each step's left joins ran as
+    // sort-merge — the src-partitioned layout spared the EXCHANGE, but
+    // every step still re-SORTED the full adjacency (steps × |E| log |E|).
+    // Under the gate, ONE broadcast hash relation is built and reused by
+    // all `steps` joins (identical broadcast subtrees dedupe via
+    // ReuseExchange) and the walker state streams through unbuffered. Above
+    // it the partitioned-layout sort-merge path stays — the correct plan for
+    // adjacencies that don't fit an executor.
+    val bcast = Materialize.broadcastHint(adjBytes)
 
     var state = starts
       .select(col(startCol).cast("long").as("walker"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** First-occurrence sequential motifs — the bounded cousin of sequential
   * pattern mining (GSP/PrefixSpan): instead of counting every subsequence
@@ -31,10 +32,10 @@ object SequencePatterns {
   def firstOccurrenceTriples(events: DataFrame, userCol: String,
                              typeCol: String, tsMillis: org.apache.spark.sql.Column,
                              k: Int = 20): DataFrame = {
-    val f = events
+    // three self-join consumers of one aggregate
+    val f = Materialize(events
       .select(col(userCol).as("u"), col(typeCol).as("ty"), tsMillis.as("ms"))
-      .groupBy(col("u"), col("ty")).agg(min(col("ms")).as("t"))
-      .localCheckpoint() // three self-join consumers of one aggregate
+      .groupBy(col("u"), col("ty")).agg(min(col("ms")).as("t"))).df
     def side(n: Int) =
       f.select(col("u"), col("ty").as(s"ty$n"), col("t").as(s"t$n"))
     def before(i: Int, j: Int) =

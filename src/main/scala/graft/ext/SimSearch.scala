@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -406,9 +407,8 @@ object SimSearch {
   def ivfTrainedWriteIndex(df: DataFrame, idCol: String, vecCol: String,
                            seeds: DataFrame, cidCol: String, cvecCol: String,
                            iters: Int, path: String, dims: Int = 64): Unit = {
-    val cents = Clustering.lloydCentroids(df, idCol, vecCol, seeds, cidCol,
-        cvecCol, iters, dims)
-      .localCheckpoint() // feeds the side-table write AND the assignment
+    val cents = Materialize(Clustering.lloydCentroids(df, idCol, vecCol, seeds, cidCol,
+        cvecCol, iters, dims)).df // feeds the side-table write AND the assignment
     cents.select(col("cid").cast("int").as("ivf_cell"), col("cvec").as("centroid"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     val v = Clustering.lloydPrep(df, idCol, vecCol)
@@ -560,13 +560,13 @@ object SimSearch {
         (x, c) => { val dx = x.cast("double") - c; dx * dx }),
       lit(0.0), (acc, x) => acc + x)
     // nProbe cells per query: #queries × nCells rows, both sides broadcast
-    val probes = q.crossJoin(broadcast(
+    // cell filter + candidate join + rerank
+    val probes = Materialize(q.crossJoin(broadcast(
         cents.select(col("ivf_cell"), col("centroid").as("__centroid"))))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(d2, col("ivf_cell"))))
       .filter(col("__rn") <= nProbe)
-      .select(col("query_id"), col("ivf_cell"))
-      .localCheckpoint(eager = true) // cell filter + candidate join + rerank
+      .select(col("query_id"), col("ivf_cell"))).df
     // per-query ADC lookup tables: slice the query vector per subspace
     // against every codeword — #queries × m × codes broadcast rows
     val cb = graft.Tables.parquet(spark, s"$path/codebook")
@@ -720,11 +720,10 @@ object SimSearch {
     val b = base.filter(!col("in_a"))
       .select(col("id").as("b_id"), col("v").as("vb"),
         sqrt(dot(col("v"), col("v"))).as("nrm_b"))
-    val pairs = a.crossJoin(b)
+    val pairs = Materialize(a.crossJoin(b)
       .select(col("a_id"), col("b_id"),
         (dot(col("va"), col("vb")) / (col("nrm_a") * col("nrm_b")))
-          .as("cos"))
-      .localCheckpoint()
+          .as("cos"))).df
     val wa = org.apache.spark.sql.expressions.Window
       .partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id"))
     val wb = org.apache.spark.sql.expressions.Window

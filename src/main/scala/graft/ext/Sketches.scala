@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Count-Min Sketch — the fixed-memory frequency oracle (Cormode &
   * Muthukrishnan, J. Algorithms 2005): d hash rows × w buckets of counters;
@@ -69,9 +70,8 @@ object Sketches {
                         depth: Int = 5, width: Int = 64): DataFrame = {
     require(depth >= 1 && depth % 2 == 1 && width >= 2,
       s"need odd depth >= 1 and width >= 2, got d=$depth w=$width")
-    val counts = df.groupBy(col(itemCol).cast("string").as("item"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = true) // exact moment + sketch both read it
+    val counts = Materialize(df.groupBy(col(itemCol).cast("string").as("item"))
+      .agg(count(lit(1)).as("cnt"))).df // exact moment + sketch both read it
     val exact = counts
       .agg(sum(col("cnt") * col("cnt")).cast("long").as("f2_exact"))
     val sign = (conv(substring(md5(concat(lit("s:"),
@@ -135,10 +135,10 @@ object Sketches {
                                width: Int = 256): DataFrame = {
     val mid = df.agg((min(col(tsCol)) +
       floor((max(col(tsCol)) - min(col(tsCol))) / 2).cast("long")).as("mid"))
-    val tagged = df.crossJoin(broadcast(mid))
+    // exact counts + both sketches read it
+    val tagged = Materialize(df.crossJoin(broadcast(mid))
       .select(col(itemCol).as("item"),
-        (col(tsCol) <= col("mid")).as("first_half"))
-      .localCheckpoint(eager = true) // exact counts + both sketches read it
+        (col(tsCol) <= col("mid")).as("first_half"))).df
     val exact = tagged.groupBy(col("item"))
       .agg(sum(when(col("first_half"), 1L).otherwise(0L)).as("n_first"),
         sum(when(!col("first_half"), 1L).otherwise(0L)).as("n_second"))
@@ -323,8 +323,8 @@ object Sketches {
     }
     def regsOf(df: DataFrame): DataFrame =
       hllRho(df, itemCol, b).groupBy(col("idx")).agg(max(col("rho")).as("mreg"))
-    val ra = regsOf(dfA).localCheckpoint(eager = true) // own est + union
-    val rb = regsOf(dfB).localCheckpoint(eager = true)
+    val ra = Materialize(regsOf(dfA)).df // own est + union
+    val rb = Materialize(regsOf(dfB)).df
     val ru = ra.union(rb).groupBy(col("idx")).agg(max(col("mreg")).as("mreg"))
     val ia = dfA.select(col(itemCol).as("__k")).distinct()
     val ib = dfB.select(col(itemCol).as("__k")).distinct()

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Exact-substring deduplication — the Lee et al. 2022 ("Deduplicating
   * Training Data Makes Language Models Better", arXiv:2107.06499) tier of
@@ -63,7 +64,7 @@ object SubstringDedup {
       if (!gramHash) col("a.g")
       else struct(xxhash64(lit(0x9e3779b97f4a7c15L), col("a.g")).as("h1"),
         xxhash64(lit(0xc2b2ae3d27d4eb4fL), col("a.g")).as("h2"))
-    val grams = docs
+    val grams = Materialize(docs
       .select(col(idCol).cast("long").as("doc"),
         split(col(textCol), " ").as("__l"))
       .select(col("doc"), explode(when(size(l) >= k,
@@ -71,8 +72,7 @@ object SubstringDedup {
             i => struct(i.as("pos"),
               concat_ws(" ", slice(l, i, lit(k))).as("g"))))
         .otherwise(array())).as("a"))
-      .select(col("doc"), col("a.pos").as("pos"), key.as("g"))
-      .localCheckpoint(eager = true)
+      .select(col("doc"), col("a.pos").as("pos"), key.as("g"))).df
     val hot = grams.groupBy(col("g"))
       .agg(countDistinct(col("doc")).as("df"))
       .filter(col("df") > maxDf).select(col("g"))

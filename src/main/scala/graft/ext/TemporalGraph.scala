@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.{Materialize, Materialized}
 
 /** Temporal-graph analytics: reachability and motifs where edges carry
   * timestamps and paths must respect time order (Holme & Saramäki, "Temporal
@@ -25,7 +26,7 @@ object TemporalGraph {
     *
     * Scale shape: each hop is one equi-join on the source node + one
     * min-aggregate keyed by dst; the frontier state is (node, arr) rows
-    * only. The state is localCheckpointed per hop — it is referenced twice
+    * only. The state is materialized per hop — it is referenced twice
     * per round (join + merge), so an unchecked lineage doubles per hop
     * (2^hops plan leaves). Edges are checkpointed once up front for the
     * same reason.
@@ -34,29 +35,26 @@ object TemporalGraph {
                       dayCol: String, seeds: DataFrame, nodeCol: String,
                       arrCol: String, hops: Int): DataFrame = {
     require(hops >= 1 && hops <= 8, s"hops must be 1..8, got $hops")
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"),
-        col(dayCol).cast("long").as("d"))
-      .distinct()
-      .localCheckpoint()
-    var state = seeds.select(col(nodeCol).cast("long").as("node"),
+    val Materialized(e0, _, edgeBytes) = Materialize(edges
+      .select(col(srcCol).cast("long").as("u"),
+        col(dstCol).cast("long").as("v"), col(dayCol).cast("long").as("d"))
+      .distinct())
+    var Materialized(state, _, stateBytes) = Materialize(seeds
+      .select(col(nodeCol).cast("long").as("node"),
         col(arrCol).cast("long").as("arr"))
-      .groupBy(col("node")).agg(min(col("arr")).as("arr"))
-      .localCheckpoint()
-    // The hop join's state side reads back from localCheckpoint blocks,
-    // whose LogicalRDD carries the original (edge-sized) estimate — the
-    // planner sort-merged and re-shuffled the FULL edge table by u EVERY
-    // hop (r17 JobProbe: 3 × 1.2M-record exchanges at sf0.1). State rows
-    // are bounded by |V(e)| + |seeds| ≤ 2·|E| + |seeds| — two cheap count
-    // jobs over already-materialized blocks bound the whole run (the Hits
-    // gate pattern). Under the gate, hint the state broadcast: zero
-    // exchanges per hop on either join side. Over it (graphs where the
-    // state legitimately cannot broadcast), checkpoint the edge table
-    // hash-partitioned by u ONCE so every hop's sort-merge reuses the
-    // edge layout and shuffles only the node-sized state — one up-front
-    // edge exchange instead of `hops` of them.
-    val small = e0.count() * 2 + state.count() <= BroadcastGate.MaxRows
-    val e = if (small) e0 else e0.repartition(col("u")).localCheckpoint()
+      .groupBy(col("node")).agg(min(col("arr")).as("arr")))
+    // The hop join's state side is a checkpoint read (why hints:
+    // [[graft.Materialize]]; unhinted, every hop re-shuffled the FULL edge
+    // table by u, 3 × 1.2M-record exchanges at sf0.1). State rows number
+    // ≤ 2·|E| + |seeds|, each narrower than an edge row, so the two
+    // checkpoints' bytes bound the state for the whole run. Under the gate,
+    // hint the state broadcast: zero exchanges per hop on either join side.
+    // Over it (graphs where the state legitimately cannot broadcast),
+    // checkpoint the edge table hash-partitioned by u ONCE so every hop's
+    // sort-merge reuses the edge layout and shuffles only the node-sized
+    // state — one up-front edge exchange instead of `hops` of them.
+    val small = edgeBytes * 2 + stateBytes <= Materialize.MaxBroadcastBytes
+    val e = if (small) e0 else Materialize(e0.repartition(col("u"))).df
     val bcast: DataFrame => DataFrame = if (small) broadcast else identity
     for (_ <- 1 to hops) {
       // raw (v, d) arrivals feed the state merge directly: the merge's own
@@ -66,9 +64,8 @@ object TemporalGraph {
       val reached = bcast(state).join(e, col("node") === col("u") &&
           col("d") >= col("arr"))
         .select(col("v").as("node"), col("d").as("arr"))
-      state = state.unionByName(reached)
-        .groupBy(col("node")).agg(min(col("arr")).as("arr"))
-        .localCheckpoint()
+      state = Materialize(state.unionByName(reached)
+        .groupBy(col("node")).agg(min(col("arr")).as("arr"))).df
     }
     state
   }
@@ -91,11 +88,10 @@ object TemporalGraph {
   def cascadeWedges(touches: DataFrame, actorCol: String, itemCol: String,
                     dayCol: String, windowDays: Int): DataFrame = {
     require(windowDays >= 1, s"windowDays must be positive, got $windowDays")
-    val first = touches.select(col(actorCol).cast("long").as("actor"),
+    val first = Materialize(touches.select(col(actorCol).cast("long").as("actor"),
         col(itemCol).cast("long").as("item"),
         col(dayCol).cast("long").as("d"))
-      .groupBy(col("actor"), col("item")).agg(min(col("d")).as("d"))
-      .localCheckpoint()
+      .groupBy(col("actor"), col("item")).agg(min(col("d")).as("d"))).df
     val lhs = first.select(col("actor").as("a"), col("item"),
       col("d").as("d1"))
     val rhs = first.select(col("actor").as("b"), col("item").as("item2"),

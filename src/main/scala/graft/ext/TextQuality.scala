@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Corpus-quality operators in the Gopher/C4 filtering tradition (Rae et al. 2021
   * §A1.1; Raffel et al. 2020 §2.2): repetition and diversity signals that
@@ -535,8 +536,8 @@ object TextQuality {
                         buckets: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val nll = unigramNll(df, idCol, textCol)
-    val ranked = GlobalRank.globalRowNumber(nll, Seq(col("avg_nll"), col(idCol)))
-      .localCheckpoint(eager = true)
+    val ranked = Materialize(
+      GlobalRank.globalRowNumber(nll, Seq(col("avg_nll"), col(idCol)))).df
     val n = ranked.agg(count(lit(1)).as("__n"))
     val tiers = ranked.crossJoin(broadcast(n))
       .withColumn("tier", expr(s"((rn - 1) * $buckets) div __n") + 1)

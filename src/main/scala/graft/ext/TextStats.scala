@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Text-analysis operators for large-scale training-data pipelines: token counting,
   * quality scoring, language-ID heuristics, document fingerprinting.
@@ -442,8 +443,9 @@ object TextStats {
                         textCol: String): DataFrame = {
     val tok = df.select(col(groupCol).as("grp"),
       explode(split(col(textCol), " ")).as("t"))
-    val gt = tok.groupBy(col("grp"), col("t")).agg(count(lit(1)).as("n_gt"))
-      .localCheckpoint() // feeds g, ct and the term join
+    // feeds g, ct and the term join
+    val gt = Materialize(tok.groupBy(col("grp"), col("t"))
+      .agg(count(lit(1)).as("n_gt"))).df
     val g = gt.groupBy(col("grp")).agg(sum(col("n_gt")).as("n_g"))
     val ct = gt.groupBy(col("t")).agg(sum(col("n_gt")).as("n_t"))
     val total = ct.agg(sum(col("n_t")).as("n_total"))

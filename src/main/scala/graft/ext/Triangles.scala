@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Distributed triangle counting with degree-ordered edge orientation — the
   * classic MapReduce formulation (Suri & Vassilvitskii, "Counting Triangles
@@ -27,18 +28,19 @@ object Triangles {
   def triangleCensus(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     // e (O(m)) and deg (O(n)) each feed 2-3 consumers below; materialized once
     // so the input scan + dedup shuffle doesn't re-run per consumer
-    val e = edges
+    val e = Materialize(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .distinct()).df
+    val deg = Materialize(e.select(explode(array(col("a"), col("b"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))).df
     // orient a→b when (deg,id)(a) < (deg,id)(b); both joins against the small
     // degree table are broadcast-eligible, the wedge join shuffles on node id
-    val oriented = e
+    // three consumers below (both wedge-join sides + the closing semi-join
+    // probe); materialize once so the edge+degree pipeline doesn't re-run
+    // per consumer — the same checkpoint discipline as Dedup.dupClusters
+    val oriented = Materialize(e
       .join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), Seq("a"))
       .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), Seq("b"))
       .select(
@@ -48,11 +50,7 @@ object Triangles {
           struct(col("db").as("d"), col("b").as("n")))
           .otherwise(struct(col("da").as("d"), col("a").as("n")))
           .as("vo"))
-      .select(col("u"), col("vo").getField("n").as("v"), col("vo"))
-      // three consumers below (both wedge-join sides + the closing semi-join
-      // probe); materialize once so the edge+degree pipeline doesn't re-run
-      // per consumer — the same checkpoint discipline as Dedup.dupClusters
-      .localCheckpoint()
+      .select(col("u"), col("vo").getField("n").as("v"), col("vo"))).df
     val wedges = oriented.as("x").join(oriented.as("y"),
         col("x.u") === col("y.u") && (col("x.vo") < col("y.vo")))
       .select(col("x.v").as("wv"), col("y.v").as("ww"))
@@ -86,12 +84,11 @@ object Triangles {
     * aggregate. Output: 1 row (n_nodes, n_edges, assortativity).
     */
   def assortativity(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges
+    val e = Materialize(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint() // degree agg + two degree joins read it
+      .distinct()).df // degree agg + two degree joins read it
     val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val both = e.select(col("a").as("x"), col("b").as("y"))
@@ -132,16 +129,14 @@ object Triangles {
     */
   def localClusteringByDegree(edges: DataFrame, srcCol: String,
                               dstCol: String): DataFrame = {
-    val e = edges
+    val e = Materialize(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val oriented = e
+      .distinct()).df
+    val deg = Materialize(e.select(explode(array(col("a"), col("b"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))).df
+    val oriented = Materialize(e
       .join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"),
         Seq("a"))
       .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"),
@@ -155,8 +150,7 @@ object Triangles {
           struct(col("db").as("d"), col("b").as("n")))
           .otherwise(struct(col("da").as("d"), col("a").as("n")))
           .as("vo"))
-      .select(col("u"), col("vo").getField("n").as("v"), col("vo"))
-      .localCheckpoint()
+      .select(col("u"), col("vo").getField("n").as("v"), col("vo"))).df
     val triangles = oriented.as("x").join(oriented.as("y"),
         col("x.u") === col("y.u") && (col("x.vo") < col("y.vo")))
       .select(col("x.u").as("tu"), col("x.v").as("wv"), col("y.v").as("ww"))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** k-truss decomposition by support peeling (Cohen, "Trusses: cohesive
   * subgraphs for social network analysis", NSA tech report 2008; Wang &
@@ -38,11 +39,10 @@ object Truss {
     require(k >= 3 && k <= 16, s"k must be 3..16, got $k")
     require(rounds >= 1 && rounds <= 10, s"rounds must be 1..10, got $rounds")
     val minSupport = k - 2
-    val e0 = edges.select(
+    val e0 = Materialize(edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") < col("b")).distinct()
-      .localCheckpoint()
+      .filter(col("a") < col("b")).distinct()).df
     var alive = e0
     var removedAll: DataFrame = e0.limit(0)
       .select(col("a"), col("b"), lit(0).as("round"))
@@ -61,11 +61,10 @@ object Truss {
           struct(col("y").as("a"), col("z").as("b")))).as("e"))
         .groupBy(col("e.a").as("sa"), col("e.b").as("sb"))
         .agg(count(lit(1)).as("supp"))
-      val tagged = alive.join(support,
+      val tagged = Materialize(alive.join(support,
           col("a") === col("sa") && col("b") === col("sb"), "left")
         .select(col("a"), col("b"),
-          (coalesce(col("supp"), lit(0L)) >= minSupport).as("keep"))
-        .localCheckpoint()
+          (coalesce(col("supp"), lit(0L)) >= minSupport).as("keep"))).df
       removedAll = removedAll.unionByName(tagged.filter(!col("keep"))
         .select(col("a"), col("b"), lit(r).as("round")))
       alive = tagged.filter(col("keep")).select(col("a"), col("b"))

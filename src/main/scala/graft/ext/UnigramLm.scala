@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Distributed unigram-LM (SentencePiece-style) tokenizer training — the
   * OTHER algorithm real pipelines train besides BPE (Kudo 2018, arXiv:
@@ -134,13 +135,12 @@ object UnigramLm {
       cfg.targetMulti >= 1 && cfg.emIters >= 1, s"bad config $cfg")
 
     // the single corpus-sized pass: word frequencies
-    val words: Dataset[(String, Long)] = docs
+    val words: Dataset[(String, Long)] = Materialize(docs
       .select(explode(split(col(textCol), " ")).as("__w"))
       .filter(length(col("__w")) > 0)
       .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
       .filter(col("__f") >= cfg.minFreq)
-      .as[(String, Long)]
-      .localCheckpoint(eager = true)
+      .as[(String, Long)]).df
 
     // seed: every substring occurrence of every word, weighted by word freq
     val maxLen = cfg.maxPieceLen
@@ -254,18 +254,7 @@ object UnigramLm {
     */
   def fertilityByGroup(docs: DataFrame, idCol: String, textCol: String,
                        groupCol: String, pieces: Seq[Piece],
-                       maxPieceLen: Int = 5): DataFrame = {
-    val enc = encode(docs, idCol, textCol, pieces, maxPieceLen)
-    docs.select(col(idCol), col(groupCol).as("grp"),
-        length(col(textCol)).cast("long").as("__chars"))
-      .join(enc, idCol)
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("n_words"),
-        sum(col("n_tokens")).as("n_tokens"), sum(col("__chars")).as("__c"))
-      .select(col("grp"), col("n_docs"), col("n_words"), col("n_tokens"),
-        round(col("n_tokens").cast("double") / col("n_words"), 6)
-          .as("fertility"),
-        round(col("__c").cast("double") / col("n_tokens"), 6)
-          .as("chars_per_token"))
-  }
+                       maxPieceLen: Int = 5): DataFrame =
+    BpeTrain.fertility(docs, idCol, textCol, groupCol,
+      encode(docs, idCol, textCol, pieces, maxPieceLen))
 }

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
+import graft.Materialize
 
 /** Max-min fair (water-filling) budget allocation — the classic capacity
   * planner (Bertsekas & Gallager, "Data Networks" §6.5.2): give every key
@@ -66,10 +67,10 @@ object Waterfill {
         Row.fromSeq(r.toSeq :+ rn :+ p)
       }
     }
-    val rdf = spark.createDataFrame(ranked,
+    // read twice: the k* aggregate + the readout
+    val rdf = Materialize(spark.createDataFrame(ranked,
         sorted.schema.add("rnk", LongType, nullable = false)
-          .add("__p", LongType, nullable = false))
-      .localCheckpoint() // read twice: the k* aggregate + the readout
+          .add("__p", LongType, nullable = false))).df
     // the eager checkpoint above was the ranked RDD's last consumer —
     // release the cache here instead of leaking it to the caller
     rdd.unpersist(blocking = false)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Haar wavelet energy decomposition of a bounded integer series — the
   * multiresolution fingerprint: how much of a daily metric's variation
@@ -65,15 +66,14 @@ object Wavelet {
           (pAt(l0 + col("sz")) - pAt(l0 + half))).cast("decimal(38,0)")
         (d * d).as("term") // exact — d² overflows int64
       })
-    val energies = terms.groupBy(col("level"))
+    val energies = Materialize(terms.groupBy(col("level"))
       .agg(count(lit(1)).as("n_coeffs"),
         sum(col("term")).cast("decimal(38,0)").as("d2_sum"))
       // scaled = Σd²·2^(L−k): the 2^L-multiplied orthonormal energy, an
       // exact integer on both engines
       .withColumn("scaled", (col("d2_sum") *
         pow(lit(2.0), lit(levels) - col("level")).cast("long"))
-        .cast("decimal(38,0)"))
-      .localCheckpoint(eager = true) // rows + the 1-row total read it
+        .cast("decimal(38,0)"))).df // rows + the 1-row total read it
     val total = energies.agg(sum(col("scaled")).cast("decimal(38,0)")
       .as("tot"))
     energies.crossJoin(broadcast(total))

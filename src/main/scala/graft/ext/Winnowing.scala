@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken, SIGMOD'03 —
   * the MOSS algorithm): hash every character k-gram, slide a window of `w`
@@ -173,11 +174,10 @@ object Winnowing {
     // different keys, so without a checkpoint AQE re-runs the whole
     // fingerprint kernel per branch (the Dedup.jaccardPairsPrefix finding —
     // and the fused kernel has no shuffle of its own to reuse)
-    val pruned = fp
+    val pruned = Materialize(fp
       .withColumn("__df", count(lit(1)).over(
         Window.partitionBy(col("__fh"))))
-      .filter(col("__df") <= maxDf).drop("__df")
-      .localCheckpoint(eager = true)
+      .filter(col("__df") <= maxDf).drop("__df")).df
     val sizes = pruned.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
     val shared = pruned.select(col(idCol).as("id_a"), col("__fh"))
       .join(pruned.select(col(idCol).as("id_b"), col("__fh")), "__fh")

@@ -81,18 +81,7 @@ object WordPiece {
     * chars_per_token).
     */
   def fertilityByGroup(docs: DataFrame, idCol: String, textCol: String,
-                       groupCol: String, vocab: Seq[String]): DataFrame = {
-    val enc = encode(docs, idCol, textCol, vocab)
-    docs.select(col(idCol), col(groupCol).as("grp"),
-        length(col(textCol)).cast("long").as("__chars"))
-      .join(enc, idCol)
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("n_words"),
-        sum(col("n_tokens")).as("n_tokens"), sum(col("__chars")).as("__c"))
-      .select(col("grp"), col("n_docs"), col("n_words"), col("n_tokens"),
-        round(col("n_tokens").cast("double") / col("n_words"), 6)
-          .as("fertility"),
-        round(col("__c").cast("double") / col("n_tokens"), 6)
-          .as("chars_per_token"))
-  }
+                       groupCol: String, vocab: Seq[String]): DataFrame =
+    BpeTrain.fertility(docs, idCol, textCol, groupCol,
+      encode(docs, idCol, textCol, vocab))
 }

@@ -2,6 +2,7 @@ package graft.metrics
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Item-item collaborative-filtering neighborhoods over binary interactions —
   * the item-side transpose of P6 personalization's user-user cosine
@@ -35,17 +36,15 @@ object ItemCF {
     // b0 feeds three differently-keyed branches (basket sizes, item support,
     // the join input) — materialize the upstream interactions+distinct once
     // instead of letting AQE re-run it per branch (35 scans observed).
-    val b0 = interactions
-      .select(col(userCol).as("user"), col(itemCol).as("item")).distinct()
-      .localCheckpoint(eager = true)
+    val b0 = Materialize(interactions
+      .select(col(userCol).as("user"), col(itemCol).as("item")).distinct()).df
     val keptUsers = b0.groupBy(col("user")).agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") <= maxBasket).select(col("user"))
     // ni feeds three consumers (the item prune + both post-aggregate support
     // joins) — checkpoint the small table instead of re-running its aggregate
-    val ni = b0.join(broadcast(keptUsers), Seq("user"))
+    val ni = Materialize(b0.join(broadcast(keptUsers), Seq("user"))
       .groupBy(col("item")).agg(count(lit(1)).as("n_users"))
-      .filter(col("n_users") >= minSupport)
-      .localCheckpoint(eager = true)
+      .filter(col("n_users") >= minSupport)).df
     // basket form: both cuts apply as broadcast semi-joins on the scan (no
     // reshuffle), then ONE user-keyed set aggregate collects each kept basket
     // and pairs generate map-side from it — bounded by maxBasket² per user —

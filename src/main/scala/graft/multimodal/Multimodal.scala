@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Materialize
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque `binary` columns
   * with typed metadata, decoded/featurized per partition in batches.
@@ -608,7 +609,7 @@ object Multimodal {
     // the segment table feeds the df-cap aggregate AND both self-join
     // sides — materialize once or Catalyst re-runs the decode+chunk scan
     // per consumer (the standing multi-consumer localCheckpoint rule)
-    val segs = segs0.filter(col("len") >= minLen).localCheckpoint()
+    val segs = Materialize(segs0.filter(col("len") >= minLen)).df
     val kept = segs.join(
       segs.groupBy(col("fp"), col("len"))
         .agg(countDistinct(col(idCol)).as("__df"))

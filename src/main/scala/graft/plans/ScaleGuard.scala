@@ -93,7 +93,7 @@ object ScaleGuard extends Logging {
 
   /** True when every unbounded path from the window down ends at a grouped
     * [[Aggregate]] OR a materialized [[org.apache.spark.sql.execution.LogicalRDD]]
-    * (localCheckpoint output) — the library's two post-reduction idioms
+    * ([[graft.Materialize]] output) — the library's two post-reduction idioms
     * (decile cumulatives, per-source caps; checkpointed digit/arm/bin count
     * tables). Those windows WARN (the group domain or checkpoint might still
     * be huge — per-user, per-document) but never fail the query: the

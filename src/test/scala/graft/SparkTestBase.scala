@@ -22,4 +22,19 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   def approx(a: Double, b: Double, eps: Double = 1e-9): Boolean = math.abs(a - b) <= eps
+
+  /** `body` run with reliable checkpoints: [[graft.Materialize]] writes
+    * checkpoint files while a checkpoint directory is set. The directory is
+    * fresh, cleared from the SparkContext afterwards and deleted, so `body`
+    * must collect what it reads.
+    */
+  def withCheckpointDir[A](body: => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-checkpoint")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try body
+    finally {
+      spark.sparkContext.setCheckpointDir(null)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }

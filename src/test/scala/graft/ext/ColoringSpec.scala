@@ -39,10 +39,12 @@ class ColoringSpec extends SparkTestBase {
       rnd.nextInt(70).toLong)).filter(e => e._1 != e._2).distinct
     val adj = edges.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
       .map { case (k, vs) => k -> vs.map(_._2).toSet }
-    val got = Coloring.jonesPlassmann(edges.toDF("src", "dst"),
+    def run() = Coloring.jonesPlassmann(edges.toDF("src", "dst"),
         "src", "dst", rounds = 4).collect()
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
+    val got = run()
     assert(got == jpReplay(adj, 4))
+    assert(withCheckpointDir(run()) == got, "reliable checkpoints")
   }
 
   test("coloring: colored nodes form a proper partial coloring") {

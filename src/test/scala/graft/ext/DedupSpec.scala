@@ -106,10 +106,16 @@ class DedupSpec extends SparkTestBase {
 
   test("pointer jumping: a 50-node chain converges within 10 rounds; plain does not") {
     val chain = (1L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (labels, iters, ok) =
-      Dedup.dupClustersWithStats(chain, maxIter = 10, unionFindMaxEdges = 0)
+    def run() = {
+      val (labels, iters, ok) =
+        Dedup.dupClustersWithStats(chain, maxIter = 10, unionFindMaxEdges = 0)
+      (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, iters, ok)
+    }
+    val (labels, iters, ok) = run()
     assert(ok, s"pointer-jump CC did not converge in 10 rounds (ran $iters)")
-    assert(labels.collect().map(_.getLong(1)).toSet == Set(1L))
+    assert(labels.values.toSet == Set(1L))
+    assert(withCheckpointDir(run()) == ((labels, iters, ok)),
+      "reliable checkpoints")
     // plain min-label propagation needs O(diameter)=49 rounds on the same chain
     val (_, _, plainOk) = Dedup.dupClustersWithStats(chain, maxIter = 10,
       pointerJump = false, unionFindMaxEdges = 0)

@@ -17,9 +17,11 @@ class GraphPathsSpec extends SparkTestBase {
     // path 1-2-3-4-5: degrees 1,2,2,2,1 → seed = node 2 (min id at degree 2)
     // distances from 2: {2:0, 1:1, 3:1, 4:2, 5:3}
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("s", "t")
-    val out = GraphPaths.bfsLevels(path, "s", "t")
+    def run() = GraphPaths.bfsLevels(path, "s", "t")
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val out = run()
     assert(out == Map(0 -> 1L, 1 -> 2L, 2 -> 1L, 3 -> 1L))
+    assert(withCheckpointDir(run()) == out, "reliable checkpoints")
   }
 
   test("bfsLevels: the depth cap truncates and disconnected components " +

@@ -112,10 +112,12 @@ class HdrMisSpec extends SparkTestBase {
     val adj = edges.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
       .map { case (k, vs) => k -> vs.map(_._2).toSet }
     val sym = edges.flatMap(e => Seq(e, e.swap)).toDF("src", "dst")
-    val got = Mis.luby(sym, "src", "dst", rounds = 3).collect()
+    def run() = Mis.luby(sym, "src", "dst", rounds = 3).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getInt(2)))).toMap
+    val got = run()
     val want = lubyReplay(adj, 3)
     assert(got == want)
+    assert(withCheckpointDir(run()) == got, "reliable checkpoints")
   }
 
   test("mis: independence and maximality invariants hold") {

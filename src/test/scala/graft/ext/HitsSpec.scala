@@ -11,9 +11,11 @@ class HitsSpec extends SparkTestBase {
     // iter 2: a_raw = (1, 3/5) → a = (5/8, 3/8);
     //         h_raw = (1, 5/8) → h = (8/13, 5/13)
     val edges = Seq((1L, 10L), (1L, 11L), (2L, 10L)).toDF("src", "dst")
-    val out = Hits.hits(edges, "src", "dst", iterations = 2)
+    def run() = Hits.hits(edges, "src", "dst", iterations = 2)
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
+    val out = run()
+    assert(withCheckpointDir(run()) == out, "reliable checkpoints")
     assert(math.abs(out(("authority", 10L)) - 5.0 / 8.0) < 1e-6)
     assert(math.abs(out(("authority", 11L)) - 3.0 / 8.0) < 1e-6)
     assert(math.abs(out(("hub", 1L)) - 8.0 / 13.0) < 1e-6)

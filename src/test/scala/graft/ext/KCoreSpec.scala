@@ -56,5 +56,6 @@ class KCoreSpec extends SparkTestBase {
     val expect = es.flatMap { case (a, b) => Seq(a, b) }
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     assert(core(edges, k) == expect)
+    assert(withCheckpointDir(core(edges, k)) == expect, "reliable checkpoints")
   }
 }

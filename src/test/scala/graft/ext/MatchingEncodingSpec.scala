@@ -46,11 +46,13 @@ class MatchingEncodingSpec extends SparkTestBase {
         rnd.nextInt(60).toLong))
       .filter(e => e._1 != e._2)
       .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).toSet
-    val got = Matching.maximalMatching(edges.toSeq.toDF("src", "dst"),
+    def run() = Matching.maximalMatching(edges.toSeq.toDF("src", "dst"),
         "src", "dst", rounds = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getString(2), r.getInt(3)))).toMap
+    val got = run()
     assert(got == matchReplay(edges, 3))
+    assert(withCheckpointDir(run()) == got, "reliable checkpoints")
   }
 
   test("matching: matched edges are vertex-disjoint and maximal") {

@@ -204,9 +204,11 @@ class OmegaModulesSpec extends SparkTestBase {
     assert(out.keySet == Set(1L, 2L))
     assert(approx(out(1L), 0.15) && approx(out(2L), 0.85))
     // more rounds: mass reaches 3, seed proximity ordering holds
-    val out3 = PageRank.personalizedPageRank(edges, "src", "dst", "w", seeds,
+    def run3() = PageRank.personalizedPageRank(edges, "src", "dst", "w", seeds,
         "node", iterations = 3, damping = 0.85)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val out3 = run3()
+    assert(withCheckpointDir(run3()) == out3, "reliable checkpoints")
     assert(out3.keySet == Set(1L, 2L, 3L))
     assert(out3(2L) > out3(3L), "closer to seed ranks higher")
   }

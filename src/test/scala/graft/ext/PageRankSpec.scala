@@ -23,8 +23,10 @@ class PageRankSpec extends SparkTestBase {
       (rng.nextInt(12).toLong, rng.nextInt(12).toLong)
     }.filter { case (a, b) => a != b }.distinct
     val sym = (rawEdges ++ rawEdges.map(_.swap)).distinct
-    val got = PageRank.pageRank(sym.toDF("src", "dst"), "src", "dst", iterations = 5)
+    def run() = PageRank.pageRank(sym.toDF("src", "dst"), "src", "dst", iterations = 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = run()
+    assert(withCheckpointDir(run()) == got, "reliable checkpoints")
 
     // local reference implementation (plain doubles — values agree to 1e-9
     // because the distributed DECIMAL sums are exact)

@@ -21,9 +21,11 @@ class TemporalGraphSpec extends SparkTestBase {
 
   test("min-merge keeps the earliest arrival across competing paths") {
     // 1->3 direct on day 9; 1->2 (day 2) -> 3 (day 4): two-hop wins
-    val got = arrivals(
-      Seq((1L, 3L, 9L), (1L, 2L, 2L), (2L, 3L, 4L)), Seq((1L, 0L)), 2)
+    val e = Seq((1L, 3L, 9L), (1L, 2L, 2L), (2L, 3L, 4L))
+    val got = arrivals(e, Seq((1L, 0L)), 2)
     assert(got(3L) == 4L && got(2L) == 2L)
+    assert(withCheckpointDir(arrivals(e, Seq((1L, 0L)), 2)) == got,
+      "reliable checkpoints")
   }
 
   test("a seed's activation day gates its first hop") {
