@@ -62,13 +62,16 @@ private[streaming] object DedupIndex {
   /** Read `store` with one collect job and fold it on the driver. Each task
     * reports its row count and payload bytes (string lengths, 8 per numeric
     * field); once either total passes its limit the remaining partitions are
-    * dropped as they arrive and the build fails with the totals seen. */
+    * dropped as they arrive and the build fails with the totals seen. The
+    * store is read as stored: [[StreamingOps.dedupStore]] carries an id's
+    * shingles on its band-0 rows only, so they are counted and kept once per
+    * id. A store persisted with shingles on every band row still builds the
+    * same index; it only reads (and counts) the extra copies. */
   def build(store: DataFrame, maxRows: Long = MaxRows,
             maxBytes: Long = MaxBytes): DedupIndex = {
     val idType = store.schema("__ex_id").dataType
     val rdd = store.select(col("__ex_id"), col("__hkey"),
-        col("band").cast("int"), col("bkey"),
-        when(col("band") === 0, col("__ex_sh")).as("__ex_sh"), col("__n_ex"))
+        col("band").cast("int"), col("bkey"), col("__ex_sh"), col("__n_ex"))
       .rdd
     val parts = new Array[Array[Row]](rdd.getNumPartitions)
     var (rows, bytes) = (0L, 0L)
@@ -115,7 +118,8 @@ private[streaming] object DedupIndex {
     }
     ids.indices.find(shingles(_) == null).foreach { s =>
       throw new IllegalArgumentException(
-        s"dedup store id ${ids(s)} has no band-0 row; build the store with dedupStore")
+        s"dedup store id ${ids(s)} has no shingle set on a band-0 row; " +
+          "build the store with dedupStore")
     }
     val bucketMap = new java.util.HashMap[(Int, String), Array[Int]](buckets.size * 2)
     buckets.foreach { case (k, v) => bucketMap.put(k, v.result()) }

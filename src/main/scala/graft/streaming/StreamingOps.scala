@@ -670,11 +670,16 @@ object StreamingOps {
 
   /** Build the STATIC side of streaming incremental dedup from an existing
     * corpus: one row per (store text row, band) with the row's md5 key
-    * `__hkey` and its id's LSH band key, distinct shingles `__ex_sh` and their
-    * count `__n_ex` — everything [[incrementalDedupStream]] reads into its
-    * driver index (one shingle array per id, from the band-0 row), in one
-    * persistable table: the "persist the store's signatures once" artifact
-    * [[graft.ext.Dedup.incrementalDedup]]'s docs call for.
+    * `__hkey`, its id's LSH band key and distinct-shingle count `__n_ex` —
+    * everything [[incrementalDedupStream]] reads into its driver index, in
+    * one persistable table: the "persist the store's signatures once"
+    * artifact [[graft.ext.Dedup.incrementalDedup]]'s docs call for.
+    *
+    * The id's distinct shingles `__ex_sh` sit on its band-0 rows only and are
+    * null on every other band row. The index keeps one shingle array per id,
+    * so a copy per band would only be held, never read: at the defaults (4
+    * bands) the shingle text is most of the persisted bytes, and a store
+    * stays cached for as long as the stream is defined against it.
     *
     * One scan and one exchange: the `(id, text)` rows with a non-null id are
     * hash-partitioned on id into `spark.sql.shuffle.partitions` partitions (an
@@ -708,7 +713,8 @@ object StreamingOps {
     graft.ext.Dedup.bandKeys(perId, "__ex_id", numHashes / rowsPerBand, rowsPerBand,
         carryCols = Seq("__hkeys", "__ex_sh", "__n_ex"))
       .select(col("__ex_id"), explode(col("__hkeys")).as("__hkey"),
-        col("__ex_sh"), col("__n_ex"), col("band"), col("bkey"))
+        when(col("band") === 0, col("__ex_sh")).as("__ex_sh"), col("__n_ex"),
+        col("band"), col("bkey"))
   }
 
   /** Streaming twin of [[graft.ext.Dedup.incrementalDedup]]: classify ARRIVING

@@ -210,8 +210,13 @@ class StreamingOpsSpec extends SparkTestBase {
 
     val store = StreamingOps.dedupStore(existing.toDF("doc_id", "text"), "doc_id", "text")
       .persist()
+    // the relational form joins every band row with its shingles, so it reads
+    // the store's old shape: shingles on every band row, as the relational
+    // store built them (the store differential below pins that shape)
+    val oldStore = relationalDedupStore(existing.toDF("doc_id", "text"), "doc_id", "text")
+      .persist()
     val batchDocs = incoming.toDF()
-    val expected = multiset(relationalDedupStream(batchDocs, store, "doc_id", "text").collect())
+    val expected = multiset(relationalDedupStream(batchDocs, oldStore, "doc_id", "text").collect())
     // the corpus reaches every case the differential is about
     assert(expected.contains((("t_twin", "exact_dup", "｡", None))))
     assert(expected.keys.exists(r => r._1 == null && r._2 == "exact_dup"))
@@ -223,12 +228,15 @@ class StreamingOpsSpec extends SparkTestBase {
 
     assert(multiset(StreamingOps
       .incrementalDedupStream(batchDocs, store, "doc_id", "text").collect()) == expected)
+    // a store persisted in the old shape still probes the same way
+    assert(multiset(StreamingOps
+      .incrementalDedupStream(batchDocs, oldStore, "doc_id", "text").collect()) == expected)
 
     val input = MemoryStream[StrDoc]
     val queries = Seq(
       "incdedup_index" -> StreamingOps.incrementalDedupStream(
         input.toDF(), store, "doc_id", "text"),
-      "incdedup_relational" -> relationalDedupStream(input.toDF(), store, "doc_id", "text"))
+      "incdedup_relational" -> relationalDedupStream(input.toDF(), oldStore, "doc_id", "text"))
       .map { case (name, df) =>
         df.writeStream.format("memory").queryName(name).outputMode("append").start()
       }
@@ -240,6 +248,7 @@ class StreamingOpsSpec extends SparkTestBase {
     assert(multiset(spark.table("incdedup_relational").collect()) == expected)
     assert(multiset(spark.table("incdedup_index").collect()) == expected)
     store.unpersist()
+    oldStore.unpersist()
   }
 
   test("incrementalDedupStream: after the first micro-batch, each runs at " +
@@ -329,11 +338,14 @@ class StreamingOpsSpec extends SparkTestBase {
         Seq("__ex_id"))
   }
 
-  /** Exact multiset of store rows (id, hkey, sorted shingles, n_ex, band, bkey). */
+  /** Exact multiset of store rows (id, hkey, sorted shingles, n_ex, band,
+    * bkey). A null shingle array is `None`, so the empty text's `Seq("")`
+    * stays apart from "no shingles on this row". */
   private def storeRows(store: DataFrame)
-      : Map[(Any, String, Seq[String], Long, Int, String), Int] =
+      : Map[(Any, String, Option[Seq[String]], Long, Int, String), Int] =
     store.collect().toSeq.map(r => (r.get(0), r.getString(1),
-        r.getSeq[String](2).sorted, r.getLong(3), r.getInt(4), r.getString(5)))
+        Option(r.getSeq[String](2)).map(_.sorted), r.getLong(3), r.getInt(4),
+        r.getString(5)))
       .groupBy(identity).map { case (k, v) => k -> v.size }
 
   test("dedupStore emits exactly the relational form's rows, for long and string ids") {
@@ -362,12 +374,23 @@ class StreamingOpsSpec extends SparkTestBase {
     }, 3).toDF("doc_id", "text")
 
     def check(df: DataFrame, k: Int, numHashes: Int, rowsPerBand: Int) = {
+      // the relational form's rows, with shingles kept on band 0 only
       val ref = relationalDedupStore(df, "doc_id", "text", k, numHashes, rowsPerBand)
+        .withColumn("__ex_sh", when(col("band") === 0, col("__ex_sh")))
       val got = StreamingOps.dedupStore(df, "doc_id", "text", k, numHashes, rowsPerBand)
       assert(got.schema.map(f => (f.name, f.dataType)) ==
         ref.schema.map(f => (f.name, f.dataType)))
       val expected = storeRows(ref)
-      assert(storeRows(got) == expected)
+      val rows = storeRows(got)
+      assert(rows == expected)
+      assert(rows.keys.forall(r => r._3.isDefined == (r._5 == 0)),
+        "shingles on a band > 0 row, or none on a band-0 row")
+      // each store text row (id, hkey) has one row per band, so exactly one
+      // band-0 row: an (id, hkey) held n times has n rows in every band
+      val perBand = rows.toSeq.groupBy { case (r, _) => (r._1, r._2) }.map { case (key, rs) =>
+        key -> rs.groupBy(_._1._5).map { case (b, v) => b -> v.map(_._2).sum } }
+      assert(perBand.values.forall(n => n.keySet == (0 until numHashes / rowsPerBand).toSet &&
+        n.values.toSet.size == 1), s"rows per (id, hkey) and band: $perBand")
       expected
     }
     val numBands = 4
@@ -377,12 +400,22 @@ class StreamingOpsSpec extends SparkTestBase {
     assert(idRows("two") == 2 * numBands && idRows("repeated") == 2 * numBands)
     assert(strRows.keys.exists(r => r._1 == "mixed" && r._2 == "__null_text__"))
     assert(idRows("null_only") == 0 && idRows(null) == 0)
-    assert(strRows.keys.exists(r => r._1 == "empty" && r._3 == Seq("")))
+    assert(strRows.keys.exists(r => r._1 == "empty" && r._3 == Some(Seq(""))))
     assert(strRows.keys.filter(_._1 == "two").map(_._4).forall(_ > 12L))
     assert(Seq("shared_a", "｡", "😀").map(id =>
       strRows.keys.filter(_._1 == id).map(r => (r._5, r._6)).toSet).distinct.size == 1)
     check(byLong, 3, 16, 4)
     check(byLong, 2, 8, 2)
+  }
+
+  /** 60 (id, text) rows, each text 40 random 16-hex-digit words: ids 0-49,
+    * every fifteenth id null, so ids 0-8 hold two texts. */
+  private def hexWordRows(): Seq[(java.lang.Long, String)] = {
+    val rnd = new scala.util.Random(11L)
+    (0 until 60).map { i =>
+      (if (i % 15 == 14) null else java.lang.Long.valueOf(i % 50L),
+        Seq.fill(40)(f"${rnd.nextLong()}%016x").mkString(" "))
+    }
   }
 
   test("dedupStore runs one scan and one exchange of the input rows, no broadcast") {
@@ -395,14 +428,10 @@ class StreamingOpsSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
-    val rnd = new scala.util.Random(11L)
     // 40 random 16-hex-digit words a text. Its id and text cross the
     // exchange as about the text's bytes; its 38 three-word shingles, md5
     // key and signature, built before the exchange, as 1.7 times them
-    val rows = (0 until 60).map { i =>
-      (if (i % 15 == 14) null else java.lang.Long.valueOf(i % 50L),
-        Seq.fill(40)(f"${rnd.nextLong()}%016x").mkString(" "))
-    }
+    val rows = hexWordRows()
     val nonNull = rows.count(_._1 != null).toLong
     val textBytes = rows.filter(_._1 != null).map(_._2.length.toLong).sum
     val dir = graft.Scratch.register(
@@ -458,6 +487,49 @@ class StreamingOpsSpec extends SparkTestBase {
       ctx.removeSparkListener(listener)
       spark.conf.set("spark.sql.shuffle.partitions", old)
     }
+  }
+
+  test("dedupStore persists each text row's shingle set once, not once per band") {
+    // Named in advance, from the corpus alone. Both shapes hold numBands rows
+    // per (id, text) row with the same id, md5 key, n_ex, band and band key;
+    // the old shape repeats the id's shingle set on every band row, the store
+    // keeps it on band 0. With S the shingle text bytes per (id, text) row
+    // and F = 128 bytes above a row's other columns (8 + 32 + 8 + 4 + 32
+    // bytes of values, plus their length and null words),
+    //   store / old ≤ (F + S / numBands) / (F + S).
+    // The bound rises with F and falls with S, so counting each shingle as
+    // its characters only (no array offsets) keeps it safe. Bytes at fixed
+    // data repeat exactly, unlike heap readings.
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val rows = hexWordRows()
+    val numBands = 4
+    val textRows = rows.count(_._1 != null)
+    val shingleBytes = rows.filter(_._1 != null).groupBy(_._1).values.map { texts =>
+      val sh = texts.flatMap(_._2.split(" ").sliding(3).map(_.mkString(" "))).distinct
+      texts.size * sh.map(_.length.toLong).sum
+    }.sum
+    val (f, sPerRow) = (128.0, shingleBytes.toDouble / textRows)
+    val bound = (f + sPerRow / numBands) / (f + sPerRow)
+    assert(bound < 0.3, s"bound $bound") // the corpus is shingle-heavy
+
+    val ctx = spark.sparkContext
+    def persistedBytes(store: DataFrame): Long = {
+      assert(store.persist().count() == textRows * numBands)
+      val id = store.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+      }.getOrElse(fail("the store is not cached"))
+      org.apache.spark.graftbridge.ListenerBridge.drain(ctx)
+      val info = ctx.getRDDStorageInfo.find(_.id == id)
+        .getOrElse(fail(s"rdd $id is not in storage"))
+      info.memSize + info.diskSize
+    }
+    val df = rows.toDF("doc_id", "text")
+    val stores = Seq(StreamingOps.dedupStore(df, "doc_id", "text"),
+      relationalDedupStore(df, "doc_id", "text"))
+    try {
+      val Seq(now, old) = stores.map(persistedBytes)
+      assert(now <= bound * old, s"store $now B, old shape $old B, bound $bound")
+    } finally stores.foreach(_.unpersist())
   }
 
   test("dsirBucketCountsStream counts match the batch distribution and the " +
