@@ -48,44 +48,85 @@ object Multimodal {
         .as("format"))
   }
 
-  /** Decode metadata for each media blob — per-partition imperative batch loop (the
-    * Scala analog of `mapInPandas`: one iterator in, one iterator out, no per-row
-    * driver involvement, arbitrary native-lib calls allowed inside). The codec is
-    * injected ([[MediaCodec]] is `Serializable`, instantiated once per partition
-    * iterator closure, so a real codec can hold native handles per executor).
+  /** The media tier's one per-row step, the multimodal codec batch loop: per
+    * partition, one iterator in and one iterator out (the Scala analog of
+    * `mapInPandas`: no per-row driver work, native codec calls allowed
+    * inside), wrapped back into a DataFrame. Every `rdd.mapPartitions` and
+    * `createDataFrame` of the package is this one.
+    *
+    * An output row starts with its input row's columns, all of them or, when
+    * `id` is given, only that key (a keyed row), and ends with one tuple of
+    * `fields` values. `open` runs once per partition (a per-task digest or a
+    * JVM-global codec setting lives there) and returns the row step, which
+    * reads the `inputs` columns, in that order, as one Row and gives zero or
+    * more value tuples for it. A tuple holds each field's external type, so
+    * an Int beside a Long is written `Seq[Any](i, l)`: a plain `Seq` would
+    * widen the Int.
     */
-  def decodeMeta(df: DataFrame, mediaCol: String,
-                 codec: MediaCodec = FakeCodec): DataFrame = {
-    val schema = StructType(df.schema.fields :+ StructField("meta", mediaMetaSchema))
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val rows = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val bytes = r.getAs[Array[Byte]](mediaIdx)
-        val m = codec.decode(bytes)
-        Row.fromSeq(r.toSeq :+ Row(m.format, m.width, m.height, m.nBytes))
+  private def codecLoop(df: DataFrame, inputs: Seq[String],
+                        fields: Seq[StructField], id: Option[StructField] = None)(
+      open: () => Row => Iterator[Seq[Any]]): DataFrame = {
+    val inIdx = inputs.map(df.schema.fieldIndex)
+    val idIdx = id.map(f => df.schema.fieldIndex(f.name))
+    val schema = StructType(id.fold(df.schema.fields.toSeq)(Seq(_)) ++ fields)
+    df.sparkSession.createDataFrame(df.rdd.mapPartitions { it =>
+      val step = open()
+      it.flatMap { r =>
+        val head = idIdx.fold(r.toSeq)(i => Seq(r.get(i)))
+        step(Row.fromSeq(inIdx.map(r.get))).map(v => Row.fromSeq(head ++ v))
       }
-    }
-    df.sparkSession.createDataFrame(rows, schema)
+    }, schema)
   }
 
-  /** Feature-extract: fixed-size byte-value histogram per blob (stands in for an
-    * embedding model / mel spectrogram). Output adds `features: array<double>`.
+  /** [[codecLoop]] over one media column, keyed by `idCol` when given, with
+    * the tier's null-blob rule: a SQL NULL blob is handed to no codec and
+    * counts as a blob the codec gives nothing for. With `fill` (the
+    * decoders and [[featurize]]) such a row keeps one tuple of null
+    * appended columns; without it ([[frameSample]] and the near-dup
+    * tiers) the row emits nothing, as a blob that does not fingerprint
+    * drops out of pairing.
     */
-  def featurize(df: DataFrame, mediaCol: String, bins: Int = 16): DataFrame = {
-    val schema = StructType(df.schema.fields :+
-      StructField("features", ArrayType(DoubleType, containsNull = false)))
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val rows = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val bytes = r.getAs[Array[Byte]](mediaIdx)
-        val hist = new Array[Double](bins)
-        bytes.foreach(b => hist(((b & 0xff) * bins) / 256) += 1.0)
-        val n = math.max(bytes.length, 1).toDouble
-        Row.fromSeq(r.toSeq :+ hist.map(_ / n).toSeq)
-      }
+  private def blobLoop(df: DataFrame, mediaCol: String, fields: Seq[StructField],
+                       idCol: Option[String] = None, fill: Boolean = false)(
+      codec: Array[Byte] => Iterator[Seq[Any]]): DataFrame = {
+    val nulls = Seq.fill(fields.length)(null)
+    val id = idCol.map { c => val f = df.schema(c); StructField(c, f.dataType, f.nullable) }
+    codecLoop(df, Seq(mediaCol), fields, id) { () => in =>
+      val blob = in.getAs[Array[Byte]](0)
+      val out = if (blob == null) Iterator.empty else codec(blob)
+      if (fill && !out.hasNext) Iterator.single(nulls) else out
     }
-    df.sparkSession.createDataFrame(rows, schema)
   }
+
+  /** A generated media column: one non-null blob per row. */
+  private def blobField(mediaCol: String): Seq[StructField] =
+    Seq(StructField(mediaCol, BinaryType, nullable = false))
+
+  /** Decode metadata for each media blob in the [[codecLoop]]. The codec is
+    * injected ([[MediaCodec]] is `Serializable`, instantiated once per partition
+    * iterator closure, so a real codec can hold native handles per executor).
+    * A null blob gets null `meta`.
+    */
+  def decodeMeta(df: DataFrame, mediaCol: String,
+                 codec: MediaCodec = FakeCodec): DataFrame =
+    blobLoop(df, mediaCol, Seq(StructField("meta", mediaMetaSchema)), fill = true) { b =>
+      val m = codec.decode(b)
+      Iterator.single(Seq(Row(m.format, m.width, m.height, m.nBytes)))
+    }
+
+  /** Feature-extract: fixed-size byte-value histogram per blob (stands in for an
+    * embedding model / mel spectrogram). Output adds `features: array<double>`,
+    * null for a null blob.
+    */
+  def featurize(df: DataFrame, mediaCol: String, bins: Int = 16): DataFrame =
+    blobLoop(df, mediaCol,
+        Seq(StructField("features", ArrayType(DoubleType, containsNull = false))),
+        fill = true) { bytes =>
+      val hist = new Array[Double](bins)
+      bytes.foreach(b => hist(((b & 0xff) * bins) / 256) += 1.0)
+      val n = math.max(bytes.length, 1).toDouble
+      Iterator.single(Seq(hist.map(_ / n).toSeq))
+    }
 
   /** Image near-dup pairs by perceptual hash: dHash every decodable blob
     * ([[ImageIoCodec.dHash]], per-partition batch decode), then find pairs
@@ -97,22 +138,8 @@ object Multimodal {
     * id_b. The simhash-banding discipline applied to the pixel domain.
     */
   def perceptualDupPairs(df: DataFrame, idCol: String, mediaCol: String,
-                         maxHamming: Int = 3): DataFrame = {
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val idField = df.schema(idCol)
-    val hashSchema = StructType(Seq(
-      StructField(idCol, idField.dataType, idField.nullable),
-      StructField("dhash", LongType, nullable = false)))
-    val hashed = df.sparkSession.createDataFrame(
-      df.rdd.mapPartitions { it =>
-        it.flatMap { r =>
-          ImageIoCodec.dHash(r.getAs[Array[Byte]](mediaIdx))
-            .map(hh => Row(r.get(idIdx), hh))
-        }
-      }, hashSchema)
-    bandedHammingPairs(hashed, idCol, "dhash", maxHamming)
-  }
+                         maxHamming: Int = 3): DataFrame =
+    hashPairs(df, idCol, mediaCol, "dhash", maxHamming)(ImageIoCodec.dHash(_))
 
   /** The pigeonhole band layout of a 64-bit fingerprint, as an
     * `array<struct<band: int, bits: long>>` to explode: `maxHamming + 1`
@@ -136,14 +163,18 @@ object Multimodal {
     }: _*)
   }
 
-  /** Pigeonhole-banded Hamming join over a 64-bit hash column — the shared
-    * candidate-generation core of [[perceptualDupPairs]] (image dHash) and
-    * [[audioDupPairs]] (audio envelope fingerprint): [[hammingBands]], so
-    * any pair within the bound collides on at least one band (exact
+  /** The whole-signal near-dup tier, one body for image, audio and video:
+    * `hash` gives each blob's 64-bit fingerprint (blobs it gives none drop
+    * out), then a pigeonhole-banded Hamming join over it: [[hammingBands]],
+    * so any pair within the bound collides on at least one band (exact
     * recall), candidates verified with `bit_count(xor)`. Never corpus².
     */
-  private def bandedHammingPairs(hashed: DataFrame, idCol: String,
-                                 hashCol: String, maxHamming: Int): DataFrame = {
+  private def hashPairs(df: DataFrame, idCol: String, mediaCol: String,
+                        hashCol: String, maxHamming: Int)(
+      hash: Array[Byte] => Option[Long]): DataFrame = {
+    val hashed = blobLoop(df, mediaCol,
+      Seq(StructField(hashCol, LongType, nullable = false)), Some(idCol))(
+      hash(_).map(Seq(_)).iterator)
     val bands = explode(hammingBands(col(hashCol), maxHamming))
     val banded = hashed.select(col(idCol), col(hashCol), bands.as("__bb"))
       .select(col(idCol), col(hashCol),
@@ -193,24 +224,20 @@ object Multimodal {
     */
   def md5Samples(df: DataFrame, idCol: String, n: Int,
                  gen: (Md5Hex32, Long, Int) => Int,
-                 samplesCol: String = "samples"): DataFrame = {
-    val spark = df.sparkSession
-    val schema = StructType(Seq(
-      StructField(idCol, LongType, nullable = false),
-      StructField(samplesCol, ArrayType(IntegerType, containsNull = false),
-        nullable = false)))
-    val rows = df.select(col(idCol).cast("long")).rdd.mapPartitions { it =>
+                 samplesCol: String = "samples"): DataFrame =
+    codecLoop(df.select(col(idCol).cast("long").as(idCol)), Seq(idCol),
+        Seq(StructField(samplesCol, ArrayType(IntegerType, containsNull = false),
+          nullable = false)),
+        Some(StructField(idCol, LongType, nullable = false))) { () =>
       val h = new Md5Hex32
-      it.map { r =>
-        val id = r.getLong(0)
+      in => {
+        val id = in.getLong(0)
         val arr = new Array[Int](n)
         var w = 0
         while (w < n) { arr(w) = gen(h, id, w); w += 1 }
-        Row(id, arr.toSeq)
+        Iterator.single(Seq(arr.toSeq))
       }
     }
-    spark.createDataFrame(rows, schema)
-  }
 
   /** Synthesize a mono 16-bit PCM WAV blob per row from an
     * `array<int>` sample column ([[WavCodec.encodePcm]]) — the audio
@@ -219,41 +246,19 @@ object Multimodal {
     * engine still exercises the real encode → parse → fingerprint path.
     */
   def synthPcmWav(df: DataFrame, samplesCol: String, sampleRate: Int,
-                  mediaCol: String = "media"): DataFrame = {
-    val schema = StructType(df.schema.fields :+
-      StructField(mediaCol, BinaryType, nullable = false))
-    val sIdx = df.schema.fieldIndex(samplesCol)
-    val rows = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val samples = r.getSeq[Int](sIdx).toArray
-        Row.fromSeq(r.toSeq :+ WavCodec.encodePcm(sampleRate, samples))
-      }
+                  mediaCol: String = "media"): DataFrame =
+    codecLoop(df, Seq(samplesCol), blobField(mediaCol)) { () => in =>
+      Iterator.single(Seq(WavCodec.encodePcm(sampleRate, in.getSeq[Int](0).toArray)))
     }
-    df.sparkSession.createDataFrame(rows, schema)
-  }
 
   /** Audio near-dup pairs: [[WavCodec.audioFingerprint]]'s 64-bit
     * loudness-envelope sign-of-delta hash per blob, then the same
     * pigeonhole-banded Hamming join as the image path. Blobs that don't
-    * fingerprint (non-PCM, < 65 frames) drop out of pairing.
+    * fingerprint (non-PCM, < 65 frames, null) drop out of pairing.
     */
   def audioDupPairs(df: DataFrame, idCol: String, mediaCol: String,
-                    maxHamming: Int = 3): DataFrame = {
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val idField = df.schema(idCol)
-    val hashSchema = StructType(Seq(
-      StructField(idCol, idField.dataType, idField.nullable),
-      StructField("afp", LongType, nullable = false)))
-    val hashed = df.sparkSession.createDataFrame(
-      df.rdd.mapPartitions { it =>
-        it.flatMap { r =>
-          WavCodec.audioFingerprint(r.getAs[Array[Byte]](mediaIdx))
-            .map(hh => Row(r.get(idIdx), hh))
-        }
-      }, hashSchema)
-    bandedHammingPairs(hashed, idCol, "afp", maxHamming)
-  }
+                    maxHamming: Int = 3): DataFrame =
+    hashPairs(df, idCol, mediaCol, "afp", maxHamming)(WavCodec.audioFingerprint)
 
   val audioMetaSchema: StructType = StructType(Seq(
     StructField("format", StringType, nullable = true),
@@ -271,44 +276,23 @@ object Multimodal {
     * parse-back is oracle-checkable against the parameter columns.
     */
   def synthWavMedia(df: DataFrame, srCol: String, chCol: String,
-                    nFramesCol: String, mediaCol: String = "media"): DataFrame = {
-    val schema = StructType(df.schema.fields :+
-      StructField(mediaCol, BinaryType, nullable = false))
-    val srIdx = df.schema.fieldIndex(srCol)
-    val chIdx = df.schema.fieldIndex(chCol)
-    val nfIdx = df.schema.fieldIndex(nFramesCol)
-    val rows = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val wav = WavCodec.encode(r.getInt(srIdx), r.getInt(chIdx),
-          bitsPerSample = 16, nFrames = r.getInt(nfIdx))
-        Row.fromSeq(r.toSeq :+ wav)
-      }
+                    nFramesCol: String, mediaCol: String = "media"): DataFrame =
+    codecLoop(df, Seq(srCol, chCol, nFramesCol), blobField(mediaCol)) { () => in =>
+      Iterator.single(Seq(WavCodec.encode(in.getInt(0), in.getInt(1),
+        bitsPerSample = 16, nFrames = in.getInt(2))))
     }
-    df.sparkSession.createDataFrame(rows, schema)
-  }
 
   /** Parse audio metadata from each media blob with the REAL RIFF/WAVE header
-    * parser ([[WavCodec.decode]]) — same per-partition batch-loop shape as
-    * [[decodeMeta]]; non-WAV blobs yield null metadata so a mixed-media scan
-    * never throws. Header-only: the data payload is never touched, the right
-    * cost for a 100 TB metadata sweep.
+    * parser ([[WavCodec.decode]]) in the [[codecLoop]]; non-WAV and null
+    * blobs yield null metadata so a mixed-media scan never throws.
+    * Header-only: the data payload is never touched, the right cost for a
+    * 100 TB metadata sweep.
     */
-  def decodeAudioMeta(df: DataFrame, mediaCol: String): DataFrame = {
-    val schema = StructType(df.schema.fields ++ audioMetaSchema.fields)
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val rows = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val parsed = WavCodec.decode(r.getAs[Array[Byte]](mediaIdx))
-        val meta: Seq[Any] = parsed match {
-          case Some(a) => Seq(a.format, a.sampleRate.toLong, a.channels.toLong,
-            a.bitsPerSample.toLong, a.nFrames, a.durationMs, a.nBytes)
-          case None => Seq(null, null, null, null, null, null, null)
-        }
-        Row.fromSeq(r.toSeq ++ meta)
-      }
-    }
-    df.sparkSession.createDataFrame(rows, schema)
-  }
+  def decodeAudioMeta(df: DataFrame, mediaCol: String): DataFrame =
+    blobLoop(df, mediaCol, audioMetaSchema.fields.toSeq, fill = true)(
+      WavCodec.decode(_).map(a => Seq(a.format, a.sampleRate.toLong,
+        a.channels.toLong, a.bitsPerSample.toLong, a.nFrames, a.durationMs,
+        a.nBytes)).iterator)
 
   private val videoMetaSchema = StructType(Seq(
     StructField("format", StringType, nullable = true),
@@ -327,23 +311,12 @@ object Multimodal {
     */
   def synthMp4Media(df: DataFrame, brandCol: String, nTracksCol: String,
                     timescaleCol: String, durUnitsCol: String,
-                    payloadCol: String, mediaCol: String = "media"): DataFrame = {
-    val schema = StructType(df.schema.fields :+
-      StructField(mediaCol, BinaryType, nullable = false))
-    val bIdx = df.schema.fieldIndex(brandCol)
-    val tIdx = df.schema.fieldIndex(nTracksCol)
-    val sIdx = df.schema.fieldIndex(timescaleCol)
-    val dIdx = df.schema.fieldIndex(durUnitsCol)
-    val pIdx = df.schema.fieldIndex(payloadCol)
-    val rows = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val mp4 = Mp4Codec.encode(r.getString(bIdx), r.getInt(tIdx),
-          r.getLong(sIdx), r.getLong(dIdx), r.getInt(pIdx))
-        Row.fromSeq(r.toSeq :+ mp4)
-      }
+                    payloadCol: String, mediaCol: String = "media"): DataFrame =
+    codecLoop(df, Seq(brandCol, nTracksCol, timescaleCol, durUnitsCol, payloadCol),
+        blobField(mediaCol)) { () => in =>
+      Iterator.single(Seq(Mp4Codec.encode(in.getString(0), in.getInt(1),
+        in.getLong(2), in.getLong(3), in.getInt(4))))
     }
-    df.sparkSession.createDataFrame(rows, schema)
-  }
 
   /** Synthesize an MP4 blob per row whose mdat carries the given
     * `array<int>` sample bytes ([[Mp4Codec.encodeWithMdat]]) — the video
@@ -354,19 +327,12 @@ object Multimodal {
   def synthMp4Samples(df: DataFrame, samplesCol: String,
                       brand: String = "isom", nTracks: Int = 1,
                       timescale: Long = 1000L, durUnits: Long = 2000L,
-                      mediaCol: String = "media"): DataFrame = {
-    val schema = StructType(df.schema.fields :+
-      StructField(mediaCol, BinaryType, nullable = false))
-    val sIdx = df.schema.fieldIndex(samplesCol)
-    val rows = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val mdat = r.getSeq[Int](sIdx).map(v => (v & 0xff).toByte).toArray
-        Row.fromSeq(r.toSeq :+ Mp4Codec.encodeWithMdat(brand, nTracks,
-          timescale, durUnits, mdat))
-      }
+                      mediaCol: String = "media"): DataFrame =
+    codecLoop(df, Seq(samplesCol), blobField(mediaCol)) { () => in =>
+      val mdat = in.getSeq[Int](0).map(v => (v & 0xff).toByte).toArray
+      Iterator.single(Seq(Mp4Codec.encodeWithMdat(brand, nTracks, timescale,
+        durUnits, mdat)))
     }
-    df.sparkSession.createDataFrame(rows, schema)
-  }
 
   /** Video near-dup pairs: [[Mp4Codec.videoFingerprint]]'s 64-bit
     * mdat-envelope hash per blob, then the same pigeonhole-banded Hamming
@@ -374,21 +340,55 @@ object Multimodal {
     * short to window) drop out of pairing.
     */
   def videoDupPairs(df: DataFrame, idCol: String, mediaCol: String,
-                    maxHamming: Int = 3): DataFrame = {
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val idField = df.schema(idCol)
-    val hashSchema = StructType(Seq(
-      StructField(idCol, idField.dataType, idField.nullable),
-      StructField("vfp", LongType, nullable = false)))
-    val hashed = df.sparkSession.createDataFrame(
-      df.rdd.mapPartitions { it =>
-        it.flatMap { r =>
-          Mp4Codec.videoFingerprint(r.getAs[Array[Byte]](mediaIdx))
-            .map(hh => Row(r.get(idIdx), hh))
-        }
-      }, hashSchema)
-    bandedHammingPairs(hashed, idCol, "vfp", maxHamming)
+                    maxHamming: Int = 3): DataFrame =
+    hashPairs(df, idCol, mediaCol, "vfp", maxHamming)(Mp4Codec.videoFingerprint)
+
+  /** The envelope kernel of the audio and video tiers. Each modality reads
+    * its blob as one magnitude sequence — first-channel |sample| per frame
+    * ([[WavCodec.audioMagnitudes]]) or the unsigned mdat bytes
+    * ([[Mp4Codec.videoMagnitudes]]) — and every envelope is a sequence of
+    * window means over it: this loop sums a window left to right as
+    * doubles and divides by its length.
+    */
+  private[multimodal] def windowMean(m: Array[Int], from: Int, until: Int): Double = {
+    var s = 0.0
+    var i = from
+    while (i < until) { s += m(i); i += 1 }
+    s / (until - from)
+  }
+
+  /** Means of the full `window`-long windows starting every `hop`
+    * positions, or None when not one window fits; hop = window is the
+    * fixed, non-overlapping grid.
+    */
+  private[multimodal] def windowMeans(m: Array[Int], window: Int,
+                                      hop: Int): Option[Array[Double]] =
+    if (m.length < window) None
+    else Some(Array.tabulate((m.length - window) / hop + 1) { w =>
+      windowMean(m, w * hop, w * hop + window)
+    })
+
+  /** The whole-signal fingerprint: [[signBits]] over the means of 65 equal
+    * windows, or None for fewer than 65 magnitudes.
+    */
+  private[multimodal] def fingerprint65(m: Array[Int]): Option[Long] =
+    if (m.length < 65) None
+    else Some(signBits(Array.tabulate(65) { w =>
+      windowMean(m, (w.toLong * m.length / 65).toInt,
+        ((w + 1).toLong * m.length / 65).toInt)
+    }, 0))
+
+  /** Sign-of-delta fold of the 65 envelope values from `s`: bit b is set
+    * when e(s+b+1) > e(s+b).
+    */
+  private[multimodal] def signBits(e: Array[Double], s: Int): Long = {
+    var fp = 0L
+    var b = 0
+    while (b < 64) {
+      if (e(s + b + 1) > e(s + b)) fp |= 1L << b
+      b += 1
+    }
+    fp
   }
 
   /** Sign-of-delta 64-bit fingerprint of every 65-window shingle of an
@@ -407,15 +407,7 @@ object Multimodal {
   private[multimodal] def envelopeShingles(e: Array[Double],
                                            maxShingles: Int): Seq[(Int, Long)] = {
     val n = math.min(math.max(e.length - 64, 0), maxShingles)
-    (0 until n).map { s =>
-      var fp = 0L
-      var b = 0
-      while (b < 64) {
-        if (e(s + b + 1) > e(s + b)) fp |= 1L << b
-        b += 1
-      }
-      (s, fp)
-    }
+    (0 until n).map(s => (s, signBits(e, s)))
   }
 
   /** Shift-tolerant audio near-dup pairs: fixed-size loudness windows
@@ -428,24 +420,14 @@ object Multimodal {
     * hamming, offset_windows) with the lexicographically minimal
     * (hamming, offset, shingle) witness per pair; offset_windows > 0
     * means id_b's content starts offset_windows windows EARLIER (id_b is
-    * the trimmed copy).
+    * the trimmed copy). The same rows as [[audioDupPairsShiftedOverlap]]
+    * with hopFrames = windowFrames, under the witness name offset_windows.
     */
   def audioDupPairsShifted(df: DataFrame, idCol: String, mediaCol: String,
                            maxHamming: Int = 3, windowFrames: Int = 256,
-                           maxShingles: Int = 256): DataFrame = {
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val shingled = df.sparkSession.createDataFrame(
-      df.rdd.mapPartitions { it =>
-        it.flatMap { r =>
-          WavCodec.audioEnvelopeFixed(r.getAs[Array[Byte]](mediaIdx),
-              windowFrames).toSeq
-            .flatMap(envelopeShingles(_, maxShingles)
-              .map { case (s, fp) => Row(r.get(idIdx), s, fp) })
-        }
-      }, shingleSchema(df.schema(idCol)))
-    bandedShingleHammingPairs(shingled, idCol, maxHamming)
-  }
+                           maxShingles: Int = 256): DataFrame =
+    shingledPairs(df, idCol, mediaCol, maxHamming, maxShingles, "offset_windows")(
+      WavCodec.audioEnvelopeOverlap(_, windowFrames, windowFrames))
 
   /** Shift-tolerant video near-dup pairs — [[audioDupPairsShifted]]'s
     * convention over the mdat byte stream ([[Mp4Codec
@@ -453,20 +435,9 @@ object Multimodal {
     */
   def videoDupPairsShifted(df: DataFrame, idCol: String, mediaCol: String,
                            maxHamming: Int = 3, windowBytes: Int = 256,
-                           maxShingles: Int = 256): DataFrame = {
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val shingled = df.sparkSession.createDataFrame(
-      df.rdd.mapPartitions { it =>
-        it.flatMap { r =>
-          Mp4Codec.videoEnvelopeFixed(r.getAs[Array[Byte]](mediaIdx),
-              windowBytes).toSeq
-            .flatMap(envelopeShingles(_, maxShingles)
-              .map { case (s, fp) => Row(r.get(idIdx), s, fp) })
-        }
-      }, shingleSchema(df.schema(idCol)))
-    bandedShingleHammingPairs(shingled, idCol, maxHamming)
-  }
+                           maxShingles: Int = 256): DataFrame =
+    shingledPairs(df, idCol, mediaCol, maxHamming, maxShingles, "offset_windows")(
+      Mp4Codec.videoEnvelopeOverlap(_, windowBytes, windowBytes))
 
   /** SUB-window shift-tolerant audio near-dup pairs: the
     * [[audioDupPairsShifted]] pipeline over OVERLAPPING envelope windows
@@ -487,20 +458,9 @@ object Multimodal {
                                   mediaCol: String, maxHamming: Int = 3,
                                   windowFrames: Int = 256,
                                   hopFrames: Int = 64,
-                                  maxShingles: Int = 256): DataFrame = {
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val shingled = df.sparkSession.createDataFrame(
-      df.rdd.mapPartitions { it =>
-        it.flatMap { r =>
-          WavCodec.audioEnvelopeOverlap(r.getAs[Array[Byte]](mediaIdx),
-              windowFrames, hopFrames).toSeq
-            .flatMap(envelopeShingles(_, maxShingles)
-              .map { case (s, fp) => Row(r.get(idIdx), s, fp) })
-        }
-      }, shingleSchema(df.schema(idCol)))
-    bandedShingleHammingPairs(shingled, idCol, maxHamming, "offset_hops")
-  }
+                                  maxShingles: Int = 256): DataFrame =
+    shingledPairs(df, idCol, mediaCol, maxHamming, maxShingles, "offset_hops")(
+      WavCodec.audioEnvelopeOverlap(_, windowFrames, hopFrames))
 
   /** SUB-window shift-tolerant video near-dup pairs —
     * [[audioDupPairsShiftedOverlap]]'s convention over the mdat byte
@@ -511,20 +471,9 @@ object Multimodal {
                                   mediaCol: String, maxHamming: Int = 3,
                                   windowBytes: Int = 256,
                                   hopBytes: Int = 64,
-                                  maxShingles: Int = 256): DataFrame = {
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val shingled = df.sparkSession.createDataFrame(
-      df.rdd.mapPartitions { it =>
-        it.flatMap { r =>
-          Mp4Codec.videoEnvelopeOverlap(r.getAs[Array[Byte]](mediaIdx),
-              windowBytes, hopBytes).toSeq
-            .flatMap(envelopeShingles(_, maxShingles)
-              .map { case (s, fp) => Row(r.get(idIdx), s, fp) })
-        }
-      }, shingleSchema(df.schema(idCol)))
-    bandedShingleHammingPairs(shingled, idCol, maxHamming, "offset_hops")
-  }
+                                  maxShingles: Int = 256): DataFrame =
+    shingledPairs(df, idCol, mediaCol, maxHamming, maxShingles, "offset_hops")(
+      Mp4Codec.videoEnvelopeOverlap(_, windowBytes, hopBytes))
 
   /** Content-defined chunking parameters shared by the Scala pipeline and
     * the SQL oracle replays. Cut predicate: position i is a boundary when
@@ -583,29 +532,32 @@ object Multimodal {
     }
   }
 
-  private def cdcSchema(idField: StructField): StructType =
-    StructType(Seq(
-      StructField(idField.name, idField.dataType, idField.nullable),
-      StructField("pos", IntegerType, nullable = false),
-      StructField("len", IntegerType, nullable = false),
-      StructField("fp", LongType, nullable = false)))
-
-  /** Pair reduction over CDC segment rows: equi-join on (fp, len) — an
-    * exact-key join, no banding — with a document-frequency cap dropping
-    * segments shared by more than `maxDf` blobs (boilerplate/silence
-    * guard, the substring-dedup df-cap precedent: a hot segment key
-    * would otherwise fan out quadratically). A pair reports when it
-    * shares at least `minShared` DISTINCT segments; the witness is the
-    * minimal (pos_a − pos_b, pos_a) — for a pure trim every shared
-    * segment agrees on pos_a − pos_b, and that common delta IS the trim
-    * in input positions. Segments shorter than `minLen` are excluded
-    * from the match key entirely: a 1-2 value segment carries almost no
-    * content entropy (over a byte alphabet there are only 256 distinct
-    * length-1 segments), so tiny segments collide by chance and would
-    * both fabricate pairs and steal the offset witness from real ones.
+  /** The content-defined near-dup tier, one body for audio and video:
+    * `magnitudes` reads each blob, [[cdcSegments]] chunks it, and the pair
+    * reduction is an equi-join on (fp, len) — an exact-key join, no
+    * banding — with a document-frequency cap dropping segments shared by
+    * more than `maxDf` blobs (boilerplate/silence guard, the
+    * substring-dedup df-cap precedent: a hot segment key would otherwise
+    * fan out quadratically). A pair reports when it shares at least
+    * `minShared` DISTINCT segments; the witness is the minimal (pos_a −
+    * pos_b, pos_a) — for a pure trim every shared segment agrees on pos_a
+    * − pos_b, and that common delta IS the trim in input positions.
+    * Segments shorter than `minLen` are excluded from the match key
+    * entirely: a 1-2 value segment carries almost no content entropy (over
+    * a byte alphabet there are only 256 distinct length-1 segments), so
+    * tiny segments collide by chance and would both fabricate pairs and
+    * steal the offset witness from real ones.
     */
-  private def cdcPairs(segs0: DataFrame, idCol: String, minShared: Int,
-                       maxDf: Int, minLen: Int): DataFrame = {
+  private def cdcPairs(df: DataFrame, idCol: String, mediaCol: String,
+                       minShared: Int, maxDf: Int, minLen: Int)(
+      magnitudes: Array[Byte] => Option[Array[Int]]): DataFrame = {
+    val segs0 = blobLoop(df, mediaCol, Seq(
+        StructField("pos", IntegerType, nullable = false),
+        StructField("len", IntegerType, nullable = false),
+        StructField("fp", LongType, nullable = false)), Some(idCol)) {
+      magnitudes(_).iterator.flatMap(cdcSegments)
+        .map { case (p, l, fp) => Seq[Any](p, l, fp) }
+    }
     // the segment table feeds the df-cap aggregate AND both self-join
     // sides — materialize once or Catalyst re-runs the decode+chunk scan
     // per consumer (the standing multi-consumer localCheckpoint rule)
@@ -644,58 +596,37 @@ object Multimodal {
     */
   def audioDupPairsCdc(df: DataFrame, idCol: String, mediaCol: String,
                        minShared: Int = 2, maxDf: Int = 64,
-                       minLen: Int = 4): DataFrame = {
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val segs = df.sparkSession.createDataFrame(
-      df.rdd.mapPartitions { it =>
-        it.flatMap { r =>
-          WavCodec.audioMagnitudes(r.getAs[Array[Byte]](mediaIdx)).toSeq
-            .flatMap(cdcSegments(_).map { case (p, l, fp) =>
-              Row(r.get(idIdx), p, l, fp)
-            })
-        }
-      }, cdcSchema(df.schema(idCol)))
-    cdcPairs(segs, idCol, minShared, maxDf, minLen)
-  }
+                       minLen: Int = 4): DataFrame =
+    cdcPairs(df, idCol, mediaCol, minShared, maxDf, minLen)(WavCodec.audioMagnitudes)
 
   /** Content-defined video near-dup pairs — [[audioDupPairsCdc]]'s
     * convention over the mdat byte stream (unsigned byte magnitudes).
     */
   def videoDupPairsCdc(df: DataFrame, idCol: String, mediaCol: String,
                        minShared: Int = 2, maxDf: Int = 64,
-                       minLen: Int = 4): DataFrame = {
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val segs = df.sparkSession.createDataFrame(
-      df.rdd.mapPartitions { it =>
-        it.flatMap { r =>
-          Mp4Codec.mdatPayload(r.getAs[Array[Byte]](mediaIdx)).toSeq
-            .flatMap(p => cdcSegments(p.map(b => b & 0xff))
-              .map { case (pos, l, fp) => Row(r.get(idIdx), pos, l, fp) })
-        }
-      }, cdcSchema(df.schema(idCol)))
-    cdcPairs(segs, idCol, minShared, maxDf, minLen)
-  }
+                       minLen: Int = 4): DataFrame =
+    cdcPairs(df, idCol, mediaCol, minShared, maxDf, minLen)(Mp4Codec.videoMagnitudes)
 
-  private def shingleSchema(idField: StructField): StructType =
-    StructType(Seq(
-      StructField(idField.name, idField.dataType, idField.nullable),
-      StructField("s", IntegerType, nullable = false),
-      StructField("fp", LongType, nullable = false)))
-
-  /** The shingled variant of [[bandedHammingPairs]]: candidates are
-    * (blob, shingle) × (blob, shingle) band collisions, verified by exact
-    * bit_count, then reduced per blob pair to the lexicographically
-    * minimal (hamming, offset, shingle) witness. One shuffle on the band
-    * key, one keyed aggregate — the shingle fan-out multiplies ROWS, not
-    * plan stages, and buckets stay sparse for the same reason the
-    * whole-signal path's do (16-bit bands at the default budget).
+  /** The shingled near-dup tier, one body for audio and video and for both
+    * window grids: `envelope` reads each blob's window means, one
+    * fingerprint per 65-window shingle ([[envelopeShingles]]), then
+    * candidates are (blob, shingle) × (blob, shingle) band collisions,
+    * verified by exact bit_count, then reduced per blob pair to the
+    * lexicographically minimal (hamming, offset, shingle) witness, named
+    * `offsetName`. One shuffle on the band key, one keyed aggregate — the
+    * shingle fan-out multiplies ROWS, not plan stages, and buckets stay
+    * sparse for the same reason the whole-signal path's do (16-bit bands
+    * at the default budget).
     */
-  private def bandedShingleHammingPairs(shingled: DataFrame, idCol: String,
-                                        maxHamming: Int,
-                                        offsetName: String = "offset_windows")
-      : DataFrame = {
+  private def shingledPairs(df: DataFrame, idCol: String, mediaCol: String,
+                            maxHamming: Int, maxShingles: Int, offsetName: String)(
+      envelope: Array[Byte] => Option[Array[Double]]): DataFrame = {
+    val shingled = blobLoop(df, mediaCol, Seq(
+        StructField("s", IntegerType, nullable = false),
+        StructField("fp", LongType, nullable = false)), Some(idCol)) {
+      envelope(_).iterator.flatMap(envelopeShingles(_, maxShingles))
+        .map { case (s, fp) => Seq[Any](s, fp) }
+    }
     val bands = explode(hammingBands(col("fp"), maxHamming))
     val banded = shingled
       .select(col(idCol), col("s"), col("fp"), bands.as("__bb"))
@@ -728,49 +659,30 @@ object Multimodal {
   }
 
   /** Parse video metadata from each media blob with the REAL ISO-BMFF box
-    * parser ([[Mp4Codec.decode]]) — same per-partition batch-loop shape as
-    * [[decodeAudioMeta]]; non-MP4 blobs yield null metadata so a mixed-media
-    * scan never throws. Header-only: sample payloads are never decoded.
+    * parser ([[Mp4Codec.decode]]) in the [[codecLoop]]; non-MP4 and null
+    * blobs yield null metadata so a mixed-media scan never throws.
+    * Header-only: sample payloads are never decoded.
     */
-  def decodeVideoMeta(df: DataFrame, mediaCol: String): DataFrame = {
-    val schema = StructType(df.schema.fields ++ videoMetaSchema.fields)
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val rows = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val parsed = Mp4Codec.decode(r.getAs[Array[Byte]](mediaIdx))
-        val meta: Seq[Any] = parsed match {
-          case Some(v) => Seq(v.format, v.majorBrand, v.nTracks.toLong,
-            v.timescale, v.durationUnits, v.durationMs, v.mdatBytes, v.nBytes)
-          case None => Seq(null, null, null, null, null, null, null, null)
-        }
-        Row.fromSeq(r.toSeq ++ meta)
-      }
-    }
-    df.sparkSession.createDataFrame(rows, schema)
-  }
+  def decodeVideoMeta(df: DataFrame, mediaCol: String): DataFrame =
+    blobLoop(df, mediaCol, videoMetaSchema.fields.toSeq, fill = true)(
+      Mp4Codec.decode(_).map(v => Seq(v.format, v.majorBrand, v.nTracks.toLong,
+        v.timescale, v.durationUnits, v.durationMs, v.mdatBytes, v.nBytes)).iterator)
 
   /** Frame-sample a "video" blob: split the payload into `n` evenly spaced fixed-size
     * frames, one output row each — the explode shape a video pipeline needs.
+    * An empty or null blob gives no rows.
     */
   def frameSample(df: DataFrame, mediaCol: String, n: Int,
-                  frameBytes: Int = 32): DataFrame = {
-    val schema = StructType(df.schema.fields ++ Seq(
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("frame", BinaryType, nullable = false)))
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val rows = df.rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](mediaIdx)
-        if (bytes.isEmpty) Iterator.empty
-        else (0 until n).iterator.map { i =>
-          val start = (bytes.length.toLong * i / n).toInt
-          val frame = bytes.slice(start, math.min(start + frameBytes, bytes.length))
-          Row.fromSeq(r.toSeq ++ Seq(i, frame))
-        }
+                  frameBytes: Int = 32): DataFrame =
+    blobLoop(df, mediaCol, Seq(
+        StructField("frame_idx", IntegerType, nullable = false),
+        StructField("frame", BinaryType, nullable = false))) { bytes =>
+      if (bytes.isEmpty) Iterator.empty
+      else (0 until n).iterator.map { i =>
+        val start = (bytes.length.toLong * i / n).toInt
+        Seq(i, bytes.slice(start, math.min(start + frameBytes, bytes.length)))
       }
     }
-    df.sparkSession.createDataFrame(rows, schema)
-  }
 
   private val imageMetaSchema = StructType(Seq(
     StructField("format", StringType, nullable = true),
@@ -791,29 +703,17 @@ object Multimodal {
     */
   def synthImageMedia(df: DataFrame, fmtCol: String, wCol: String,
                       hCol: String, depthCol: String, ctOrNcCol: String,
-                      payloadCol: String, mediaCol: String = "media"): DataFrame = {
-    val schema = StructType(df.schema.fields :+
-      StructField(mediaCol, BinaryType, nullable = false))
-    val fIdx = df.schema.fieldIndex(fmtCol)
-    val wIdx = df.schema.fieldIndex(wCol)
-    val hIdx = df.schema.fieldIndex(hCol)
-    val dIdx = df.schema.fieldIndex(depthCol)
-    val cIdx = df.schema.fieldIndex(ctOrNcCol)
-    val pIdx = df.schema.fieldIndex(payloadCol)
-    val rows = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val img =
-          if (r.getString(fIdx) == "png")
-            ImageHeaderCodec.encodePng(r.getInt(wIdx), r.getInt(hIdx),
-              r.getInt(dIdx), r.getInt(cIdx), r.getInt(pIdx))
-          else
-            ImageHeaderCodec.encodeJpeg(r.getInt(wIdx), r.getInt(hIdx),
-              r.getInt(cIdx), r.getInt(pIdx))
-        Row.fromSeq(r.toSeq :+ img)
-      }
+                      payloadCol: String, mediaCol: String = "media"): DataFrame =
+    codecLoop(df, Seq(fmtCol, wCol, hCol, depthCol, ctOrNcCol, payloadCol),
+        blobField(mediaCol)) { () => in =>
+      Iterator.single(Seq(
+        if (in.getString(0) == "png")
+          ImageHeaderCodec.encodePng(in.getInt(1), in.getInt(2), in.getInt(3),
+            in.getInt(4), in.getInt(5))
+        else
+          ImageHeaderCodec.encodeJpeg(in.getInt(1), in.getInt(2), in.getInt(4),
+            in.getInt(5))))
     }
-    df.sparkSession.createDataFrame(rows, schema)
-  }
 
   /** Render a REAL decodable grayscale PNG per row from `pixelsCol`
     * (array<int> of length w·h, row-major luma values 0-255) — the
@@ -828,16 +728,13 @@ object Multimodal {
   def synthPixelPng(df: DataFrame, pixelsCol: String, w: Int, h: Int,
                     mediaCol: String = "media"): DataFrame = {
     require(w >= 1 && h >= 1, "need positive dimensions")
-    val schema = StructType(df.schema.fields :+
-      StructField(mediaCol, BinaryType, nullable = false))
-    val pIdx = df.schema.fieldIndex(pixelsCol)
-    val rows = df.rdd.mapPartitions { it =>
+    codecLoop(df, Seq(pixelsCol), blobField(mediaCol)) { () =>
       // memory-backed ImageOutputStreams — otherwise every PNG encode
       // spools through a temp FILE (see the ImageIoCodec note); idempotent,
       // set here because this closure can run before ImageIoCodec loads
       javax.imageio.ImageIO.setUseCache(false)
-      it.map { r =>
-        val pix = r.getSeq[Int](pIdx)
+      in => {
+        val pix = in.getSeq[Int](0)
         require(pix.length == w * h,
           s"pixels length ${pix.length} != $w*$h")
         val img = new java.awt.image.BufferedImage(w, h,
@@ -854,35 +751,22 @@ object Multimodal {
         }
         val bos = new java.io.ByteArrayOutputStream()
         javax.imageio.ImageIO.write(img, "png", bos)
-        Row.fromSeq(r.toSeq :+ bos.toByteArray)
+        Iterator.single(Seq(bos.toByteArray))
       }
     }
-    df.sparkSession.createDataFrame(rows, schema)
   }
 
   /** Parse image metadata from each media blob with the REAL header-only
-    * PNG/JPEG parser ([[ImageHeaderCodec.decode]]) — same per-partition
-    * batch-loop shape as [[decodeAudioMeta]]; blobs that are neither yield
-    * null metadata so a mixed-media scan never throws. This replaces the
-    * `javax.imageio` reader-dispatch path for metadata sweeps: no stream,
-    * no plugin lookup, one pass over the leading bytes.
+    * PNG/JPEG parser ([[ImageHeaderCodec.decode]]) in the [[codecLoop]];
+    * blobs that are neither, and null blobs, yield null metadata so a
+    * mixed-media scan never throws. This replaces the `javax.imageio`
+    * reader-dispatch path for metadata sweeps: no stream, no plugin
+    * lookup, one pass over the leading bytes.
     */
-  def decodeImageMeta(df: DataFrame, mediaCol: String): DataFrame = {
-    val schema = StructType(df.schema.fields ++ imageMetaSchema.fields)
-    val mediaIdx = df.schema.fieldIndex(mediaCol)
-    val rows = df.rdd.mapPartitions { it =>
-      it.map { r =>
-        val meta: Seq[Any] =
-          ImageHeaderCodec.decode(r.getAs[Array[Byte]](mediaIdx)) match {
-            case Some(m) => Seq(m.format, m.width.toLong, m.height.toLong,
-              m.bitDepth.toLong, m.nChannels.toLong, m.nBytes)
-            case None => Seq(null, null, null, null, null, null)
-          }
-        Row.fromSeq(r.toSeq ++ meta)
-      }
-    }
-    df.sparkSession.createDataFrame(rows, schema)
-  }
+  def decodeImageMeta(df: DataFrame, mediaCol: String): DataFrame =
+    blobLoop(df, mediaCol, imageMetaSchema.fields.toSeq, fill = true)(
+      ImageHeaderCodec.decode(_).map(m => Seq(m.format, m.width.toLong,
+        m.height.toLong, m.bitDepth.toLong, m.nChannels.toLong, m.nBytes)).iterator)
 }
 
 final case class MediaMeta(format: String, width: Int, height: Int, nBytes: Long)
@@ -1113,19 +997,10 @@ object WavCodec extends Serializable {
     out
   }
 
-  /** 64-bit perceptual audio fingerprint: split the first channel's frames
-    * into 65 equal windows, take each window's mean |amplitude|, and set
-    * bit w iff window w+1 is strictly louder than window w — the
-    * sign-of-delta convention of the dHash gradient bit, over the loudness
-    * envelope instead of the luma row. Robust to gain-preserving edits
-    * that keep the envelope shape; a localized edit flips only the
-    * neighboring envelope bits, which is what lets a Hamming-banded join
-    * find perturbed re-encodes. None for anything that is not 16-bit PCM
-    * with ≥ 65 frames (too short to carry the envelope).
-    */
   /** (dataOff, blockAlign, nFrames) of a parseable 16-bit PCM WAV — the
-    * shared chunk walk behind [[audioFingerprint]] and
-    * [[audioEnvelopeFixed]]. None for anything that isn't 16-bit PCM.
+    * one chunk walk behind [[audioMagnitudes]]. None for anything that
+    * isn't 16-bit PCM, including a frame narrower than one 16-bit sample
+    * (blockAlign < 2), whose last sample would read past the data chunk.
     */
   private def pcm16Info(bytes: Array[Byte]): Option[(Int, Int, Int)] = {
     if (bytes.length < 44 || tag(bytes, 0) != "RIFF" || tag(bytes, 8) != "WAVE")
@@ -1144,9 +1019,22 @@ object WavCodec extends Serializable {
       } else if (id == "data") { dataOff = off + 8; dataSize = size }
       off += 8 + size.toInt + (size.toInt & 1)
     }
-    if (channels <= 0 || bits != 16 || blockAlign <= 0 || dataOff < 0) None
+    if (channels <= 0 || bits != 16 || blockAlign < 2 || dataOff < 0) None
     else Some((dataOff, blockAlign, (dataSize / blockAlign).toInt))
   }
+
+  /** First-channel |sample| per frame of a 16-bit PCM WAV — the audio
+    * magnitude sequence of the envelope kernel ([[Multimodal.windowMeans]],
+    * [[Multimodal.fingerprint65]]) and of [[Multimodal.cdcSegments]]; None
+    * for anything that isn't 16-bit PCM.
+    */
+  def audioMagnitudes(bytes: Array[Byte]): Option[Array[Int]] =
+    pcm16Info(bytes).map { case (dataOff, blockAlign, n) =>
+      Array.tabulate(n) { f =>
+        val o = dataOff + f * blockAlign
+        math.abs(((bytes(o) & 0xff) | (bytes(o + 1) << 8)).toShort.toInt)
+      }
+    }
 
   /** First-channel mean-|sample| per FIXED-SIZE window of `windowFrames`
     * frames, full windows only (the tail partial window is dropped).
@@ -1159,22 +1047,7 @@ object WavCodec extends Serializable {
   def audioEnvelopeFixed(bytes: Array[Byte],
                          windowFrames: Int): Option[Array[Double]] = {
     require(windowFrames >= 1, s"windowFrames must be >= 1, got $windowFrames")
-    pcm16Info(bytes).flatMap { case (dataOff, blockAlign, n) =>
-      val nW = n / windowFrames
-      if (nW < 1) None
-      else Some(Array.tabulate(nW) { w =>
-        var s = 0.0
-        var f = w * windowFrames
-        val end = f + windowFrames
-        while (f < end) {
-          val o = dataOff + f * blockAlign
-          val v = ((bytes(o) & 0xff) | (bytes(o + 1) << 8)).toShort
-          s += math.abs(v.toDouble)
-          f += 1
-        }
-        s / windowFrames
-      })
-    }
+    audioMagnitudes(bytes).flatMap(Multimodal.windowMeans(_, windowFrames, windowFrames))
   }
 
   /** [[audioEnvelopeFixed]] with OVERLAPPING windows: window w covers
@@ -1192,64 +1065,21 @@ object WavCodec extends Serializable {
     require(windowFrames >= 1, s"windowFrames must be >= 1, got $windowFrames")
     require(hopFrames >= 1 && hopFrames <= windowFrames,
       s"need 1 <= hopFrames <= windowFrames, got $hopFrames")
-    pcm16Info(bytes).flatMap { case (dataOff, blockAlign, n) =>
-      if (n < windowFrames) None
-      else Some(Array.tabulate((n - windowFrames) / hopFrames + 1) { w =>
-        var s = 0.0
-        var f = w * hopFrames
-        val end = f + windowFrames
-        while (f < end) {
-          val o = dataOff + f * blockAlign
-          val v = ((bytes(o) & 0xff) | (bytes(o + 1) << 8)).toShort
-          s += math.abs(v.toDouble)
-          f += 1
-        }
-        s / windowFrames
-      })
-    }
+    audioMagnitudes(bytes).flatMap(Multimodal.windowMeans(_, windowFrames, hopFrames))
   }
 
-  /** First-channel |sample| per frame of a 16-bit PCM WAV — the
-    * unwindowed magnitude sequence [[Multimodal.cdcSegments]] chunks;
-    * None for anything that isn't 16-bit PCM.
+  /** 64-bit perceptual audio fingerprint: split the first channel's frames
+    * into 65 equal windows, take each window's mean |amplitude|, and set
+    * bit w iff window w+1 is strictly louder than window w — the
+    * sign-of-delta convention of the dHash gradient bit, over the loudness
+    * envelope instead of the luma row. Robust to gain-preserving edits
+    * that keep the envelope shape; a localized edit flips only the
+    * neighboring envelope bits, which is what lets a Hamming-banded join
+    * find perturbed re-encodes. None for anything that is not 16-bit PCM
+    * with ≥ 65 frames (too short to carry the envelope).
     */
-  def audioMagnitudes(bytes: Array[Byte]): Option[Array[Int]] =
-    pcm16Info(bytes).map { case (dataOff, blockAlign, n) =>
-      Array.tabulate(n) { f =>
-        val o = dataOff + f * blockAlign
-        math.abs(((bytes(o) & 0xff) | (bytes(o + 1) << 8)).toShort.toInt)
-      }
-    }
-
-  def audioFingerprint(bytes: Array[Byte]): Option[Long] = {
-    val info = pcm16Info(bytes)
-    if (info.isEmpty) return None
-    val (dataOff, blockAlign, n) = info.get
-    if (n < 65) return None
-    val energy = new Array[Double](65)
-    var w = 0
-    while (w < 65) {
-      val lo = (w.toLong * n / 65).toInt
-      val hi = ((w + 1).toLong * n / 65).toInt
-      var s = 0.0
-      var f = lo
-      while (f < hi) {
-        val o = dataOff + f * blockAlign
-        val v = ((bytes(o) & 0xff) | (bytes(o + 1) << 8)).toShort
-        s += math.abs(v.toDouble)
-        f += 1
-      }
-      energy(w) = s / (hi - lo)
-      w += 1
-    }
-    var fp = 0L
-    var b = 0
-    while (b < 64) {
-      if (energy(b + 1) > energy(b)) fp |= 1L << b
-      b += 1
-    }
-    Some(fp)
-  }
+  def audioFingerprint(bytes: Array[Byte]): Option[Long] =
+    audioMagnitudes(bytes).flatMap(Multimodal.fingerprint65)
 }
 
 final case class VideoMeta(format: String, majorBrand: String, nTracks: Int,
@@ -1426,32 +1256,27 @@ object Mp4Codec extends Serializable {
   }
 
   /** The mdat payload bytes of a well-formed MP4 (first mdat box), or None
-    * — the box walk is the same top-level scan as [[decode]], never a
-    * sample decode.
+    * — the same top-level [[boxAt]] walk as [[decode]], never a sample
+    * decode. The ISO 14496-12 size escapes are boxAt's: a 64-bit largesize
+    * is how real-world >4 GB mdats are written, and a size-0 box runs to
+    * the end of the file.
     */
   def mdatPayload(bytes: Array[Byte]): Option[Array[Byte]] = {
-    if (bytes.length < 8) return None
     var off = 0
-    while (off + 8 <= bytes.length) {
-      val size32 = be32(bytes, off)
-      val name = tag(bytes, off + 4)
-      // ISO 14496-12 §4.2 size escapes: size==1 → a 64-bit largesize
-      // follows the type (how real-world >4 GB mdats are written, so
-      // skipping it would drop exactly the large files on a real corpus);
-      // size==0 → the box extends to end of file (legal for a last box).
-      val (size, hdr) =
-        if (size32 == 1L) {
-          if (off + 16 > bytes.length) return None
-          (be64(bytes, off + 8), 16)
-        } else if (size32 == 0L) ((bytes.length - off).toLong, 8)
-        else (size32, 8)
-      if (size < hdr || off + size > bytes.length) return None
-      if (name == "mdat")
-        return Some(bytes.slice(off + hdr, (off + size).toInt))
-      off += size.toInt
+    while (off < bytes.length) boxAt(bytes, off, bytes.length) match {
+      case Some(("mdat", ps, pe, _)) => return Some(bytes.slice(ps, pe))
+      case Some((_, _, _, end)) => off = end
+      case None => return None
     }
     None
   }
+
+  /** The unsigned mdat bytes — the video magnitude sequence of the
+    * envelope kernel ([[Multimodal.windowMeans]],
+    * [[Multimodal.fingerprint65]]) and of [[Multimodal.cdcSegments]].
+    */
+  private[multimodal] def videoMagnitudes(bytes: Array[Byte]): Option[Array[Int]] =
+    mdatPayload(bytes).map(_.map(_ & 0xff))
 
   /** Mean unsigned mdat byte per FIXED-SIZE window of `windowBytes`, full
     * windows only — the video counterpart of [[WavCodec
@@ -1461,17 +1286,7 @@ object Mp4Codec extends Serializable {
   def videoEnvelopeFixed(bytes: Array[Byte],
                          windowBytes: Int): Option[Array[Double]] = {
     require(windowBytes >= 1, s"windowBytes must be >= 1, got $windowBytes")
-    mdatPayload(bytes).flatMap { p =>
-      val nW = p.length / windowBytes
-      if (nW < 1) None
-      else Some(Array.tabulate(nW) { w =>
-        var s = 0.0
-        var i = w * windowBytes
-        val end = i + windowBytes
-        while (i < end) { s += (p(i) & 0xff); i += 1 }
-        s / windowBytes
-      })
-    }
+    videoMagnitudes(bytes).flatMap(Multimodal.windowMeans(_, windowBytes, windowBytes))
   }
 
   /** [[videoEnvelopeFixed]] with OVERLAPPING windows — the video
@@ -1484,16 +1299,7 @@ object Mp4Codec extends Serializable {
     require(windowBytes >= 1, s"windowBytes must be >= 1, got $windowBytes")
     require(hopBytes >= 1 && hopBytes <= windowBytes,
       s"need 1 <= hopBytes <= windowBytes, got $hopBytes")
-    mdatPayload(bytes).flatMap { p =>
-      if (p.length < windowBytes) None
-      else Some(Array.tabulate((p.length - windowBytes) / hopBytes + 1) { w =>
-        var s = 0.0
-        var i = w * hopBytes
-        val end = i + windowBytes
-        while (i < end) { s += (p(i) & 0xff); i += 1 }
-        s / windowBytes
-      })
-    }
+    videoMagnitudes(bytes).flatMap(Multimodal.windowMeans(_, windowBytes, hopBytes))
   }
 
   /** 64-bit perceptual video fingerprint — the [[WavCodec
@@ -1506,26 +1312,7 @@ object Mp4Codec extends Serializable {
     * bytes.
     */
   def videoFingerprint(bytes: Array[Byte]): Option[Long] =
-    mdatPayload(bytes).filter(_.length >= 65).map { p =>
-      val energy = new Array[Double](65)
-      var w = 0
-      while (w < 65) {
-        val lo = (w.toLong * p.length / 65).toInt
-        val hi = ((w + 1).toLong * p.length / 65).toInt
-        var s = 0.0
-        var i = lo
-        while (i < hi) { s += (p(i) & 0xff); i += 1 }
-        energy(w) = s / (hi - lo)
-        w += 1
-      }
-      var fp = 0L
-      var b = 0
-      while (b < 64) {
-        if (energy(b + 1) > energy(b)) fp |= 1L << b
-        b += 1
-      }
-      fp
-    }
+    videoMagnitudes(bytes).flatMap(Multimodal.fingerprint65)
 }
 
 /** Deterministic stand-in codec: derives metadata from the bytes alone. Kept as
